@@ -325,16 +325,10 @@ def traced_run(ctx: Context, wl, e2e: dict, out_dir: str,
         traced_job_s = sp.seconds
         group = "job"
     lay.spark_accounting(group)
-    # untraced, traced, untraced: the later of two jobs in a session tends to
-    # be the faster, so the traced job is compared with both neighbours
-    if stream:
-        traced_last = wl.last  # the layers below read the traced replay
-        after = wl.timed(seconds)
-        wl.last = traced_last
-    else:
-        after = wl.timed(0, min_runs=1, max_runs=1)
+    # compared with the untraced job just before it; the later of two jobs in
+    # a session tends to be the faster, so this reads low rather than high
     m["trace.job_s"] = traced_job_s
-    m["trace.overhead_s"] = traced_job_s - (e2e["job_s"] + after["job_s"]) / 2
+    m["trace.overhead_s"] = traced_job_s - e2e["job_s"]
 
     with lay.tracer.span("layers"):
         lay.kernel()
