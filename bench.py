@@ -383,7 +383,8 @@ def _compact_line(result: dict, budget: int = 1900) -> str:
     progressively (2dp -> 1dp), then keep only the SLOWEST timings that fit
     (the informative tail — the full map still lives on the detail line and
     in query_history.jsonl), recorded with a ``_dropped`` count so a partial
-    map can never be mistaken for the whole surface."""
+    map can never be mistaken for the whole surface.  Raises ValueError when
+    the fixed fields alone (zero queries) already exceed ``budget``."""
     def render(queries: dict) -> str:
         return json.dumps({
             "metric": result["metric"], "value": result["value"],
@@ -402,6 +403,10 @@ def _compact_line(result: dict, budget: int = 1900) -> str:
             return line
     # keep the slowest rows that fit; binary-search the cutoff count
     ranked = sorted(rounded.items(), key=lambda kv: (-kv[1], kv[0]))
+    floor = len(render({"_dropped": len(ranked)}))
+    if floor > budget:
+        raise ValueError(f"compact bench line needs {floor} bytes with zero "
+                         f"queries, over the {budget}-byte budget")
     lo, hi = 0, len(ranked)  # lo = always fits, hi+1 = never
     while lo < hi:
         mid = (lo + hi + 1) // 2

@@ -69,14 +69,13 @@ def run_stream(spark, input_path: str, out_dir: str, checkpoint: str | None = No
                cfg=None):
     """Build and start the streaming query; returns the StreamingQuery handle."""
     from ocr_engine_spark.config import DEFAULT_CONFIG
-    from ocr_engine_spark.streaming.stream import (
-        extract_stream, read_transcript_stream,
-    )
+    from ocr_engine_spark.operators.extract import extract_transcripts
+    from ocr_engine_spark.streaming.stream import read_transcript_stream
 
     checkpoint = checkpoint or os.path.join(out_dir, "_checkpoint")
     stream = read_transcript_stream(
         spark, input_path, max_files_per_trigger=max_files_per_trigger)
-    extracted = extract_stream(stream, cfg or DEFAULT_CONFIG)
+    extracted = extract_transcripts(stream, cfg or DEFAULT_CONFIG)
     writer = (
         extracted.writeStream
         .foreachBatch(write_batch(out_dir))

@@ -12,8 +12,9 @@ Output span offsets are the ORIGINAL detected offsets (the reference constructs 
 the original detection box, ocr.py:170, while the extended/clamped span only selects the
 crop) — preserved here.
 
-``extract_turn`` is the single-turn oracle; ``extract_frame`` the vectorized batch used by
-the Spark layer (one call per Arrow batch — zero per-row Python at the Spark boundary).
+``extract_turn`` is the single-turn oracle; ``extract_frame_arrow`` the vectorized batch
+used by the Spark layer (one call per Arrow batch — zero per-row Python at the Spark
+boundary); ``extract_frame`` its pandas spelling.
 """
 
 from __future__ import annotations
@@ -429,49 +430,36 @@ def _token_min_conf(collapsed: pd.Series, nbad: np.ndarray) -> np.ndarray:
     return conf_cls
 
 
-def _assemble(k: int, krow, ctext, ks, ke, kinds, confs, raw_len, kline=None,
-              flat=False):
-    """Per-row span lists / extracted text in reading order -> output arrays.
+def _assemble(k: int, krow, ctext, ks, ke, kinds, confs, raw_len, kline=None):
+    """Per-row extracted text in reading order + the flat span columns.
 
     ``kline`` carries each span's line id: consecutive spans of one row on the
     SAME line join with ' ' (the stitch's within-line word merge), lines join
     with newlines.  Omitted => every span is its own line (plain/markdown).
 
-    ``flat=True`` (the Arrow-boundary mode) skips the per-span dict
-    materialization: ``spans_out`` is then the flat column tuple
-    ``(krow, ks, ke, kinds, confs, ctext)`` the caller assembles into one
-    Arrow list<struct> column for the whole batch."""
+    The spans come back as the flat column tuple ``(krow, ks, ke, kinds,
+    confs, ctext)`` the caller assembles into one Arrow list<struct> column
+    for the whole batch."""
     text_parts = [[] for _ in range(k)]
     prev_row = prev_line = None
-    dicts = None if flat else [[] for _ in range(k)]
     for i in range(len(krow)):
         r = krow[i]
         t = ctext[i]
-        if dicts is not None:
-            dicts[r].append({
-                "start": int(ks[i]), "end": int(ke[i]), "kind": kinds[i],
-                "conf": float(confs[i]), "text": t,
-            })
         if kline is not None and r == prev_row and kline[i] == prev_line:
             text_parts[r][-1] += " " + t
         else:
             text_parts[r].append(t)
         if kline is not None:
             prev_row, prev_line = r, kline[i]
-    if flat:
-        spans_out = (krow, ks, ke, kinds, confs, ctext)
-        n_spans = (np.bincount(krow, minlength=k).astype(np.int64)
-                   if len(krow) else np.zeros(k, dtype=np.int64))
-    else:
-        spans_out = dicts
-        n_spans = np.array([len(s) for s in dicts], dtype=np.int64)
+    n_spans = (np.bincount(krow, minlength=k).astype(np.int64)
+               if len(krow) else np.zeros(k, dtype=np.int64))
     extracted = ["\n".join(p) for p in text_parts]
     elen = np.array([len(t) for t in extracted], dtype=np.float64)
     with np.errstate(invalid="ignore", divide="ignore"):
         strip_ratio = np.where(
             (n_spans > 0) & (raw_len > 0),
             1.0 - elen / np.maximum(raw_len, 1), 0.0)
-    return extracted, spans_out, n_spans, strip_ratio
+    return extracted, (krow, ks, ke, kinds, confs, ctext), n_spans, strip_ratio
 
 
 def _recognize_series(seg, cfg: EngineConfig, strip_ctrl: bool = False):
@@ -489,8 +477,7 @@ def _recognize_series(seg, cfg: EngineConfig, strip_ctrl: bool = False):
     return astr.strip(astr.replace_re(a, _R2_WS_RUN, " "))
 
 
-def _fast_outputs(desk, raw_len: np.ndarray, cfg: EngineConfig,
-                  flat=False):
+def _fast_outputs(desk, raw_len: np.ndarray, cfg: EngineConfig):
     """Closed-form PLAIN outputs for fast rows (positional index 0..k-1).
 
     Returns (extracted, spans, n_spans, strip_ratio) as aligned arrays/lists.
@@ -522,8 +509,7 @@ def _fast_outputs(desk, raw_len: np.ndarray, cfg: EngineConfig,
               if len(final) else np.array([], dtype=bool))
     kinds = np.where(is_num, "num", "text")
     return _assemble(k, krow, astr.npy(final), abs_s[keep][nonblank],
-                     abs_e[keep][nonblank], kinds, conf_cls, raw_len,
-                     flat=flat)
+                     abs_e[keep][nonblank], kinds, conf_cls, raw_len)
 
 
 # detect's own fence/lead patterns (the lead's capture group is irrelevant to
@@ -533,7 +519,7 @@ _MD_LEAD_STRIP = _MD_LEAD
 
 
 def _md_outputs(desk, raw_len: np.ndarray, cfg: EngineConfig,
-                forced=None, flat=False):
+                forced=None):
     """Closed-form MARKDOWN outputs (detect.parse_markdown + recognition):
     fence lines toggle skipping (parity of fences before the line), leading
     heading/list markers are excluded from spans, recognition drops inline
@@ -604,8 +590,7 @@ def _md_outputs(desk, raw_len: np.ndarray, cfg: EngineConfig,
     ks = abs_s[keep][nonblank]
     ke = abs_e[keep][nonblank]
     extracted, spans_out, n_spans, strip_ratio = _assemble(
-        k, krow, astr.npy(final), ks, ke, kinds, conf_cls, raw_len,
-        flat=flat)
+        k, krow, astr.npy(final), ks, ke, kinds, conf_cls, raw_len)
     return extracted, spans_out, n_spans, strip_ratio, plain_wins
 
 
@@ -660,7 +645,7 @@ def _html_runs(text: str):
 
 
 def _html_outputs(desk, raw_len: np.ndarray, cfg: EngineConfig,
-                  forced=None, flat=False):
+                  forced=None):
     """Closed-form HTML outputs + the exact E4 vote.
 
     Returns (extracted, spans, n_spans, strip_ratio, html_wins): rows where the
@@ -766,7 +751,7 @@ def _html_outputs(desk, raw_len: np.ndarray, cfg: EngineConfig,
     kinds = np.where(is_num, "num", "html")
     extracted, spans_out, n_spans, strip_ratio = _assemble(
         k, rrow[fkeep2], astr.npy(final), rs[fkeep2], re_[fkeep2], kinds,
-        conf_cls, raw_len, kline=rline[fkeep2], flat=flat)
+        conf_cls, raw_len, kline=rline[fkeep2])
     return extracted, spans_out, n_spans, strip_ratio, html_wins
 
 
@@ -811,7 +796,7 @@ def _json_spans(text: str):
 
 
 def _json_outputs(desk, raw_len: np.ndarray, cfg: EngineConfig,
-                  forced=None, flat=False):
+                  forced=None):
     """Closed-form JSON outputs + the exact (json vs plain) E4 vote.
 
     Returns (extracted, spans, n_spans, strip_ratio, json_wins): rows that fail
@@ -902,65 +887,83 @@ def _json_outputs(desk, raw_len: np.ndarray, cfg: EngineConfig,
     kinds = np.where(rnum[sub], "num", np.where(is_num_text, "num", "json"))
     extracted, spans_out, n_spans, strip_ratio = _assemble(
         k, rrow[sub], astr.npy(final), rs[sub], re_[sub], kinds,
-        conf_cls, raw_len, kline=rline[sub], flat=flat)
+        conf_cls, raw_len, kline=rline[sub])
     return extracted, spans_out, n_spans, strip_ratio, json_wins
 
 
 def extract_frame(pdf: pd.DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> pd.DataFrame:
-    """Batch kernel: one pandas frame of turns in, one frame of extractions out.
+    """pandas spelling of ``extract_frame_arrow``: one frame of turns in, one
+    frame of extractions out, spans as per-row lists of dicts.  Total on the
+    empty batch (F6).  For goldens, tests and tools; the Spark layer calls
+    ``extract_frame_arrow`` directly.
 
-    Total function on the empty batch (F6).  Called once per Arrow batch from the Spark
-    layer.  Plain-format rows take the vectorized closed form (Arrow compute /
-    numpy across the whole batch); every other row runs the per-turn oracle —
-    outputs are byte-identical either way (golden + equivalence suites).
-    """
-    if len(pdf) == 0:
-        return pd.DataFrame({c: [] for c in OUTPUT_COLUMNS},
-                            columns=OUTPUT_COLUMNS)
-    cols, spans = _extract_frame_impl(pdf, cfg, flat=False)
-    cols["spans"] = spans
-    out = pd.DataFrame(cols, columns=OUTPUT_COLUMNS)
-    out["turn_idx"] = out["turn_idx"].astype("int32")
+    Rows whose text is not valid UTF-8 (lone surrogates from PEP 383
+    surrogateescape decodes) cannot live in an Arrow utf8 array: they cross
+    blanked and are then overwritten with the per-turn oracle on the
+    original text."""
+    import pyarrow as pa
+
+    cols = ["conv_id", "turn_idx", "text"]
+    if "payload_kind" in pdf.columns:
+        cols.append("payload_kind")
+    pdf = pdf[cols].reset_index(drop=True)
+    surr = []
+    try:
+        rb = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+    except UnicodeEncodeError:
+        text = pdf["text"].to_numpy(copy=True)
+        for i, s in enumerate(text):
+            if not isinstance(s, str):  # null cell
+                continue
+            try:
+                s.encode("utf-8")
+            except UnicodeEncodeError:
+                surr.append(i)
+                text[i] = ""
+        rb = pa.RecordBatch.from_pandas(pdf.assign(text=text),
+                                        preserve_index=False)
+    out = extract_frame_arrow(rb, cfg).to_pandas()
+    spans = [s.tolist() for s in out["spans"]]
+    for i in surr:
+        kind = pdf["payload_kind"].iat[i] if "payload_kind" in cols else None
+        r = extract_turn(pdf["text"].iat[i], cfg, kind or None)
+        spans[i] = r["spans"]
+        for c in OUTPUT_COLUMNS[2:]:
+            if c != "spans":
+                out.at[i, c] = r[c]
+    out["spans"] = spans
     return out
 
 
 def extract_frame_arrow(batch, cfg: EngineConfig = DEFAULT_CONFIG):
-    """Arrow-boundary batch kernel: one pa.RecordBatch in, one out (the
-    ``mapInArrow`` path).
+    """The batch kernel: one pa.RecordBatch of turns in, one of extractions
+    out — the ``mapInArrow`` path, one call per Arrow batch with zero per-row
+    Python at the Spark boundary.  Total on the empty batch (F6).
 
-    Same computation as ``extract_frame`` — the two share every stage through
-    ``_extract_frame_impl`` — but the spans column is assembled DIRECTLY as an
-    Arrow list<struct> from the flat per-span arrays: no per-span Python
-    dicts, no pandas object column, and no from_pandas conversion of the
-    nested column inside Spark's serializer.  conv_id/turn_idx pass through
-    zero-copy from the input batch.  Value-equal to extract_frame row for row
-    (tests/test_extract_arrow.py)."""
+    Rows take the vectorized closed form of their format (Arrow compute /
+    numpy across the whole batch); every other row runs the per-turn oracle —
+    outputs are byte-identical either way (golden + equivalence suites).  The
+    spans column is assembled DIRECTLY as an Arrow list<struct> from the flat
+    per-span arrays (no per-span Python dicts, no pandas object column), and
+    conv_id/turn_idx pass through zero-copy from the input batch."""
     import pyarrow as pa
 
-    have = set(batch.schema.names)
-    need = ["conv_id", "turn_idx"] + (
-        ["payload_kind"] if "payload_kind" in have else [])
-    pdf = batch.select(need).to_pandas()
     n = batch.num_rows
-    if n == 0:
-        srows = np.empty(0, dtype=np.int64)
-        flat = (srows,) * 3 + (np.empty(0, dtype=object),
-                               np.empty(0, dtype=np.float64),
-                               np.empty(0, dtype=object))
-        cols = {"extracted_text": [], "n_spans": [], "strip_ratio": [],
-                "fmt": [], "is_blank": [], "angle": [], "page_skew": []}
-    else:
-        # the input column IS the kernel's Arrow array: null-fill is the only
-        # copy; no Arrow -> Python str -> Arrow round-trip of the corpus
-        a_text = batch.column("text")
-        if a_text.null_count:
-            a_text = astr.fill_null(a_text)
-        cols, flat = _extract_frame_impl(pdf, cfg, flat=True, a_raw=a_text)
-    srows, ss, se, sk, sc, stxt = flat
-    counts = (np.bincount(srows, minlength=n) if n
-              else np.zeros(0, dtype=np.int64))
+    # the input column IS the kernel's Arrow array: null-fill is the only
+    # copy; no Arrow -> Python str -> Arrow round-trip of the corpus
+    a_text = batch.column("text")
+    if a_text.null_count:
+        a_text = astr.fill_null(a_text)
+    # S1 payload-kind dispatch: an optional input column declares the payload
+    # kind (json/html/markdown/plain), which then skips content sniffing and
+    # the E4 vote entirely; '' = undeclared, unknown kinds sniff permissively
+    declared = None
+    if "payload_kind" in batch.schema.names:
+        declared = astr.npy(astr.fill_null(batch.column("payload_kind")))
+    cols, (srows, ss, se, sk, sc, stxt) = _extract_frame_impl(
+        a_text, declared, cfg)
     offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(counts, out=offsets[1:])
+    np.cumsum(np.bincount(srows, minlength=n), out=offsets[1:])
     struct = pa.StructArray.from_arrays(
         [pa.array(ss, type=pa.int32()), pa.array(se, type=pa.int32()),
          pa.array(sk, type=pa.string()), pa.array(sc, type=pa.float64()),
@@ -988,49 +991,15 @@ def extract_frame_arrow(batch, cfg: EngineConfig = DEFAULT_CONFIG):
     return pa.RecordBatch.from_arrays(arrs, names=OUTPUT_COLUMNS)
 
 
-def _extract_frame_impl(pdf: pd.DataFrame, cfg: EngineConfig, flat: bool,
-                        a_raw=None):
-    """Shared body of the two batch kernels (len(pdf) > 0).
+def _extract_frame_impl(a_raw, declared, cfg: EngineConfig):
+    """Body of ``extract_frame_arrow``: ``a_raw`` is the null-filled text
+    column, ``declared`` the per-row payload kind ('' = undeclared) or None.
 
-    Returns ``(cols, spans)``: ``cols`` the non-span output columns as
-    aligned arrays; ``spans`` either the per-row list-of-dicts object array
-    (flat=False, the pandas boundary) or the row-sorted flat span tuple
-    ``(rows, start, end, kind, conf, text)`` (flat=True, the Arrow
-    boundary).  ``a_raw`` lets the Arrow boundary hand in the text column
-    as an already-null-filled pa.Array (zero-copy; ``pdf`` then need not
-    carry text at all)."""
-    n = len(pdf)
-    conv = pdf["conv_id"].to_numpy()
-    tidx = pdf["turn_idx"].to_numpy()
-    raw = None
-    surr = None  # rows whose text cannot live in an Arrow utf8 array
-    if a_raw is None:
-        raw = pdf["text"].fillna("").astype(str).reset_index(drop=True)
-        try:
-            a_raw = astr.arr(raw)
-        except UnicodeEncodeError:
-            # lone surrogates (PEP 383 surrogateescape decodes upstream)
-            # are valid Python str but invalid UTF-8: blank those rows in
-            # the Arrow array and pin them to the per-turn oracle, which
-            # handles them exactly like the pre-Arrow pandas kernel did
-            vals = raw.to_numpy()
-            surr = np.zeros(n, dtype=bool)
-            clean = vals.copy()
-            for i, s in enumerate(vals):
-                try:
-                    s.encode("utf-8")
-                except UnicodeEncodeError:
-                    surr[i] = True
-                    clean[i] = ""
-            a_raw = astr.arr(clean)
+    Returns ``(cols, spans)``: ``cols`` the computed output columns as
+    aligned arrays, ``spans`` the row-sorted flat span tuple
+    ``(rows, start, end, kind, conf, text)``."""
+    n = len(a_raw)
     raw_len = astr.length(a_raw)
-    # S1 payload-kind dispatch: an optional input column declares the payload
-    # kind (json/html/markdown/plain), which then skips content sniffing and
-    # the E4 vote entirely; '' = undeclared, unknown kinds sniff permissively
-    if "payload_kind" in pdf.columns:
-        declared = pdf["payload_kind"].fillna("").astype(str).to_numpy()
-    else:
-        declared = None
 
     # closed forms assume zero-margin span prep, that NMS keeps disjoint
     # spans (a pathological negative iou_thr suppresses even non-overlapping
@@ -1052,7 +1021,7 @@ def _extract_frame_impl(pdf: pd.DataFrame, cfg: EngineConfig, flat: bool,
         if ascii_rows.all():
             canon = a_raw
         else:
-            vals = astr.npy(a_raw)  # surrogate rows already blanked
+            vals = astr.npy(a_raw)
             nvals = None
             for i in np.flatnonzero(~ascii_rows):
                 s = vals[i]
@@ -1070,14 +1039,6 @@ def _extract_frame_impl(pdf: pd.DataFrame, cfg: EngineConfig, flat: bool,
         desk, is_blank_v, angle_v = _deskew_columns(canon)
         fast, md_fast, html_fast, json_fast, forced = _route_masks(
             desk, cfg, declared)
-        if surr is not None:
-            # blanked stand-ins must NOT take the (empty) plain closed form
-            ok = ~surr
-            fast &= ok
-            md_fast &= ok
-            html_fast &= ok
-            json_fast &= ok
-            forced &= ok
     else:  # nonzero margins: closed form not proven — everything per-turn
         # four independent arrays: the vec_ok branch mutates these masks in
         # place, so sharing one zeros array here would couple them
@@ -1088,8 +1049,7 @@ def _extract_frame_impl(pdf: pd.DataFrame, cfg: EngineConfig, flat: bool,
         forced = np.zeros(n, dtype=bool)
 
     extracted = np.empty(n, dtype=object)
-    spans = None if flat else np.empty(n, dtype=object)
-    flat_acc = []  # flat mode: (global_rows, start, end, kind, conf, text)
+    flat_acc = []  # per route: (global_rows, start, end, kind, conf, text)
     n_spans = np.zeros(n, dtype=np.int64)
     strip_ratio = np.zeros(n, dtype=np.float64)
     fmt = np.empty(n, dtype=object)
@@ -1097,76 +1057,52 @@ def _extract_frame_impl(pdf: pd.DataFrame, cfg: EngineConfig, flat: bool,
     angle = np.zeros(n, dtype=np.float64)
     page_skew = np.zeros(n, dtype=np.float64)
 
-    def _fill_vectorized(pos, ext, spn, nsp, ratio, fmt_name):
-        extracted[pos] = ext
-        if spn is not None:
-            for j, p in enumerate(pos):
-                spans[p] = spn[j]
-        n_spans[pos] = nsp
-        strip_ratio[pos] = ratio
-        fmt[pos] = fmt_name
-        is_blank[pos] = is_blank_v[pos]
-        angle[pos] = angle_v[pos]
+    def _fill_vectorized(pos, win, ext, spn, nsp, ratio, fmt_name):
+        # one route's outputs, indexed within ``pos``; its spans already carry
+        # only the vote-winner rows ``win``
+        flat_acc.append((pos[spn[0]],) + tuple(spn[1:]))
+        wpos = pos[win]
+        extracted[wpos] = np.asarray(ext, dtype=object)[win]
+        n_spans[wpos] = nsp[win]
+        strip_ratio[wpos] = ratio[win]
+        fmt[wpos] = fmt_name
+        is_blank[wpos] = is_blank_v[wpos]
+        angle[wpos] = angle_v[wpos]
         # page_skew stays 0.0: same-line boxes keep row centers fixed
 
     jpos = np.flatnonzero(json_fast)
     if len(jpos):
-        j_ext, j_spans, j_n, j_ratio, json_wins = _json_outputs(
+        *j_out, json_wins = _json_outputs(
             astr.take(desk, jpos), raw_len[jpos], cfg,
-            forced=None if declared is None else forced[jpos], flat=flat)
-        jwin = jpos[json_wins]
-        if flat:  # flat spans already carry only vote-winner rows
-            flat_acc.append((jpos[j_spans[0]],) + tuple(j_spans[1:]))
-            spn = None
-        else:
-            spn = [j_spans[j] for j in np.flatnonzero(json_wins)]
-        _fill_vectorized(jwin, [j_ext[j] for j in np.flatnonzero(json_wins)],
-                         spn, j_n[json_wins], j_ratio[json_wins], "json")
+            forced=None if declared is None else forced[jpos])
+        _fill_vectorized(jpos, json_wins, *j_out, "json")
         # invalid JSON / plain-win rows reduce exactly to the plain closed form
         json_fast[jpos[~json_wins]] = False
         fast[jpos[~json_wins]] = True
 
     hpos = np.flatnonzero(html_fast)
     if len(hpos):
-        h_ext, h_spans, h_n, h_ratio, html_wins = _html_outputs(
+        *h_out, html_wins = _html_outputs(
             astr.take(desk, hpos), raw_len[hpos], cfg,
-            forced=None if declared is None else forced[hpos], flat=flat)
-        hwin = hpos[html_wins]
-        if flat:
-            flat_acc.append((hpos[h_spans[0]],) + tuple(h_spans[1:]))
-            spn = None
-        else:
-            spn = [h_spans[j] for j in np.flatnonzero(html_wins)]
-        _fill_vectorized(hwin, [h_ext[j] for j in np.flatnonzero(html_wins)],
-                         spn, h_n[html_wins], h_ratio[html_wins], "html")
+            forced=None if declared is None else forced[hpos])
+        _fill_vectorized(hpos, html_wins, *h_out, "html")
         html_fast[hpos[~html_wins]] = False  # vote lost: per-turn oracle path
 
     mpos = np.flatnonzero(md_fast)
     if len(mpos):
-        m_ext, m_spans, m_n, m_ratio, plain_wins = _md_outputs(
+        *m_out, plain_wins = _md_outputs(
             astr.take(desk, mpos), raw_len[mpos], cfg,
-            forced=None if declared is None else forced[mpos], flat=flat)
-        mwin = mpos[~plain_wins]
-        if flat:
-            flat_acc.append((mpos[m_spans[0]],) + tuple(m_spans[1:]))
-            spn = None
-        else:
-            spn = [m_spans[j] for j in np.flatnonzero(~plain_wins)]
-        _fill_vectorized(mwin, [m_ext[j] for j in np.flatnonzero(~plain_wins)],
-                         spn, m_n[~plain_wins], m_ratio[~plain_wins],
-                         "markdown")
+            forced=None if declared is None else forced[mpos])
+        _fill_vectorized(mpos, ~plain_wins, *m_out, "markdown")
         # the E4 vote went to the plain parser on these rows: recompute them
         # through the plain closed form (exactly what detect_spans would keep)
         fast[mpos[plain_wins]] = True
 
     fpos = np.flatnonzero(fast)
     if len(fpos):
-        f_ext, f_spans, f_n, f_ratio = _fast_outputs(
-            astr.take(desk, fpos), raw_len[fpos], cfg, flat=flat)
-        if flat:
-            flat_acc.append((fpos[f_spans[0]],) + tuple(f_spans[1:]))
-            f_spans = None
-        _fill_vectorized(fpos, f_ext, f_spans, f_n, f_ratio, "plain")
+        _fill_vectorized(fpos, np.ones(len(fpos), dtype=bool),
+                         *_fast_outputs(astr.take(desk, fpos), raw_len[fpos],
+                                        cfg), "plain")
 
     fast = fast | md_fast | html_fast | json_fast
 
@@ -1180,31 +1116,26 @@ def _extract_frame_impl(pdf: pd.DataFrame, cfg: EngineConfig, flat: bool,
         dsk = astr.npy(desk)
 
         def _slow(i):  # reuse the vectorized (exact) canonicalize+deskew
-            if surr is not None and surr[i]:
-                return extract_turn(raw.iat[i], cfg, _kind(i))
             return _extract_prepared(dsk[i], bool(is_blank_v[i]),
                                      float(angle_v[i]), int(raw_len[i]), cfg,
                                      _kind(i))
     else:
-        texts = raw.to_numpy() if raw is not None else astr.npy(a_raw)
+        texts = astr.npy(a_raw)
 
         def _slow(i):
             return extract_turn(texts[i], cfg, _kind(i))
 
-    sl = ([], [], [], [], [], []) if flat else None
+    sl = ([], [], [], [], [], [])
     for i in np.flatnonzero(~fast):
         r = _slow(i)
         extracted[i] = r["extracted_text"]
-        if flat:
-            for d in r["spans"]:
-                sl[0].append(i)
-                sl[1].append(d["start"])
-                sl[2].append(d["end"])
-                sl[3].append(d["kind"])
-                sl[4].append(d["conf"])
-                sl[5].append(d["text"])
-        else:
-            spans[i] = r["spans"]
+        for d in r["spans"]:
+            sl[0].append(i)
+            sl[1].append(d["start"])
+            sl[2].append(d["end"])
+            sl[3].append(d["kind"])
+            sl[4].append(d["conf"])
+            sl[5].append(d["text"])
         n_spans[i] = r["n_spans"]
         strip_ratio[i] = r["strip_ratio"]
         fmt[i] = r["fmt"]
@@ -1213,13 +1144,10 @@ def _extract_frame_impl(pdf: pd.DataFrame, cfg: EngineConfig, flat: bool,
         page_skew[i] = r["page_skew"]
 
     cols = {
-        "conv_id": conv, "turn_idx": tidx, "extracted_text": extracted,
-        "n_spans": n_spans, "strip_ratio": strip_ratio,
-        "fmt": fmt, "is_blank": is_blank, "angle": angle,
-        "page_skew": page_skew,
+        "extracted_text": extracted, "n_spans": n_spans,
+        "strip_ratio": strip_ratio, "fmt": fmt, "is_blank": is_blank,
+        "angle": angle, "page_skew": page_skew,
     }
-    if not flat:
-        return cols, spans
     if sl[0]:
         flat_acc.append(tuple(np.asarray(c) for c in sl))
     if flat_acc:

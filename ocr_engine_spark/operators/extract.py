@@ -2,13 +2,13 @@
 
 Design (SURVEY.md §4.2, BASELINE.json north_rule):
 
-- The whole per-turn pipeline is ONE fused Arrow-batched stage (``mapInArrow``, with a
-  value-identical ``mapInPandas`` spelling retained): scan -> repartition -> python eval
-  -> sink.  This mirrors the reference's single batched model call per page
+- The whole per-turn pipeline is ONE fused Arrow-batched stage (``mapInArrow``) for
+  batch, checkpointed, pipeline and streaming runs alike: scan -> repartition -> python
+  eval -> sink.  This mirrors the reference's single batched model call per page
   (/root/reference/src/ocr.py:161-163) — no per-row Python crosses the JVM/Python
-  boundary, and on the Arrow path batches stay RecordBatches in both directions (the
-  spans list<struct> column is built from flat arrays, never per-span dicts); Arrow
-  batch size is bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+  boundary, and batches stay RecordBatches in both directions (the spans list<struct>
+  column is built from flat arrays, never per-span dicts); Arrow batch size is bounded
+  by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 - **Salting for skewed long conversations**: partition key = (conv_id, turn_idx // salt
   block).  Extraction is stateless per turn, so a whale conversation (Zipfian corpus) can
   be split across executors without changing results.  AQE alone cannot split one fused
@@ -20,10 +20,6 @@ Design (SURVEY.md §4.2, BASELINE.json north_rule):
 """
 
 from __future__ import annotations
-
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
@@ -59,27 +55,14 @@ TARGET_PARTITION_BYTES = 64 << 20  # uncompressed text per task
 DEFAULT_SALT_BLOCK = 64  # turns of one conversation kept together per salt bucket
 
 
-def _extract_batches(cfg: EngineConfig):
-    """Executor-side closure: kernel import happens once per Python worker (the lazy
-    warmup analogue, SURVEY.md §4.1) and then serves every Arrow batch."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_engine_spark.kernel.pipeline import extract_frame
-
-        for pdf in batches:
-            out = extract_frame(pdf, cfg)
-            out["n_spans"] = out["n_spans"].astype("int32")
-            yield out
-
-    return fn
-
-
 def _extract_batches_arrow(cfg: EngineConfig, passthrough: tuple[str, ...] = ()):
-    """Arrow-boundary executor closure (``mapInArrow``): the kernel's flat-span
-    variant builds the spans list<struct> column directly — no per-span dicts,
-    no pandas object column, no from_pandas in the serializer.  Passthrough
-    columns are appended ZERO-COPY from the input batch (the kernel emits one
-    output row per input row, in order)."""
+    """Executor-side ``mapInArrow`` closure: the kernel import happens once per
+    Python worker (the lazy warmup analogue, SURVEY.md §4.1) and then serves
+    every Arrow batch.  The kernel builds the spans list<struct> column
+    directly — no per-span dicts, no pandas object column, no from_pandas in
+    the serializer.  Passthrough columns (checkpoint bucket ids, event times,
+    source metadata) are appended ZERO-COPY from the input batch (the kernel
+    emits one output row per input row, in order)."""
 
     def fn(batches):
         import pyarrow as pa
@@ -93,25 +76,6 @@ def _extract_batches_arrow(cfg: EngineConfig, passthrough: tuple[str, ...] = ())
                 out = pa.RecordBatch.from_arrays(
                     arrs, names=list(out.schema.names) + list(passthrough))
             yield out
-
-    return fn
-
-
-def passthrough_wrapper(inner, cols: list[str]):
-    """Wrap a mapInPandas kernel so extra input columns ride along unchanged.
-
-    The kernel emits exactly one output row per input row, in order, so the extra
-    columns map back positionally.  Used for checkpoint bucket ids and for metadata
-    (source, raw sizes) that downstream aggregations need WITHOUT a join back
-    against the input."""
-
-    def fn(batches):
-        for pdf in batches:
-            extras = pdf[cols].reset_index(drop=True)
-            for out in inner(iter([pdf.drop(columns=cols)])):
-                for c in cols:
-                    out[c] = extras[c][: len(out)].to_numpy()
-                yield out
 
     return fn
 
@@ -236,18 +200,16 @@ def extract_transcripts(df: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
                         salt_block: int = DEFAULT_SALT_BLOCK,
                         passthrough: tuple[str, ...] = (),
                         dispatch_tool_json: bool = False,
-                        tool_kind_map: dict[str, str] | None = None,
-                        arrow_boundary: bool = True
+                        tool_kind_map: dict[str, str] | None = None
                         ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) -> extracted table.
 
-    ``arrow_boundary=True`` (default) runs the kernel through ``mapInArrow``:
-    batches stay Arrow RecordBatches across the Python boundary in BOTH
-    directions and the spans column is built directly as list<struct> from
-    flat arrays (kernel/pipeline.extract_frame_arrow) — no per-span dicts, no
-    pandas nested-object conversion in the serializer.  ``False`` keeps the
-    original ``mapInPandas`` spelling; the two are value-identical
-    (tests/test_extract_arrow.py pins frame- and Spark-level equality).
+    The kernel runs through ``mapInArrow``: batches stay Arrow RecordBatches
+    across the Python boundary in BOTH directions and the spans column is
+    built directly as list<struct> from flat arrays
+    (kernel/pipeline.extract_frame_arrow).  Works unchanged on a streaming
+    DataFrame: the default ``num_partitions=None`` adds no exchange, and
+    ``passthrough=("ts",)`` keeps the event time for watermarks.
 
     ``dispatch_tool_json=True`` enables the S1 payload-kind dispatch
     (/root/reference/src/utils.py:179-188 analogue): turns whose ``tool``
@@ -308,13 +270,8 @@ def extract_transcripts(df: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
             + [pruned.schema[c] for c in passthrough])
     else:
         schema = EXTRACTED_SCHEMA
-    if arrow_boundary:
-        return pruned.mapInArrow(
-            _extract_batches_arrow(cfg, tuple(passthrough)), schema=schema)
-    if not passthrough:
-        return pruned.mapInPandas(_extract_batches(cfg), schema=EXTRACTED_SCHEMA)
-    fn = passthrough_wrapper(_extract_batches(cfg), list(passthrough))
-    return pruned.mapInPandas(fn, schema=schema)
+    return pruned.mapInArrow(
+        _extract_batches_arrow(cfg, tuple(passthrough)), schema=schema)
 
 
 def extracted_ordered(extracted: DataFrame) -> DataFrame:

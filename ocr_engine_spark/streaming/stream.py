@@ -1,6 +1,6 @@
 """Structured Streaming wrapper (SURVEY.md §2.9 — thin v1 surface).
 
-The extraction kernel is stateless per turn, so the SAME fused ``mapInPandas`` stage runs
+The extraction kernel is stateless per turn, so the SAME fused ``mapInArrow`` stage runs
 unchanged on a streaming DataFrame; no custom stateful operator is needed.  The metrics
 window is a watermarked tumbling aggregation; late data beyond the watermark drops
 (default semantics).  The reference engine is strictly batch (batch_size=1,
@@ -14,9 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocr_engine_spark.config import DEFAULT_CONFIG, EngineConfig
-from ocr_engine_spark.operators.extract import (
-    EXTRACTED_SCHEMA, _extract_batches, passthrough_wrapper,
-)
+from ocr_engine_spark.operators.extract import extract_transcripts
 
 TRANSCRIPTS_DDL = ("conv_id string, turn_idx int, role string, text string, "
                    "tool string, ts timestamp")
@@ -107,19 +105,11 @@ def read_transcript_stream(spark: SparkSession, path: str,
     )
 
 
-def extract_stream(stream: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Same kernel, streaming plan; keeps ts for downstream watermarks."""
-    pruned = stream.select("conv_id", "turn_idx", "text")
-    return pruned.mapInPandas(_extract_batches(cfg), schema=EXTRACTED_SCHEMA)
-
-
 def metrics_window_stream(stream: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
                           watermark: str = "1 hour",
                           window: str = "10 minutes") -> DataFrame:
     """Watermarked tumbling metrics (turns, spans, strip ratio) over event time."""
-    extracted = stream.select("conv_id", "turn_idx", "text", "ts").mapInPandas(
-        passthrough_wrapper(_extract_batches(cfg), ["ts"]),
-        schema=_schema_with_ts())
+    extracted = extract_transcripts(stream, cfg, passthrough=("ts",))
     return (
         extracted.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("win"))
@@ -129,8 +119,6 @@ def metrics_window_stream(stream: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
             F.avg("strip_ratio").alias("strip_ratio"),
         )
     )
-
-
 
 
 def dedup_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -155,9 +143,7 @@ def session_metrics_stream(stream: DataFrame,
     ``session_window`` — the streaming twin of the batch sessionization in
     operators/relational.q_event_sessions).  Watermarked, so session state
     closes and evicts as event time advances."""
-    extracted = stream.select("conv_id", "turn_idx", "text", "ts").mapInPandas(
-        passthrough_wrapper(_extract_batches(cfg), ["ts"]),
-        schema=_schema_with_ts())
+    extracted = extract_transcripts(stream, cfg, passthrough=("ts",))
     return (
         extracted.withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("session"), "conv_id")
@@ -168,13 +154,6 @@ def session_metrics_stream(stream: DataFrame,
             F.max("turn_idx").alias("last_turn"),
         )
     )
-
-
-def _schema_with_ts():
-    from pyspark.sql.types import StructField, StructType, TimestampType
-
-    return StructType(
-        list(EXTRACTED_SCHEMA.fields) + [StructField("ts", TimestampType())])
 
 
 # per-process synthesized stream sources, keyed (sf_dir, documents mtime) so a
@@ -321,7 +300,7 @@ def q_stream_window_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     The synthesized spread-timestamp corpus replays THROUGH THE REAL
     STREAMING PATH: incremental file source (2 files per trigger, so every
     1-hour window accumulates across micro-batches), the extraction kernel
-    as a streaming ``mapInPandas`` stage, event-time tumbling windows, memory
+    as a streaming ``mapInArrow`` stage, event-time tumbling windows, memory
     sink, ``availableNow`` trigger.
 
     Determinism choices, pinned deliberately:
@@ -414,7 +393,7 @@ def q_stream_progress_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = ensure_stream_progress_source(spark, sf_dir)
     stream = read_transcript_stream(spark, src, max_files_per_trigger=2)
     prog = conversation_progress_stream(
-        extract_stream(stream), timeout_ms=None)
+        extract_transcripts(stream), timeout_ms=None)
     out = _replay_to_memory(
         spark, prog, "update",
         lambda t: t.groupBy("conv_id")

@@ -6,6 +6,8 @@ final line exists so that can never recur)."""
 import json
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 from bench import _compact_line
@@ -63,6 +65,16 @@ def test_compact_line_partial_map_keeps_slowest_first():
     qs = rec["queries"]
     dropped = qs.pop("_dropped", 0)
     assert len(qs) + dropped == 90 and len(qs) > 40
+
+
+def test_compact_line_raises_when_fixed_fields_exceed_budget():
+    # the binary search's lo=0 "always fits" invariant: when the metadata
+    # alone is over budget, fail loudly instead of returning an over-budget
+    # line
+    res = _result(64)
+    res["canary"] = {"note": "x" * 2000}
+    with pytest.raises(ValueError, match=r"over the 1900-byte budget"):
+        _compact_line(res)
 
 
 def test_compact_line_is_single_line():

@@ -47,7 +47,7 @@ def test_oracle_keys_subset_of_queries(entrymod):
     "event_sessions", "event_rolling", "tfidf", "dedup_canonical",
     "tool_dispatch_extract", "stream_dedup_parity",
     "conv_assemble", "conv_dedup", "span_svg", "embedding_neardup_ivf",
-    "source_mix", "conv_assemble_capped",
+    "source_mix", "conv_assemble_capped", "multi_source_union",
 ])
 def test_query_matches_oracle(spark, entrymod, duck, name):
     from tools.check_contract import compare

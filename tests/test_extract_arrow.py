@@ -1,11 +1,13 @@
-"""Pin the Arrow-boundary kernel (extract_frame_arrow / mapInArrow) to the
-pandas-boundary kernel it mirrors — frame level and Spark level.
+"""Pin the one batch kernel (extract_frame_arrow, run by Spark through
+mapInArrow) row by row to the per-turn oracle extract_turn — frame level and
+Spark level.
 
-The two share every stage through _extract_frame_impl; what CAN diverge is the
-output assembly (flat span arrays -> list<struct> vs per-span dicts), the
-winner-row filtering per format, the slow-path flattening, and the
-zero-copy conv_id/turn_idx passthrough — all covered here, including the
-empty batch, null text, declared-kind dispatch, and passthrough columns.
+What can diverge from the oracle is the closed-form routing and vote, the
+winner-row filtering per format, the slow-path span flattening, the
+list<struct> assembly and the zero-copy conv_id/turn_idx/passthrough columns —
+all covered here, including the empty batch, null text, declared-kind
+dispatch and passthrough columns.  extract_frame, the pandas spelling, is
+pinned by the surrogate test below and by the fast-path and dispatch suites.
 """
 
 from __future__ import annotations
@@ -16,31 +18,35 @@ import pyarrow as pa
 import pytest
 
 from ocr_engine_spark.config import DEFAULT_CONFIG, EngineConfig
-from ocr_engine_spark.kernel.pipeline import extract_frame, extract_frame_arrow
+from ocr_engine_spark.kernel.pipeline import (
+    OUTPUT_COLUMNS, extract_frame, extract_frame_arrow, extract_turn,
+)
 from ocr_engine_spark.operators.extract import extract_transcripts
 from ocr_engine_spark.sources.transcripts import generate_transcripts
 
 
-def _assert_batch_equal(pdf_in: pd.DataFrame, cfg: EngineConfig):
+def _oracle(text, cfg: EngineConfig = DEFAULT_CONFIG, kind=None) -> dict:
+    # null text extracts like the empty payload
+    return extract_turn("" if text is None else text, cfg, kind or None)
+
+
+def _assert_matches_oracle(pdf_in: pd.DataFrame, cfg: EngineConfig):
     rb = pa.RecordBatch.from_pandas(pdf_in, preserve_index=False)
-    out_pd = extract_frame(pdf_in, cfg)
-    ar = extract_frame_arrow(rb, cfg).to_pydict()
-    assert list(out_pd["conv_id"]) == ar["conv_id"]
-    assert [int(x) for x in out_pd["turn_idx"]] == ar["turn_idx"]
-    assert list(out_pd["extracted_text"]) == ar["extracted_text"]
-    assert [int(x) for x in out_pd["n_spans"]] == ar["n_spans"]
-    assert list(out_pd["fmt"]) == ar["fmt"]
-    assert list(out_pd["is_blank"]) == ar["is_blank"]
-    np.testing.assert_array_equal(out_pd["strip_ratio"], ar["strip_ratio"])
-    np.testing.assert_array_equal(out_pd["angle"], ar["angle"])
-    np.testing.assert_array_equal(out_pd["page_skew"], ar["page_skew"])
-    for a, b in zip(out_pd["spans"], ar["spans"]):
-        assert a == b
+    out = extract_frame_arrow(rb, cfg).to_pydict()
+    assert list(out) == OUTPUT_COLUMNS
+    assert out["conv_id"] == list(pdf_in["conv_id"])
+    assert out["turn_idx"] == [int(x) for x in pdf_in["turn_idx"]]
+    kinds = (pdf_in["payload_kind"] if "payload_kind" in pdf_in.columns
+             else [None] * len(pdf_in))
+    for i, (text, kind) in enumerate(zip(pdf_in["text"], kinds)):
+        want = _oracle(text, cfg, kind)
+        for c in OUTPUT_COLUMNS[2:]:
+            assert out[c][i] == want[c], (i, c, text)
 
 
 def test_frame_equivalence_generator_corpus():
     pdf = generate_transcripts(n_convs=300, seed=23)
-    _assert_batch_equal(pdf[["conv_id", "turn_idx", "text"]], DEFAULT_CONFIG)
+    _assert_matches_oracle(pdf[["conv_id", "turn_idx", "text"]], DEFAULT_CONFIG)
 
 
 def test_frame_equivalence_edge_rows():
@@ -54,15 +60,15 @@ def test_frame_equivalence_edge_rows():
             '{"k": "v", "n": [1, 2.5]}',
             "✪✪ placeholder only ✪",
         ]})
-    _assert_batch_equal(pdf, DEFAULT_CONFIG)
+    _assert_matches_oracle(pdf, DEFAULT_CONFIG)
 
 
 def test_frame_equivalence_slow_path_config():
     # nonzero margins force the per-turn oracle for EVERY row: covers the
-    # flat-mode slow-path span flattening wholesale
+    # slow-path span flattening wholesale
     cfg = EngineConfig(extend_span_start=0.1, extend_span_end=0.1)
     pdf = generate_transcripts(n_convs=40, seed=29)
-    _assert_batch_equal(pdf[["conv_id", "turn_idx", "text"]], cfg)
+    _assert_matches_oracle(pdf[["conv_id", "turn_idx", "text"]], cfg)
 
 
 def test_frame_equivalence_declared_kind():
@@ -70,7 +76,7 @@ def test_frame_equivalence_declared_kind():
         ["conv_id", "turn_idx", "text"]].reset_index(drop=True)
     kinds = np.array(["", "json", "html", "markdown", "plain", "weird"])
     pdf["payload_kind"] = kinds[np.arange(len(pdf)) % len(kinds)]
-    _assert_batch_equal(pdf, DEFAULT_CONFIG)
+    _assert_matches_oracle(pdf, DEFAULT_CONFIG)
 
 
 def test_lone_surrogates_take_the_oracle_path():
@@ -101,18 +107,23 @@ def test_empty_batch():
     rb = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
     out = extract_frame_arrow(rb)
     assert out.num_rows == 0
-    assert out.schema.names == list(extract_frame(pdf).columns)
+    assert out.schema.names == OUTPUT_COLUMNS
 
 
 @pytest.mark.usefixtures("spark")
 def test_spark_boundary_equivalence(spark):
     pdf = generate_transcripts(n_convs=120, seed=37)
     df = spark.createDataFrame(pdf)
-    cols = ["conv_id", "turn_idx", "extracted_text", "n_spans", "spans",
-            "fmt", "strip_ratio", "role"]
-    a = (extract_transcripts(df, passthrough=("role",), arrow_boundary=True)
-         .select(*cols).orderBy("conv_id", "turn_idx").collect())
-    b = (extract_transcripts(df, passthrough=("role",), arrow_boundary=False)
-         .select(*cols).orderBy("conv_id", "turn_idx").collect())
-    assert a == b
-    assert len(a) == len(pdf)
+    got = extract_transcripts(df, passthrough=("role",)).collect()
+    assert len(got) == len(pdf)
+    by_key = {(r.conv_id, r.turn_idx): r for r in got}
+    assert len(by_key) == len(pdf)
+    for conv_id, turn_idx, text, role in pdf[
+            ["conv_id", "turn_idx", "text", "role"]].itertuples(index=False):
+        row = by_key[(conv_id, int(turn_idx))]
+        want = _oracle(text)
+        assert row.role == role
+        assert [s.asDict() for s in row.spans] == want["spans"]
+        for c in OUTPUT_COLUMNS[2:]:
+            if c != "spans":
+                assert row[c] == want[c], (conv_id, turn_idx, c)

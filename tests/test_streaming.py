@@ -6,7 +6,7 @@ import pytest
 from ocr_engine_spark.operators.extract import extract_transcripts
 from ocr_engine_spark.sources.transcripts import generate_transcripts
 from ocr_engine_spark.streaming.stream import (
-    extract_stream, metrics_window_stream, read_transcript_stream,
+    metrics_window_stream, read_transcript_stream,
 )
 
 
@@ -24,7 +24,7 @@ def test_stream_extraction_matches_batch(spark, stream_dir):
     stream = read_transcript_stream(spark, stream_dir, max_files_per_trigger=2)
     assert stream.isStreaming
     q = (
-        extract_stream(stream)
+        extract_transcripts(stream)
         .writeStream.format("memory").queryName("ext_stream")
         .outputMode("append").trigger(availableNow=True).start()
     )
@@ -69,22 +69,24 @@ def test_conversation_progress_stateful(spark, stream_dir):
 
     stream = read_transcript_stream(spark, stream_dir, max_files_per_trigger=1)
     q = (
-        conversation_progress_stream(extract_stream(stream))
+        conversation_progress_stream(extract_transcripts(stream))
         .writeStream.format("memory").queryName("conv_progress")
         .outputMode("update").trigger(availableNow=True).start()
     )
     # the production ProcessingTimeTimeout path: registered timers keep the
     # availableNow query alive well past the data (see the operator's CAVEAT),
-    # so wait for the DATA to drain (sink row count goes quiescent), then stop
-    # — never block on termination here
+    # so wait for the DATA to drain (sink row count goes quiescent AND the
+    # source reports no unread files — an idle trigger between micro-batches
+    # also reads 0 input rows), then stop — never block on termination here
     import time
 
     rows = -1
     for _ in range(60):
         time.sleep(2)
         n = spark.table("conv_progress").count()
-        if n == rows and n > 0 and (q.lastProgress or {}).get(
-                "numInputRows", 1) == 0:
+        if (n == rows and n > 0
+                and (q.lastProgress or {}).get("numInputRows", 1) == 0
+                and q.status["isDataAvailable"] is False):
             break
         rows = n
     q.stop()
@@ -321,7 +323,7 @@ def test_progress_stream_no_timeout_terminates(spark, stream_dir):
 
     stream = read_transcript_stream(spark, stream_dir, max_files_per_trigger=2)
     q = (
-        conversation_progress_stream(extract_stream(stream), timeout_ms=None)
+        conversation_progress_stream(extract_transcripts(stream), timeout_ms=None)
         .writeStream.format("memory").queryName("conv_progress_nt")
         .outputMode("update").trigger(availableNow=True).start()
     )
