@@ -7,7 +7,7 @@ Cluster launch (north_star lifecycle — the Spark analogue of the reference CLI
     spark-submit --py-files engine.zip jobs/extract_job.py \
         --input  warehouse/transcripts \
         --output /data/extracted_run1 \
-        --run-id r1 --n-buckets 4096 --salt-block 64
+        --run-id r1 --n-buckets 4096 --wave-buckets 512
 
 Local smoke run:
 
@@ -16,7 +16,10 @@ Local smoke run:
 
 Re-running the same command after a crash resumes: buckets whose ``run_metrics``
 row says status='done' are skipped (anti-filter), unfinished buckets are recomputed
-and idempotently overwritten (dynamic partition overwrite by bucket).
+and idempotently overwritten (dynamic partition overwrite by bucket).  Bucket ids
+hash each conversation in 64-turn blocks (``SALT_BLOCK``), so a whale
+conversation spreads over several buckets; resume with the original
+``--n-buckets`` (a different count raises).
 """
 
 from __future__ import annotations
@@ -41,8 +44,6 @@ def main() -> None:
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--n-buckets", type=int, default=32,
                     help="checkpoint granularity; cluster-scale: O(10k)")
-    ap.add_argument("--salt-block", type=int, default=64,
-                    help="turns of one conversation per salt bucket (skew bound)")
     ap.add_argument("--wave-buckets", type=int, default=None,
                     help="commit the run in waves of this many buckets (durable "
                          "checkpoint per wave; a crash loses at most one wave). "
@@ -72,7 +73,7 @@ def main() -> None:
 
     summary = run_extraction(
         spark, transcripts, args.output, run_id=args.run_id,
-        n_buckets=args.n_buckets, salt_block=args.salt_block, cfg=cfg,
+        n_buckets=args.n_buckets, cfg=cfg,
         wave_buckets=args.wave_buckets)
     print(json.dumps(summary))
     spark.stop()

@@ -40,8 +40,8 @@ Resume model: the kernel stage dominates cost, so with
 ``run_extraction`` checkpoint (role/tool/ts ride through as passthrough
 columns) — a crashed re-run resumes extraction from the last committed wave
 and recomputes only the cheap downstream stages (the committed buckets also
-pin the dispatch policy — resuming with different dispatch flags is an error,
-not a silent mixed corpus).  Without the flag the whole pipeline is one
+pin --n-buckets and the dispatch policy — resuming with a different value is
+an error, not a silent mixed corpus).  Without the flag the whole pipeline is one
 lineage (fastest when restarts are acceptable).  The packed output is derived
 data and is FULLY replaced on each run (a re-run with a different --shards
 cannot leave stale partitions behind).
@@ -62,7 +62,7 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
                  shards: int = 64, tool_kind_map: dict[str, str] | None = None,
                  dispatch_tool_json: bool = False,
                  checkpoint_extraction: bool = False, n_buckets: int = 32,
-                 salt_block: int = 64, wave_buckets: int | None = None,
+                 wave_buckets: int | None = None,
                  near_dedup: bool = False, near_threshold: float = 0.5,
                  quality_filter: bool = False, quality_max_oov: float = 0.98,
                  quality_ref_mod: int = 20, cfg=None) -> dict:
@@ -96,16 +96,15 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
         ext_summary = run_extraction(
             spark, transcripts, os.path.join(out_dir, "extraction"),
             run_id=run_id, n_buckets=n_buckets, cfg=cfg,
-            salt_block=salt_block, wave_buckets=wave_buckets,
+            wave_buckets=wave_buckets,
             passthrough=passthrough, dispatch_tool_json=dispatch_tool_json,
             tool_kind_map=tool_kind_map)
         extracted = spark.read.parquet(ext_summary["data_path"])
     else:
         ext_summary = {"mode": "inline"}
         extracted = extract_transcripts(
-            transcripts, cfg=cfg, num_partitions=AUTO, salt_block=salt_block,
-            passthrough=passthrough, dispatch_tool_json=dispatch_tool_json,
-            tool_kind_map=tool_kind_map)
+            transcripts, cfg=cfg, num_partitions=AUTO, passthrough=passthrough,
+            dispatch_tool_json=dispatch_tool_json, tool_kind_map=tool_kind_map)
 
     asm = assemble_conversations(truncate_to_budget(extracted, char_budget))
     # assembled = one row per conversation; persist so the dedup survivors,
@@ -160,8 +159,9 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
             # definition of typical, not a sample under test.  Cost: one
             # extra pass over the assembled frame (explode -> two map-side-
             # combinable aggs; the shuffle never carries the bigram stream).
+            from ocr_engine_spark.operators.dedup import _shingle_array
             from ocr_engine_spark.operators.text_analysis import (
-                lm_quality_scored,
+                LM_MIN_COUNT, lm_quality_scored,
             )
 
             if quality_ref_mod < 2:
@@ -172,20 +172,36 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
                     f"--quality-ref-mod must be >= 2, got {quality_ref_mod}")
             is_ref = (F.pmod(F.xxhash64("conv_id"),
                              F.lit(quality_ref_mod)) == 0)
-            # guard the degenerate hashed slice: with zero reference docs
-            # the model is empty, every document scores oov_rate 1.0, and
-            # the gate would silently drop the ENTIRE corpus — fail loudly
-            # instead (one cheap agg over the per-conversation frame)
-            if surv.where(is_ref).limit(1).count() == 0:
+            lm_docs = surv.select(F.col("conv_id").alias("doc_id"),
+                                  F.col("doc_text").alias("text"),
+                                  is_ref.alias("is_ref"))
+            # guard the degenerate models: with zero reference docs, or with
+            # every reference bigram below the model's min count, the model
+            # is empty, every document scores oov_rate 1.0, and the gate
+            # would silently drop the ENTIRE corpus — fail loudly instead.
+            # One job over the reference slice only, counting bigrams as
+            # lm_quality_scored's model does (probing through
+            # lm_quality_scored itself adds a broadcast join; it measured
+            # about 3x this probe's time on a 4-core host)
+            probe = (lm_docs.where("is_ref")
+                     .withColumn("text", F.coalesce("text", F.lit("")))
+                     .select(F.explode(_shingle_array(k=2)).alias("bigram"))
+                     .groupBy("bigram").count()
+                     .agg(F.count(F.lit(1)).alias("n"),
+                          F.max("count").alias("top")).first())
+            if probe["n"] == 0:
                 raise ValueError(
                     "--quality-filter reference slice is empty (no conv_id "
                     f"hashes to 0 mod {quality_ref_mod}); lower "
                     "--quality-ref-mod so the bigram model has training "
                     "documents")
-            scored = lm_quality_scored(surv.select(
-                F.col("conv_id").alias("doc_id"),
-                F.col("doc_text").alias("text"),
-                is_ref.alias("is_ref")))
+            if probe["top"] < LM_MIN_COUNT:
+                raise ValueError(
+                    "--quality-filter bigram model is empty: no reference "
+                    f"bigram occurs {LM_MIN_COUNT} times (the model's min "
+                    "count); lower --quality-ref-mod so the reference slice "
+                    "is larger")
+            scored = lm_quality_scored(lm_docs)
             lowq = (scored.where(F.col("oov_rate") > quality_max_oov)
                     .select(F.col("doc_id").alias("conv_id"))
                     .localCheckpoint(eager=True))
@@ -280,7 +296,6 @@ def main() -> None:
                     help="run the kernel stage through the wave-committed "
                          "checkpoint (resumable); see module docstring")
     ap.add_argument("--n-buckets", type=int, default=32)
-    ap.add_argument("--salt-block", type=int, default=64)
     ap.add_argument("--wave-buckets", type=int, default=None)
     ap.add_argument("--near-dedup", action="store_true",
                     help="after exact dedup, drop MinHash-LSH near-duplicate "
@@ -319,8 +334,7 @@ def main() -> None:
         else None,
         dispatch_tool_json=args.dispatch_tool_json,
         checkpoint_extraction=args.checkpoint_extraction,
-        n_buckets=args.n_buckets, salt_block=args.salt_block,
-        wave_buckets=args.wave_buckets,
+        n_buckets=args.n_buckets, wave_buckets=args.wave_buckets,
         near_dedup=args.near_dedup, near_threshold=args.near_threshold,
         quality_filter=args.quality_filter,
         quality_max_oov=args.quality_max_oov,

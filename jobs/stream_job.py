@@ -19,8 +19,9 @@ deterministic ``batch_id`` via dynamic partition OVERWRITE inside ``foreachBatch
 id, the overwrite makes redelivery idempotent, and the checkpointLocation WAL
 guarantees no source file is consumed twice.  Kill the process at any point and
 re-run the same command: it resumes from the checkpoint.  Per-batch lineage
-metrics (turns, spans, strip ratio) are written AFTER the batch's data, sharing
-the batch protocol with the batch job's bucket protocol.
+metrics (turns, spans, strip ratio) are written AFTER the batch's data by
+``operators.checkpoint.commit_by_key``, the same data-then-metrics commit the
+checkpointed batch job runs per wave of buckets.
 """
 
 from __future__ import annotations
@@ -37,29 +38,14 @@ def write_batch(out_dir: str):
     """foreachBatch sink: data + metrics, both overwrite-keyed by batch_id."""
     from pyspark.sql import functions as F
 
-    from ocr_engine_spark.sources.io import overwrite_partitions
+    from ocr_engine_spark.operators.checkpoint import commit_by_key
 
     data_path = os.path.join(out_dir, "extracted")
     metrics_path = os.path.join(out_dir, "batch_metrics")
 
     def fn(batch_df, batch_id: int):
-        batch = batch_df.withColumn("batch_id", F.lit(int(batch_id)))
-        batch.persist()
-        try:
-            overwrite_partitions(batch, data_path, "batch_id")
-            metrics = (
-                batch.groupBy("batch_id")
-                .agg(
-                    F.countDistinct("conv_id").alias("conv_ids"),
-                    F.count(F.lit(1)).alias("turns"),
-                    F.sum("n_spans").cast("long").alias("spans"),
-                    F.avg("strip_ratio").alias("strip_ratio"),
-                )
-                .withColumn("status", F.lit("done"))
-            )
-            overwrite_partitions(metrics, metrics_path, "batch_id")
-        finally:
-            batch.unpersist()
+        commit_by_key(batch_df.withColumn("batch_id", F.lit(int(batch_id))),
+                      "batch_id", data_path, metrics_path)
 
     return fn
 

@@ -3,14 +3,18 @@
 Protocol (SURVEY.md §4.2.3):
 
 - The corpus is bucketed into ``n_buckets`` deterministic partitions:
-  p = pmod(xxhash64(conv_id, turn_idx // salt_block), n_buckets).
+  p = pmod(salted_key(), n_buckets), i.e. xxhash64(conv_id, turn_idx // SALT_BLOCK).
 - Output and metrics are parquet tables partitioned by ``p`` with DYNAMIC partition
   overwrite, so re-running a bucket is idempotent (exactly-once by overwrite, the
   Iceberg overwritePartitions analogue — Parquet-local here, catalog pluggable).
 - A bucket is DONE iff its metrics row (status='done') exists; metrics are written
-  AFTER the bucket's data, so a crash between the two re-runs that bucket.
+  AFTER the bucket's data (``commit_by_key``, the one data-then-metrics commit
+  shared with the stream job's micro-batches), so a crash between the two re-runs
+  that bucket.
 - Resume = anti-join pending buckets against the done-set — only undone buckets are
-  recomputed (left_anti on p).
+  recomputed (left_anti on p).  Metrics rows record ``n_buckets`` and the dispatch
+  policy; a resume under a different value of either raises instead of mixing
+  bucket layouts or dispatch policies in one table.
 - Spark's job commit is all-or-nothing, so durability granularity == job
   granularity: ``wave_buckets`` splits a run into per-wave data+metrics commits
   (a crash loses at most one in-flight wave; see run_extraction's docstring).
@@ -22,16 +26,15 @@ accumulation (/root/reference/run.py:91-118) — metrics written as data, not lo
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocr_engine_spark.config import DEFAULT_CONFIG, EngineConfig
-from ocr_engine_spark.operators.extract import (
-    DEFAULT_SALT_BLOCK, _extract_batches_arrow, declare_payload_kind,
-    EXTRACTED_SCHEMA,
-)
+from ocr_engine_spark.operators.extract import extract_transcripts, salted_key
 from ocr_engine_spark.sources.io import overwrite_partitions
 
 
@@ -50,65 +53,95 @@ def derive_output_keys(df: DataFrame, out_dir: str, ext: str = ".tsv") -> DataFr
     )
 
 
-def with_bucket(df: DataFrame, n_buckets: int,
-                salt_block: int = DEFAULT_SALT_BLOCK) -> DataFrame:
+def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
-        "p",
-        F.pmod(
-            F.xxhash64(F.col("conv_id"),
-                       F.floor(F.col("turn_idx") / F.lit(salt_block)).cast("long")),
-            F.lit(n_buckets),
-        ).cast("int"),
-    )
+        "p", F.pmod(salted_key(), F.lit(n_buckets)).cast("int"))
 
 
-def done_buckets(spark: SparkSession, metrics_path: str) -> set[int]:
+def done_buckets(spark: SparkSession, metrics_path: str,
+                 expect: dict[str, object] | None = None) -> set[int]:
+    """Bucket ids whose metrics row says status='done'.
+
+    ``expect`` maps metrics columns to this run's value.  A resume under
+    another ``n_buckets`` would duplicate and drop turns, and one under
+    another ``dispatch`` would mix sniffed and declared-kind buckets, so a
+    committed row holding a different value raises (the fix is a fresh
+    out_dir or the original flags).  Rows written before a column existed
+    (absent or null) skip its check.  The done set and the checks share one
+    read.
+    """
     if not os.path.exists(metrics_path):
         return set()
-    rows = (
-        spark.read.parquet(metrics_path)
-        .where(F.col("status") == "done")
-        .select("p").distinct().collect()
-    )
+    m = spark.read.parquet(metrics_path).where(F.col("status") == "done")
+    checked = [c for c in (expect or {}) if c in m.columns]
+    rows = m.select("p", *checked).distinct().collect()
+    for c in checked:
+        bad = sorted({r[c] for r in rows} - {expect[c], None})
+        if bad:
+            raise ValueError(
+                f"resume {c} mismatch: committed buckets were written with "
+                f"{c}={bad[0]!r} but this run requests {c}={expect[c]!r}; use "
+                f"a fresh out_dir or rerun with the original {c}")
     return {r["p"] for r in rows}
+
+
+# metrics row layout: run_metrics (FIXTURES.md §3) writes every column, the
+# stream job's batch_metrics the untagged ones; the commit key comes last
+METRICS_COLUMNS = ("run_id", "conv_ids", "turns", "spans", "strip_ratio",
+                   "started", "finished", "status", "dispatch", "n_buckets")
+
+
+def commit_by_key(df: DataFrame, key: str, data_path: str, metrics_path: str,
+                  tags: dict | None = None) -> None:
+    """The one data-then-metrics commit, shared by the checkpoint's waves and
+    the stream job's micro-batches (the reference writes each result and its
+    manifest row in one place, reference run.py:91-118).
+
+    Persist ``df``, overwrite its data partitions by ``key``, then overwrite
+    its per-key metrics rows (status='done' plus ``tags``: other
+    ``METRICS_COLUMNS`` as constants, or constant Columns such as
+    ``F.current_timestamp()``, resolved after the data commit).  The metrics
+    are the done-markers, strictly after the data, so a crash between the two
+    redoes the key.  The data write and the metrics share one
+    materialization: the input is scanned once and the fresh output is never
+    read back.  DISK_ONLY, not MEMORY_AND_DISK: memory caching unrolls a
+    whole partition into storage memory and OOMs small heaps on fat buckets
+    and on the fat micro-batches of an ``availableNow`` backfill, while disk
+    blocks stream out incrementally (measured: a 1.1M-turn / 4-bucket run
+    OOMs a default 1g driver with memory caching and passes with disk-only).
+    """
+    tags = tags or {}
+    df.persist(StorageLevel.DISK_ONLY)
+    try:
+        overwrite_partitions(df, data_path, key)
+        metrics = (
+            df.groupBy(key)
+            .agg(
+                F.countDistinct("conv_id").alias("conv_ids"),
+                F.count(F.lit(1)).alias("turns"),
+                F.sum("n_spans").cast("long").alias("spans"),
+                F.avg("strip_ratio").alias("strip_ratio"),
+            )
+            .withColumn("status", F.lit("done"))
+            .withColumns({c: F.lit(v) for c, v in tags.items()})
+        )
+        layout = [c for c in METRICS_COLUMNS if c in metrics.columns]
+        overwrite_partitions(metrics.select(*layout, key), metrics_path, key)
+    finally:
+        df.unpersist()
 
 
 def _dispatch_desc(dispatch_tool_json: bool,
                    tool_kind_map: dict[str, str] | None) -> str:
-    import json
-
     return json.dumps(
         {"dispatch_tool_json": dispatch_tool_json,
          "tool_kind_map": tool_kind_map},
         sort_keys=True)
 
 
-def _validate_resume_dispatch(spark: SparkSession, metrics_path: str,
-                              dispatch_desc: str) -> None:
-    """A resumed run MUST extract under the dispatch policy the committed
-    buckets used — otherwise the final table silently mixes content-sniffed
-    and declared-kind buckets.  Metrics rows record the policy; a mismatch is
-    an error, not a warning (the fix is a fresh out_dir or the original
-    flags).  Pre-dispatch metrics layouts (no ``dispatch`` column) skip the
-    check rather than guess."""
-    if not os.path.exists(metrics_path):
-        return
-    m = spark.read.parquet(metrics_path).where(F.col("status") == "done")
-    if "dispatch" not in m.columns:
-        return
-    stored = [r["dispatch"] for r in m.select("dispatch").distinct().collect()]
-    bad = [s for s in stored if s != dispatch_desc]
-    if bad:
-        raise ValueError(
-            "resume dispatch mismatch: committed buckets were extracted with "
-            f"{bad[0]} but this run requests {dispatch_desc}; use a fresh "
-            "out_dir or rerun with the original dispatch flags")
-
-
 def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
                    run_id: str, n_buckets: int = 32,
                    cfg: EngineConfig = DEFAULT_CONFIG,
-                   salt_block: int = DEFAULT_SALT_BLOCK,
                    wave_buckets: int | None = None,
                    passthrough: tuple[str, ...] = (),
                    dispatch_tool_json: bool = False,
@@ -122,7 +155,7 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     output (e.g. ("role", "tool", "ts") so downstream conversation assembly
     can consume the committed extraction without re-joining the source);
     ``dispatch_tool_json`` / ``tool_kind_map`` enable the same S1 declared-kind
-    dispatch as ``extract_transcripts`` (shared ``declare_payload_kind``).
+    dispatch as ``extract_transcripts``, which every wave runs.
 
     ``wave_buckets``: commit granularity.  Default (None) processes every
     pending bucket in one data write + one metrics write — fastest, but
@@ -135,6 +168,9 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     waves to cluster capacity (few waves) or seed from a p-partitioned
     staging table (``write_bucketed``) so each wave's scan prunes.
 
+    Resuming with a different ``n_buckets`` or dispatch policy than the
+    committed buckets used raises ``ValueError`` (see ``done_buckets``).
+
     Returns a summary dict {run_id, buckets_total, buckets_done_before, buckets_run}.
     """
     if wave_buckets is not None and wave_buckets < 1:
@@ -144,13 +180,10 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     data_path = os.path.join(out_dir, "extracted")
     metrics_path = os.path.join(out_dir, "run_metrics")
 
-    dispatch_desc = _dispatch_desc(dispatch_tool_json, tool_kind_map)
-    _validate_resume_dispatch(spark, metrics_path, dispatch_desc)
-    done = done_buckets(spark, metrics_path)
-    pruned = declare_payload_kind(
-        transcripts, ["conv_id", "turn_idx", "text", *passthrough],
-        dispatch_tool_json, tool_kind_map)
-    bucketed = with_bucket(pruned, n_buckets, salt_block)
+    tags = {"dispatch": _dispatch_desc(dispatch_tool_json, tool_kind_map),
+            "n_buckets": n_buckets}
+    done = done_buckets(spark, metrics_path, expect=tags)
+    bucketed = with_bucket(transcripts, n_buckets)
     pending_ids = [p for p in range(n_buckets) if p not in done]
     if wave_buckets and wave_buckets < len(pending_ids):
         waves = [pending_ids[i:i + wave_buckets]
@@ -161,8 +194,9 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
         pending = bucketed
         if len(wave) < n_buckets:
             pending = bucketed.where(F.col("p").isin(wave))
-        _run_wave(spark, pending, run_id, len(wave), cfg,
-                  data_path, metrics_path, passthrough, dispatch_desc)
+        _run_wave(pending, len(wave), data_path, metrics_path,
+                  {"run_id": run_id, **tags}, cfg, passthrough,
+                  dispatch_tool_json, tool_kind_map)
 
     ran = n_buckets - len(done)
     return {
@@ -175,66 +209,21 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     }
 
 
-def _run_wave(spark: SparkSession, pending: DataFrame, run_id: str,
-              n_partitions: int, cfg: EngineConfig,
-              data_path: str, metrics_path: str,
-              passthrough: tuple[str, ...] = (),
-              dispatch_desc: str = _dispatch_desc(False, None)) -> None:
-    """One durable commit unit: extract `pending`, write its data, then its
-    metrics (the done-markers, strictly after the data)."""
+def _run_wave(pending: DataFrame, n_partitions: int, data_path: str,
+              metrics_path: str, tags: dict, cfg: EngineConfig,
+              passthrough: tuple[str, ...], dispatch_tool_json: bool,
+              tool_kind_map: dict[str, str] | None) -> None:
+    """One durable commit unit: extract `pending`, repartitioned by bucket, then
+    commit its data and its metrics rows."""
     started = time.time()
-    if not pending.isEmpty():  # short-circuit probe, no extra full-count job
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        # fresh StructType: .add() would mutate the shared EXTRACTED_SCHEMA
-        out_schema = StructType(
-            list(EXTRACTED_SCHEMA.fields)
-            + [pending.schema[c] for c in passthrough]
-            + [StructField("p", IntegerType())])
-        from pyspark import StorageLevel
-
-        extracted = (
-            pending.repartition(n_partitions, "p")
-            .mapInArrow(
-                _extract_batches_arrow(cfg, (*passthrough, "p")),
-                schema=out_schema)
-        )
-        # one pass over the input: the kernel output is persisted, the data write
-        # consumes it, and the metrics aggregation reuses the SAME materialization
-        # — the input is scanned once and the freshly-written output is never read
-        # back (the previous spelling re-read the entire output dataset per run).
-        # DISK_ONLY, not MEMORY_AND_DISK: memory caching unrolls a whole bucket
-        # partition into storage memory and OOMs small heaps on fat buckets,
-        # while disk blocks stream out incrementally (measured: a 1.1M-turn /
-        # 4-bucket run OOMs a default 1g driver with memory caching and passes
-        # with disk-only)
-        extracted.persist(StorageLevel.DISK_ONLY)
-        try:
-            overwrite_partitions(extracted, data_path, "p")
-
-            # lineage + metrics AFTER data commit: a bucket missing its metrics row
-            # reruns; `extracted` holds only pending buckets, so no done-filter
-            finished = time.time()
-            metrics = (
-                extracted.groupBy("p")
-                .agg(
-                    F.countDistinct("conv_id").alias("conv_ids"),
-                    F.count(F.lit(1)).alias("turns"),
-                    F.sum("n_spans").cast("long").alias("spans"),
-                    F.avg("strip_ratio").alias("strip_ratio"),
-                )
-                .withColumn("run_id", F.lit(run_id))
-                .withColumn("started", F.lit(started).cast("timestamp"))
-                .withColumn("finished", F.lit(finished).cast("timestamp"))
-                .withColumn("status", F.lit("done"))
-                .withColumn("dispatch", F.lit(dispatch_desc))
-            )
-            overwrite_partitions(
-                metrics.select(
-                    "run_id", "conv_ids", "turns", "spans", "strip_ratio",
-                    "started", "finished", "status", "dispatch", "p",
-                ), metrics_path, "p")
-        finally:
-            extracted.unpersist()
-
-
+    if pending.isEmpty():  # short-circuit probe, no extra full-count job
+        return
+    extracted = extract_transcripts(
+        pending.repartition(n_partitions, "p"), cfg,
+        passthrough=(*passthrough, "p"),
+        dispatch_tool_json=dispatch_tool_json, tool_kind_map=tool_kind_map)
+    # `extracted` holds only pending buckets, so every metrics row is new
+    commit_by_key(
+        extracted, "p", data_path, metrics_path,
+        tags={**tags, "started": F.lit(started).cast("timestamp"),
+              "finished": F.current_timestamp()})

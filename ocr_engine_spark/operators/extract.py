@@ -9,12 +9,15 @@ Design (SURVEY.md §4.2, BASELINE.json north_rule):
   boundary, and batches stay RecordBatches in both directions (the spans list<struct>
   column is built from flat arrays, never per-span dicts); Arrow batch size is bounded
   by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
-- **Salting for skewed long conversations**: partition key = (conv_id, turn_idx // salt
-  block).  Extraction is stateless per turn, so a whale conversation (Zipfian corpus) can
-  be split across executors without changing results.  AQE alone cannot split one fused
-  Python stage's hot partition, so the salt is explicit (north_rule requirement).
-- **Repartition-before-UDF** sizes partitions from the data volume so Arrow batches of
-  long payloads stay within executor memory: P ~ total_bytes / target_partition_bytes.
+- **Salting for skewed long conversations**: partition key = (conv_id, turn_idx //
+  SALT_BLOCK).  Extraction is stateless per turn, so a whale conversation (Zipfian
+  corpus) can be split across executors without changing results.  AQE alone cannot
+  split one fused Python stage's hot partition, so the salt is explicit (north_rule
+  requirement).
+- **Skew probe before the UDF**: ``probe_layout_skew`` reads scan metadata only (no
+  job).  For whale files and tiny-file storms it sizes the salted exchange from file
+  bytes, P ~ 2 * total_bytes / TARGET_PARTITION_BYTES floored at the default
+  parallelism, so Arrow batches of long payloads stay within executor memory.
 - Column pruning happens before the UDF (select only what the kernel needs) so the
   parquet scan reads 3 of 6 columns (check ReadSchema in .explain).
 """
@@ -50,9 +53,8 @@ EXTRACTED_SCHEMA = StructType([
     StructField("page_skew", DoubleType()),
 ])
 
-# defaults for partition sizing; overridable per call
 TARGET_PARTITION_BYTES = 64 << 20  # uncompressed text per task
-DEFAULT_SALT_BLOCK = 64  # turns of one conversation kept together per salt bucket
+SALT_BLOCK = 64  # turns of one conversation kept together per salt bucket
 
 
 def _extract_batches_arrow(cfg: EngineConfig, passthrough: tuple[str, ...] = ()):
@@ -80,15 +82,15 @@ def _extract_batches_arrow(cfg: EngineConfig, passthrough: tuple[str, ...] = ())
     return fn
 
 
-def salted_key(salt_block: int = DEFAULT_SALT_BLOCK):
-    """Skew-safe shuffle key: hash(conv_id, turn_idx // salt_block).
+def salted_key():
+    """Skew-safe shuffle key: hash(conv_id, turn_idx // SALT_BLOCK).
 
     Plain hash(conv_id) sends a 100x whale conversation to one task; blocking by
-    turn ranges bounds any task's share of a conversation at ``salt_block`` turns.
+    turn ranges bounds any task's share of a conversation at ``SALT_BLOCK`` turns.
     """
     return F.xxhash64(
         F.col("conv_id"),
-        F.floor(F.col("turn_idx") / F.lit(salt_block)).cast("long"),
+        F.floor(F.col("turn_idx") / F.lit(SALT_BLOCK)).cast("long"),
     )
 
 
@@ -151,9 +153,7 @@ def declare_payload_kind(df: DataFrame, cols: list[str],
                          tool_kind_map: dict[str, str] | None = None
                          ) -> DataFrame:
     """Prune to ``cols``, optionally deriving the declared ``payload_kind``
-    column the kernel's S1 dispatch consumes (shared by the lazy
-    ``extract_transcripts`` and the checkpointed ``run_extraction`` so the two
-    entry points cannot drift on dispatch semantics).
+    column the kernel's S1 dispatch consumes.
 
     - ``tool_kind_map``: {tool value -> kind} literal map, JVM-side lookup; a
       miss yields null -> content sniff (the reference reader's
@@ -178,26 +178,8 @@ def declare_payload_kind(df: DataFrame, cols: list[str],
     return df.select(*cols)
 
 
-def plan_num_partitions(df: DataFrame, default_parallelism: int,
-                        target_bytes: int = TARGET_PARTITION_BYTES,
-                        sample_fraction: float | None = None) -> int:
-    """Repartition-before-UDF sizing: estimate payload bytes, divide by target.
-
-    Uses the cheap column-stat path (sum of text lengths); at 100 TB this is a
-    metadata-cheap aggregate that Catalyst pushes to a column scan of one column.
-    """
-    probe = df.select(F.sum(F.length("text")).alias("b"))
-    if sample_fraction:
-        probe = df.sample(fraction=sample_fraction, seed=1).select(
-            (F.sum(F.length("text")) / sample_fraction).alias("b"))
-    total = probe.collect()[0]["b"] or 0
-    by_bytes = int(total * 2 // target_bytes) + 1  # *2: UTF-16-ish in-memory factor
-    return max(default_parallelism, by_bytes)
-
-
 def extract_transcripts(df: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
                         num_partitions: int | None | str = None,
-                        salt_block: int = DEFAULT_SALT_BLOCK,
                         passthrough: tuple[str, ...] = (),
                         dispatch_tool_json: bool = False,
                         tool_kind_map: dict[str, str] | None = None
@@ -240,13 +222,14 @@ def extract_transcripts(df: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
       byte-bounds its splits (parquet/Iceberg ``files.maxPartitionBytes``), task work
       is bounded by bytes regardless of conversation skew, and the salted shuffle
       would only burn CPU moving every payload once.  This is the production path:
-      one scan -> one Python stage -> sink, zero shuffles.
+      one scan -> one Python stage -> sink, zero shuffles.  The checkpoint's
+      waves use it too, on input they already repartitioned by bucket id.
     - ``num_partitions=P``: explicit salted repartition — required when the SOURCE
       layout is skew-prone (e.g. Iceberg ``bucket(conv_id)`` where a whale
       conversation concentrates in one file, or tiny-file storms that need
-      compaction).  Key = hash(conv_id, turn_idx // salt_block) so a whale
-      conversation splits across tasks (AQE cannot split a fused Python stage's hot
-      partition on its own).
+      compaction).  Key = hash(conv_id, turn_idx // SALT_BLOCK) (64-turn
+      blocks) so a whale conversation splits across tasks (AQE cannot split a
+      fused Python stage's hot partition on its own).
     - ``num_partitions="auto"`` (the ``AUTO`` sentinel): decide from scan
       METADATA via ``probe_layout_skew`` — whale files and tiny-file storms
       get the salted exchange, balanced local and remote scans stay
@@ -263,7 +246,7 @@ def extract_transcripts(df: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     cols = ["conv_id", "turn_idx", "text", *passthrough]
     pruned = declare_payload_kind(df, cols, dispatch_tool_json, tool_kind_map)
     if num_partitions:
-        pruned = pruned.repartition(num_partitions, salted_key(salt_block))
+        pruned = pruned.repartition(num_partitions, salted_key())
     if passthrough:
         schema = StructType(
             list(EXTRACTED_SCHEMA.fields)

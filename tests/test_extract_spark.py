@@ -2,11 +2,12 @@
 plan shape (SURVEY.md §7 steps 3-4)."""
 
 import json
+import math
 
 import pytest
 
 from ocr_engine_spark.operators.extract import (
-    extract_transcripts, extracted_ordered, plan_num_partitions, salted_key,
+    SALT_BLOCK, extract_transcripts, extracted_ordered, salted_key,
 )
 from ocr_engine_spark.sources.transcripts import generate_transcripts
 
@@ -39,13 +40,13 @@ def test_salting_splits_whale_conversation(spark, transcripts_df):
     """The whale conversation must span multiple salt buckets (skew handling)."""
     from pyspark.sql import functions as F
 
-    df = transcripts_df.withColumn("k", salted_key(salt_block=8))
-    whale_keys = (
-        df.where(F.col("conv_id") == "conv-000000")
-        .select("k").distinct().count()
-    )
-    assert whale_keys == 4  # 32 whale turns / 8-turn blocks -> 4 distinct keys
+    turns = 3 * SALT_BLOCK + 5  # longer than two blocks, ends mid-block
+    whale = spark.range(turns).select(
+        F.lit("whale").alias("conv_id"), F.col("id").cast("int").alias("turn_idx"))
+    whale_keys = whale.select(salted_key()).distinct().count()
+    assert whale_keys == math.ceil(turns / SALT_BLOCK)  # one key per block
     # a conversation shorter than one block keeps a single key
+    df = transcripts_df.withColumn("k", salted_key())
     small = df.where(F.col("conv_id") == "conv-000001").select("k").distinct().count()
     assert small == 1
 
@@ -71,11 +72,6 @@ def test_plan_is_scan_exchange_pythoneval(spark, transcripts_df, tmp_path):
     scan_line = [l for l in plan.split("\n") if "Scan parquet" in l or "ReadSchema" in l]
     txt = "\n".join(scan_line)
     assert "role" not in txt and "ts" not in txt  # column pruning reached the scan
-
-
-def test_plan_num_partitions_floor(spark, transcripts_df):
-    p = plan_num_partitions(transcripts_df, default_parallelism=8)
-    assert p >= 8  # tiny input floors at the parallelism
 
 
 def test_empty_input(spark):

@@ -242,3 +242,26 @@ def test_quality_filter_degenerate_slice_raises(spark, corpus, tmp_path):
         run_pipeline(spark, df, str(tmp_path / "q_mod1"), run_id="t23",
                      char_budget=100_000, seq_budget=256, shards=4,
                      quality_filter=True, quality_ref_mod=1)
+
+
+def test_quality_filter_empty_model_raises(spark, tmp_path):
+    """A non-empty reference slice whose bigrams all fall below the model's
+    min count trains an EMPTY model: every scored document would read
+    oov_rate 1.0 and the gate would silently drop the whole scored corpus.
+    The stage must fail loudly instead.  Every token here is unique, so no
+    bigram occurs twice anywhere."""
+    ref_mod = 2
+    rows = [(f"uniq_{c}", t, "user",
+             " ".join(f"u{c}t{t}w{j}" for j in range(6)), None, None)
+            for c in range(12) for t in range(2)]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    n_ref = (df.select("conv_id").distinct()
+             .where(F.pmod(F.xxhash64("conv_id"), F.lit(ref_mod)) == 0)
+             .count())
+    assert 0 < n_ref < 12  # a non-empty slice AND documents to score
+    with pytest.raises(ValueError, match="bigram model is empty"):
+        run_pipeline(spark, df, str(tmp_path / "q_nomodel"), run_id="t24",
+                     char_budget=100_000, seq_budget=256, shards=2,
+                     quality_filter=True, quality_ref_mod=ref_mod)

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocr_engine_spark.operators.checkpoint import (
-    done_buckets, run_extraction, with_bucket,
+    METRICS_COLUMNS, done_buckets, run_extraction, with_bucket,
 )
 from ocr_engine_spark.sources.transcripts import generate_transcripts
 
@@ -84,8 +84,8 @@ def test_metrics_lineage_content(spark, transcripts_df, tmp_path):
     assert total_turns == transcripts_df.count()
     row = m.first()
     assert row.run_id == "rC" and row.status == "done"
-    assert set(m.columns) >= {"run_id", "conv_ids", "turns", "spans",
-                              "strip_ratio", "started", "finished", "status", "p"}
+    assert row.n_buckets == N_BUCKETS and row.started <= row.finished
+    assert m.columns == [*METRICS_COLUMNS, "p"]
 
 
 def test_metrics_never_reread_fresh_output(spark, transcripts_df, tmp_path,
@@ -172,10 +172,40 @@ def test_wave_buckets_below_one_raises(spark, transcripts_df, tmp_path):
                        n_buckets=N_BUCKETS, wave_buckets=0)
 
 
+def test_resume_with_changed_n_buckets_raises(spark, transcripts_df, tmp_path):
+    """Bucket ids depend on n_buckets: resuming a completed 4-bucket run with 8
+    buckets would skip p=0..3 as done and recompute p=4..7 under the new
+    layout on top, duplicating some turns and dropping others.  It must raise,
+    naming both counts, and leave the committed output untouched."""
+    out = str(tmp_path / "nb")
+    s = run_extraction(spark, transcripts_df, out, "rN", n_buckets=4)
+    want = _read_sorted(spark, s["data_path"])
+    with pytest.raises(ValueError, match=r"n_buckets=4 .*n_buckets=8"):
+        run_extraction(spark, transcripts_df, out, "rN", n_buckets=8)
+    assert _read_sorted(spark, s["data_path"]) == want
+    assert len(want) == transcripts_df.count()
+    again = run_extraction(spark, transcripts_df, out, "rN", n_buckets=4)
+    assert again["buckets_run"] == 0
+
+
+def test_resume_over_metrics_without_n_buckets(spark, transcripts_df, tmp_path):
+    """Metrics rows written before the n_buckets column existed skip the
+    check (as rows without ``dispatch`` do): the resume is a no-op."""
+    out = str(tmp_path / "old")
+    s = run_extraction(spark, transcripts_df, out, "rO", n_buckets=N_BUCKETS)
+    old = spark.read.parquet(s["metrics_path"]).drop("n_buckets").toPandas()
+    (spark.createDataFrame(old).write.mode("overwrite").partitionBy("p")
+     .parquet(s["metrics_path"]))
+    assert "n_buckets" not in spark.read.parquet(s["metrics_path"]).columns
+    resumed = run_extraction(spark, transcripts_df, out, "rO",
+                             n_buckets=N_BUCKETS)
+    assert resumed["buckets_run"] == 0
+
+
 def test_checkpointed_run_with_dispatch_and_passthrough(spark, tmp_path):
     """run_extraction's declared-kind dispatch must match extract_transcripts'
-    (shared declare_payload_kind), with passthrough columns surviving the
-    wave commit."""
+    (each wave runs extract_transcripts), with passthrough columns surviving
+    the wave commit."""
     from ocr_engine_spark.operators.extract import extract_transcripts
 
     pdf = generate_transcripts(20, seed=33)

@@ -6,8 +6,8 @@ scans the default is NO exchange (task work is bounded by bytes, conversation
 skew is irrelevant, a shuffle would only move every payload once); on
 skew-prone SOURCE layouts — e.g. Iceberg ``bucket(conv_id)``, where a whale
 conversation concentrates in one file — callers pass ``num_partitions`` to
-get the salted exchange (key = hash(conv_id, turn_idx // salt_block), so no
-task owns more than salt_block turns of one conversation).  Functional tests
+get the salted exchange (key = hash(conv_id, turn_idx // SALT_BLOCK), so no
+task owns more than SALT_BLOCK = 64 turns of one conversation).  Functional tests
 pin the mechanism (test_extract_spark.py, test_plans.py); this bench pins the
 EFFECT on the layout the salted mode exists for:
 
@@ -17,7 +17,7 @@ EFFECT on the layout the salted mode exists for:
 - variant "inherit": extract_transcripts() default — no exchange, the fused
   Python stage inherits the skewed layout (AQE cannot split a Python stage's
   hot partition);
-- variant "salted":  extract_transcripts(num_partitions=2N, salt_block=64);
+- variant "salted":  extract_transcripts(num_partitions=2N);
 - identical session (local[N]), Python workers warmed, full execution via
   noop write, interleaved best-of-REPS per variant.
 
@@ -74,7 +74,7 @@ def main() -> None:
 
     def run(num_partitions: int | None) -> float:
         t0 = time.perf_counter()
-        extract_transcripts(df, num_partitions=num_partitions, salt_block=64) \
+        extract_transcripts(df, num_partitions=num_partitions) \
             .write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
@@ -97,7 +97,7 @@ bucket(conv_id) layout) so the whale sits in one partition.  Identical
 | variant | exchange | wall (s) |
 | --- | --- | --- |
 | inherit layout (default on byte-bounded scans) | none | {best['inherit']:.2f} |
-| salted (num_partitions={2 * CPUS}, salt_block=64) | hash(conv_id, turn_idx // 64) | {best['salted']:.2f} |
+| salted (num_partitions={2 * CPUS}) | hash(conv_id, turn_idx // 64) | {best['salted']:.2f} |
 
 **The salted exchange is {ratio:.1f}x faster on this layout.**  Without it
 the whale's {whale_turns:,} turns ride one task while {CPUS - 1} cores idle —
@@ -107,7 +107,7 @@ conversation, so wall tracks total/{CPUS} plus one shuffle pass.  On a
 byte-bounded parquet/Iceberg scan the default no-exchange mode is already
 skew-safe — that is why the salted exchange is opt-in (see
 extract_transcripts's partitioning-policy docstring).  At 10^12-turn scale the same
-mechanism bounds every task at salt_block turns per conversation regardless
+mechanism bounds every task at SALT_BLOCK turns per conversation regardless
 of how long the longest agent session grows — and because extraction is
 strictly per-turn (each turn's payload is its own page; stitching happens
 WITHIN a turn), splitting a conversation across tasks cannot change any
