@@ -7,18 +7,30 @@ the ``pipeline_e2e`` contract row), over a transcript table:
     -> truncate_to_budget       (context cap in chars, prefix-only)
     -> assemble_conversations   (one training document per conversation)
     -> dedup_conversations      (one survivor per exact-duplicate family)
-    -> [--near-dedup]           (MinHash-LSH near-dup clusters over assembled
-                                 documents; keep each cluster's LONGEST
+    -> [feature pass]           (with either flag below: ONE mapInArrow
+                                 pass tokenizes each survivor once,
+                                 vectorized over its Arrow batch, and emits
+                                 what the enabled stages read — the MinHash
+                                 signature, bit-identical to the contract's
+                                 minhash_signatures through Spark's XXH64 in
+                                 numpy; the distinct 3-shingle hashes; the
+                                 word-bigram hashes — persisted once)
+    -> [--near-dedup]           (MinHash-LSH near-dup clusters over the
+                                 signatures; keep each cluster's LONGEST
                                  document, tie-break min conv_id — catches
                                  truncated/perturbed re-runs exact dedup
                                  cannot; the conv_neardup_canonical contract
                                  row run as a pipeline stage, with the
                                  content-aware canonical rule production needs)
     -> [--quality-filter]       (CCNet-style bigram-LM gate: a hashed held-in
-                                 slice trains the min-count-pruned model;
-                                 documents whose OOV-bigram rate exceeds
+                                 slice trains the min-count-pruned model over
+                                 HASHED bigrams, collected as a sorted array
+                                 and probed with np.searchsorted; documents
+                                 whose OOV-bigram rate exceeds
                                  --quality-max-oov drop — the lm_quality
-                                 contract row run as a pipeline stage)
+                                 contract row run as a pipeline stage.  Two
+                                 distinct bigrams collide with probability
+                                 about n^2/2^65 for n distinct bigrams)
     -> pack_sequences           (greedy token packing into training sequences)
 
 Cluster launch (the reference CLI lifecycle, /root/reference/run.py:24-45,
@@ -85,9 +97,18 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
     from ocr_engine_spark.operators.conversations import (
         assemble_conversations, dedup_conversations, truncate_to_budget,
     )
-    from ocr_engine_spark.operators.extract import AUTO, extract_transcripts
+    from ocr_engine_spark.operators.extract import (
+        AUTO, TARGET_PARTITION_BYTES, extract_transcripts,
+    )
     from ocr_engine_spark.operators.text_analysis import greedy_pack_assignment
 
+    if quality_filter and quality_ref_mod < 2:
+        # checked before any Spark action, so a degenerate config cannot fail
+        # only after extraction waves are written: mod 1 marks EVERY document
+        # as reference (nothing scored, the gate silently no-ops); mod <= 0
+        # makes pmod() NULL (is_ref NULL everywhere — no model AND no corpus)
+        raise ValueError(
+            f"--quality-ref-mod must be >= 2, got {quality_ref_mod}")
     cfg = cfg or DEFAULT_CONFIG
     passthrough = ("role", "tool", "ts")
     if checkpoint_extraction:
@@ -110,44 +131,63 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
     # assembled = one row per conversation; persist so the dedup survivors,
     # the packed join-back, and the stage counts reuse one materialization
     asm.persist(StorageLevel.DISK_ONLY)
-    if near_dedup:
-        from ocr_engine_spark.operators.dedup import persisted_artifact_count
-
-        artifact_mark = persisted_artifact_count()
+    feats = None
     try:
         n_convs = asm.count()
         surv = dedup_conversations(asm)
-        n_near = None
+        n_near = n_lowq = None
+        if near_dedup or quality_filter:
+            # ONE text pass for both corpus-level stages: each survivor is
+            # tokenized once, vectorized over its Arrow batch, into the
+            # columns the enabled stages read (MinHash signature and distinct
+            # 3-shingle hashes; bigram hashes) and persisted once, so no
+            # stage below re-derives text
+            from ocr_engine_spark.operators import doc_features as fx
+
+            cols = [F.col("conv_id").alias("doc_id"),
+                    F.col("doc_text").alias("text")]
+            if near_dedup:
+                cols.append(F.length("doc_text").cast("long").alias("doc_len"))
+            if quality_filter:
+                cols.append((F.pmod(F.xxhash64("conv_id"),
+                                    F.lit(quality_ref_mod)) == 0)
+                            .alias("is_ref"))
+            # every Arrow Python task pays a fixed setup (0.1-0.25 s measured
+            # on Spark 4.1, most of it PySpark re-reading pyspark.zip's
+            # directory), so the pass is sized by volume, not by shuffle
+            # partitions: a document holds at most char_budget characters,
+            # and one task takes about TARGET_PARTITION_BYTES of them (a no-op
+            # once the corpus outgrows the shuffle partitions)
+            per_task = max(1, TARGET_PARTITION_BYTES // max(1, char_budget))
+            tasks = max(1, -(-n_convs // per_task))
+            feats = fx.doc_features(surv.select(*cols).coalesce(tasks),
+                                    signature=near_dedup,
+                                    bigrams=quality_filter)
+            feats.persist(StorageLevel.MEMORY_AND_DISK)
+            kept = feats
         if near_dedup:
             # Near-duplicate conversations (truncated/perturbed re-runs of
             # the same session) survive exact dedup; drop every LSH cluster
             # member except the canonical one = the LONGEST document,
             # tie-broken by min conv_id — a truncated re-run can never
-            # displace its fuller original no matter how the ids sort.  Same
-            # banded-bucket shape as the conv_neardup_canonical contract row:
-            # candidate pairs come from band buckets, never an all-pairs
-            # join, and clustering runs over the sparse verified-pair edge
-            # set only, so the stage stays sub-linear in corpus size at real
-            # duplicate rates.  The drop set is localCheckpointed (tiny), so
-            # its count and the anti-join share one LSH execution.
-            from ocr_engine_spark.operators.dedup import (
-                canonical_drop_ids, minhash_lsh_pairs,
-            )
+            # displace its fuller original no matter how the ids sort.  The
+            # signatures are bit-identical to dedup.minhash_signatures (Spark's
+            # XXH64 in numpy), and banding, the per-bucket self-join and the
+            # exact-Jaccard verification keep minhash_lsh_pairs' shape: pairs
+            # come from band buckets, never an all-pairs join, and clustering
+            # runs over the sparse verified-pair edge set only.  The drop set
+            # is localCheckpointed (tiny), so its count and the anti-joins
+            # share one LSH execution.
+            from ocr_engine_spark.operators.dedup import canonical_drop_ids
 
-            pairs = minhash_lsh_pairs(
-                surv.select(F.col("conv_id").alias("doc_id"),
-                            F.col("doc_text").alias("text")),
-                num_hashes=16, bands=8, k=3,
-                jaccard_threshold=near_threshold)
-            lengths = surv.select(
-                F.col("conv_id").alias("doc_id"),
-                F.length("doc_text").cast("long").alias("doc_len"))
-            drop = (canonical_drop_ids(pairs, lengths=lengths)
-                    .withColumnRenamed("doc_id", "conv_id")
+            pairs = fx.lsh_pairs(feats, near_threshold)
+            drop = (canonical_drop_ids(
+                        pairs, lengths=feats.select("doc_id", "doc_len"))
                     .localCheckpoint(eager=True))
             n_near = drop.count()
-            surv = surv.join(drop, "conv_id", "left_anti")
-        n_lowq = None
+            kept = feats.join(drop, "doc_id", "left_anti")
+            surv = surv.join(drop.withColumnRenamed("doc_id", "conv_id"),
+                             "conv_id", "left_anti")
         if quality_filter:
             # CCNet-style bigram-LM quality gate over the deduped corpus
             # (dedup first, so duplicate families don't vote their own
@@ -156,55 +196,43 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
             # pruned model; documents whose OOV-bigram rate exceeds
             # --quality-max-oov drop.  Reference-slice documents are not
             # scored and always survive — the slice is the model's
-            # definition of typical, not a sample under test.  Cost: one
-            # extra pass over the assembled frame (explode -> two map-side-
-            # combinable aggs; the shuffle never carries the bigram stream).
-            from ocr_engine_spark.operators.dedup import _shingle_array
-            from ocr_engine_spark.operators.text_analysis import (
-                LM_MIN_COUNT, lm_quality_scored,
-            )
+            # definition of typical, not a sample under test.  The model is
+            # lm_quality_scored's over HASHED bigrams: one aggregation,
+            # collected as a sorted int64 array and broadcast; scoring is a
+            # vectorized np.searchsorted probe per Arrow batch.  Two distinct
+            # bigrams collide with probability about n^2/2^65 for n distinct
+            # bigrams (strings cannot); a collision can only merge counts.
+            from ocr_engine_spark.operators.text_analysis import LM_MIN_COUNT
 
-            if quality_ref_mod < 2:
-                # mod 1 marks EVERY document as reference (nothing scored,
-                # the gate silently no-ops); mod <= 0 makes pmod() NULL
-                # (is_ref NULL everywhere — no model AND no corpus)
-                raise ValueError(
-                    f"--quality-ref-mod must be >= 2, got {quality_ref_mod}")
-            is_ref = (F.pmod(F.xxhash64("conv_id"),
-                             F.lit(quality_ref_mod)) == 0)
-            lm_docs = surv.select(F.col("conv_id").alias("doc_id"),
-                                  F.col("doc_text").alias("text"),
-                                  is_ref.alias("is_ref"))
+            ref = kept.where("is_ref")
+            model = fx.bigram_model(ref, LM_MIN_COUNT)
             # guard the degenerate models: with zero reference docs, or with
             # every reference bigram below the model's min count, the model
             # is empty, every document scores oov_rate 1.0, and the gate
             # would silently drop the ENTIRE corpus — fail loudly instead.
-            # One job over the reference slice only, counting bigrams as
-            # lm_quality_scored's model does (probing through
-            # lm_quality_scored itself adds a broadcast join; it measured
-            # about 3x this probe's time on a 4-core host)
-            probe = (lm_docs.where("is_ref")
-                     .withColumn("text", F.coalesce("text", F.lit("")))
-                     .select(F.explode(_shingle_array(k=2)).alias("bigram"))
-                     .groupBy("bigram").count()
-                     .agg(F.count(F.lit(1)).alias("n"),
-                          F.max("count").alias("top")).first())
-            if probe["n"] == 0:
+            # Which of the two it is costs one more action, on this failure
+            # path only (an observed count on the model's own action is not
+            # reported once AQE prunes the emptied plan)
+            if len(model) == 0 and ref.isEmpty():
                 raise ValueError(
                     "--quality-filter reference slice is empty (no conv_id "
                     f"hashes to 0 mod {quality_ref_mod}); lower "
                     "--quality-ref-mod so the bigram model has training "
                     "documents")
-            if probe["top"] < LM_MIN_COUNT:
+            if len(model) == 0:
                 raise ValueError(
                     "--quality-filter bigram model is empty: no reference "
                     f"bigram occurs {LM_MIN_COUNT} times (the model's min "
                     "count); lower --quality-ref-mod so the reference slice "
                     "is larger")
-            scored = lm_quality_scored(lm_docs)
-            lowq = (scored.where(F.col("oov_rate") > quality_max_oov)
-                    .select(F.col("doc_id").alias("conv_id"))
-                    .localCheckpoint(eager=True))
+            bc = spark.sparkContext.broadcast(model)
+            try:
+                lowq = (fx.low_quality_ids(kept.where(~F.col("is_ref")), bc,
+                                           quality_max_oov)
+                        .withColumnRenamed("doc_id", "conv_id")
+                        .localCheckpoint(eager=True))
+            finally:
+                bc.destroy()
             n_lowq = lowq.count()
             surv = surv.join(lowq, "conv_id", "left_anti")
         # packing carries conv_id + doc_text THROUGH the grouped map (no
@@ -266,15 +294,8 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
             out.unpersist()
     finally:
         asm.unpersist()
-        if near_dedup:
-            # drop ONLY the LSH build-side caches this run created (scoped to
-            # the registry depth snapshotted before the stage — a caller's own
-            # artifacts are never evicted; caches only, consumers stay correct)
-            from ocr_engine_spark.operators.dedup import (
-                release_persisted_artifacts,
-            )
-
-            release_persisted_artifacts(keep=artifact_mark)
+        if feats is not None:
+            feats.unpersist()
     return summary
 
 

@@ -244,6 +244,20 @@ def test_quality_filter_degenerate_slice_raises(spark, corpus, tmp_path):
                      quality_filter=True, quality_ref_mod=1)
 
 
+def test_degenerate_quality_config_fails_before_extraction(spark, corpus,
+                                                           tmp_path):
+    """--quality-ref-mod < 2 is rejected before any Spark action: the
+    checkpointed extraction must not run (and write waves) first."""
+    df, _, _ = corpus
+    out = tmp_path / "q_early"
+    with pytest.raises(ValueError, match="must be >= 2"):
+        run_pipeline(spark, df, str(out), run_id="t25",
+                     char_budget=100_000, seq_budget=256, shards=2,
+                     checkpoint_extraction=True, n_buckets=4,
+                     quality_filter=True, quality_ref_mod=1)
+    assert not (out / "extraction").exists()
+
+
 def test_quality_filter_empty_model_raises(spark, tmp_path):
     """A non-empty reference slice whose bigrams all fall below the model's
     min count trains an EMPTY model: every scored document would read
