@@ -205,7 +205,7 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
             from ocr_engine_spark.operators.text_analysis import LM_MIN_COUNT
 
             ref = kept.where("is_ref")
-            model = fx.bigram_model(ref, LM_MIN_COUNT)
+            model = fx.bigram_model(ref)
             # guard the degenerate models: with zero reference docs, or with
             # every reference bigram below the model's min count, the model
             # is empty, every document scores oov_rate 1.0, and the gate

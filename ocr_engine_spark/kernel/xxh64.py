@@ -2,8 +2,9 @@
 
 Bit-identical to ``org.apache.spark.sql.catalyst.expressions.XXH64``: the
 value ``F.xxhash64(s)`` gives a string ``s`` is ``hash_ranges`` over its UTF-8
-bytes with ``SEED``, and ``F.xxhash64(h, j)`` for a long ``h`` and an int
-``j`` chains the seed through the columns: ``hash_int(j, hash_long(h, SEED))``.
+bytes, and ``F.xxhash64(h, j)`` for a long ``h`` and an int ``j`` chains the
+seed through the columns: ``hash_int(j, hash_long(h))``.  Spark's fixed seed
+``SEED`` = 42 starts every chain.
 
 Every function hashes a whole array at once.  The per-range byte loop of the
 reference algorithm becomes a loop over stripe/word/byte *positions*, each
@@ -55,24 +56,24 @@ def _unaligned(buf: np.ndarray, dtype: str) -> np.ndarray:
                       strides=(1,))
 
 
-def hash_ranges(buf: np.ndarray, start: np.ndarray, length: np.ndarray,
-                seed: int = SEED) -> np.ndarray:
+def hash_ranges(buf: np.ndarray, start: np.ndarray,
+                length: np.ndarray) -> np.ndarray:
     """XXH64 of each byte range ``buf[start[i] : start[i] + length[i]]``
-    (Spark's ``XXH64.hashUnsafeBytes``), as uint64."""
+    (Spark's ``XXH64.hashUnsafeBytes`` with ``SEED``), as uint64."""
     buf = np.ascontiguousarray(buf, dtype=np.uint8)
     w64 = _unaligned(buf, "<u8")
     w32 = _unaligned(buf, "<u4")
     start = np.asarray(start, dtype=np.int64)
     length = np.asarray(length, dtype=np.int64)
     with np.errstate(over="ignore"):
-        h = np.full(len(start), _u(seed + _P5), dtype=np.uint64)
+        h = np.full(len(start), _u(SEED + _P5), dtype=np.uint64)
         stripes = length >> 5
         big = np.flatnonzero(stripes)
         if big.size:
-            v = [np.full(big.size, _u(seed + _P1 + _P2), dtype=np.uint64),
-                 np.full(big.size, _u(seed + _P2), dtype=np.uint64),
-                 np.full(big.size, _u(seed), dtype=np.uint64),
-                 np.full(big.size, _u(seed - _P1), dtype=np.uint64)]
+            v = [np.full(big.size, _u(SEED + _P1 + _P2), dtype=np.uint64),
+                 np.full(big.size, _u(SEED + _P2), dtype=np.uint64),
+                 np.full(big.size, _u(SEED), dtype=np.uint64),
+                 np.full(big.size, _u(SEED - _P1), dtype=np.uint64)]
             pos = start[big].copy()
             left = stripes[big].copy()
             live = np.arange(big.size)
@@ -109,12 +110,12 @@ def hash_ranges(buf: np.ndarray, start: np.ndarray, length: np.ndarray,
         return _fmix(h)
 
 
-def hash_long(x: np.ndarray, seed: int = SEED) -> np.ndarray:
-    """Spark's ``XXH64.hashLong`` of each int64/uint64 value."""
+def hash_long(x: np.ndarray) -> np.ndarray:
+    """Spark's ``XXH64.hashLong`` of each int64/uint64 value with ``SEED``."""
     x = np.asarray(x)
     x = x.view(np.uint64) if x.dtype == np.int64 else x.astype(np.uint64)
     with np.errstate(over="ignore"):
-        h = np.full(len(x), _u(seed + _P5 + 8), dtype=np.uint64)
+        h = np.full(len(x), _u(SEED + _P5 + 8), dtype=np.uint64)
         h ^= _round(_ZERO, x)
         return _fmix(_rotl(h, 27) * P1 + P4)
 

@@ -33,12 +33,21 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ocr_engine_spark.kernel import xxh64
+from ocr_engine_spark.operators.text_analysis import LM_MIN_COUNT
 
 # the pipeline's near-dedup geometry: 16 MinHash values of word 3-shingles in
 # 8 bands of 2 (minhash_lsh_pairs' num_hashes, k and bands)
 NUM_HASHES = 16
 K = 3
 BANDS = 8
+# feature_batch holds about 125 bytes per token at once (token and k-gram
+# index arrays, hash temporaries, sort copies): an Arrow batch of documents at
+# the char budget would cost GBs per worker, so each batch is featurized in
+# slices of at most this much UTF-8 text (a larger document goes alone)
+SLICE_BYTES = 4 << 20
+# the scorer holds about 4 int64 temporaries per bigram: slices of at most
+# this many bigrams
+SLICE_BIGRAMS = 1 << 20
 
 
 def _excl_cumsum(n: np.ndarray) -> np.ndarray:
@@ -108,6 +117,18 @@ def _list(values: np.ndarray, count: np.ndarray,
         mask=None if valid is None else pa.array(~valid))
 
 
+def _slices(batch: pa.RecordBatch, weight: np.ndarray, limit: int):
+    """``batch`` as consecutive slices whose rows' ``weight`` sums to at most
+    ``limit``; a row heavier than ``limit`` is a slice of its own."""
+    ends = np.cumsum(weight)
+    lo = 0
+    while lo < len(ends):
+        before = ends[lo - 1] if lo else 0
+        hi = max(lo + 1, int(np.searchsorted(ends, before + limit, "right")))
+        yield batch.slice(lo, hi - lo)
+        lo = hi
+
+
 def _distinct(h: np.ndarray, count: np.ndarray):
     """Distinct values per segment: ``(values, count)``."""
     doc = np.repeat(np.arange(len(count)), count)
@@ -144,6 +165,14 @@ def feature_batch(batch: pa.RecordBatch, signature: bool,
     return pa.RecordBatch.from_arrays(cols, names=names)
 
 
+def features(batches, signature: bool, bigrams: bool):
+    """``feature_batch`` over each batch, slice by slice (``SLICE_BYTES``)."""
+    for b in batches:
+        nbytes = pc.binary_length(b.column("text")).fill_null(0).to_numpy()
+        for piece in _slices(b, nbytes, SLICE_BYTES):
+            yield feature_batch(piece, signature, bigrams)
+
+
 def doc_features(docs: DataFrame, signature: bool,
                  bigrams: bool) -> DataFrame:
     """The feature pass over ``docs`` (``doc_id``, ``text`` and any columns
@@ -158,11 +187,8 @@ def doc_features(docs: DataFrame, signature: bool,
     if bigrams:
         fields.append(StructField("bg", longs))
 
-    def run(batches):
-        for b in batches:
-            yield feature_batch(b, signature, bigrams)
-
-    return docs.mapInArrow(run, StructType(fields))
+    return docs.mapInArrow(lambda it: features(it, signature, bigrams),
+                           StructType(fields))
 
 
 def lsh_pairs(feats: DataFrame, jaccard_threshold: float) -> DataFrame:
@@ -203,13 +229,13 @@ def lsh_pairs(feats: DataFrame, jaccard_threshold: float) -> DataFrame:
     )
 
 
-def bigram_model(ref: DataFrame, min_count: int) -> np.ndarray:
+def bigram_model(ref: DataFrame) -> np.ndarray:
     """The bigram model of ``lm_quality_scored`` over hashed bigrams: every
-    ``bg`` hash occurring ``>= min_count`` times in ``ref``, collected in one
-    action as a sorted int64 array."""
+    ``bg`` hash occurring ``>= LM_MIN_COUNT`` times in ``ref``, collected in
+    one action as a sorted int64 array."""
     model = (ref.select(F.explode("bg").alias("h"))
              .groupBy("h").count()
-             .where(F.col("count") >= min_count)
+             .where(F.col("count") >= LM_MIN_COUNT)
              .select("h").toArrow())
     return np.sort(model.column("h").to_numpy())
 
@@ -226,17 +252,22 @@ def oov_rates(bg: pa.ListArray, model: np.ndarray) -> np.ndarray:
     return n_oov / n
 
 
-def low_quality_ids(docs: DataFrame, model, max_oov: float) -> DataFrame:
-    """The ``doc_id`` of each ``docs`` row whose ``oov_rate`` against the
-    broadcast ``model`` (a ``bigram_model`` array) exceeds ``max_oov``."""
-
-    def score(batches):
-        for b in batches:
-            keep = oov_rates(b.column("bg"), model.value) > max_oov
+def low_quality(batches, model: np.ndarray, max_oov: float):
+    """The ``doc_id`` of each row whose ``oov_rate`` against ``model``
+    exceeds ``max_oov``, slice by slice (``SLICE_BIGRAMS``)."""
+    for batch in batches:
+        n = pc.list_value_length(batch.column("bg")).fill_null(0).to_numpy()
+        for b in _slices(batch, n, SLICE_BIGRAMS):
+            keep = oov_rates(b.column("bg"), model) > max_oov
             yield pa.RecordBatch.from_arrays(
                 [b.column("doc_id").filter(pa.array(keep))], names=["doc_id"])
 
+
+def low_quality_ids(docs: DataFrame, model, max_oov: float) -> DataFrame:
+    """``low_quality`` over ``docs`` against the broadcast ``model`` (a
+    ``bigram_model`` array)."""
     from pyspark.sql.types import StructType
 
     return docs.select("doc_id", "bg").mapInArrow(
-        score, StructType([docs.schema["doc_id"]]))
+        lambda it: low_quality(it, model.value, max_oov),
+        StructType([docs.schema["doc_id"]]))

@@ -175,6 +175,34 @@ def test_feature_batch_reads_large_strings():
     assert out[0].equals(out[1])
 
 
+def test_features_slice_large_batches(monkeypatch):
+    """A batch is featurized in slices of bounded text: the slices' rows
+    equal one whole-batch pass, and a document over the bound goes alone."""
+    texts = ["a b c", None, "x" * 30, "", "é z q w e", "p q", "r s t u"]
+    b = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(texts))), pa.array(texts, pa.large_string())],
+        names=["doc_id", "text"])
+    monkeypatch.setattr(fx, "SLICE_BYTES", 12)
+    pieces = list(fx.features(iter([b]), signature=True, bigrams=True))
+    assert [p.column("doc_id").to_pylist() for p in pieces] == [
+        [0, 1], [2], [3, 4], [5, 6]]
+    whole = fx.feature_batch(b, signature=True, bigrams=True)
+    assert pa.Table.from_batches(pieces).to_pylist() == whole.to_pylist()
+
+
+def test_low_quality_slices_large_batches(monkeypatch):
+    model = np.array([-5, 3, 9], dtype=np.int64)
+    bg = pa.array([[3, 4], [9], [-6, -5, 0, 9], [7], [3, 9]],
+                  pa.list_(pa.int64()))
+    b = pa.RecordBatch.from_arrays([pa.array(range(5)), bg],
+                                   names=["doc_id", "bg"])
+    monkeypatch.setattr(fx, "SLICE_BIGRAMS", 3)
+    pieces = list(fx.low_quality(iter([b]), model, 0.4))
+    assert len(pieces) == 3  # [2, 1] [4] [1, 2] bigrams
+    assert pa.Table.from_batches(pieces).column("doc_id").to_pylist() == [
+        0, 2, 3]
+
+
 # --- run_pipeline through the pass vs the contract path ----------------------
 
 REF_MOD = 3
