@@ -61,8 +61,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_quality": text_analysis.q_lm_quality,
         "semantic_decontam": similarity.q_semantic_decontam,
         "domain_filter": text_analysis.q_domain_filter,
-        "paragraph_dedup": dedup.q_paragraph_dedup,
-        "boilerplate_strip": dedup.q_boilerplate_strip,
         "conv_neardup": conversations.q_conv_neardup,
         "conv_neardup_canonical": conversations.q_conv_neardup_canonical,
         "conv_neardup_keep_longest": conversations.q_conv_neardup_keep_longest,
@@ -80,7 +78,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_neardup_ivf": similarity.q_embedding_neardup_ivf,
         "tool_dispatch_extract": documents.q_tool_dispatch_extract,
         "stream_dedup_parity": streaming_mod.q_stream_dedup_parity,
-        "exact_dedup": dedup.q_exact_dedup,
         "minhash_lsh_pairs": dedup.q_minhash_lsh_pairs,
         "dedup_clusters": dedup.q_dedup_clusters,
         "dedup_canonical": dedup.q_dedup_canonical,
@@ -110,25 +107,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "repetition_stats": text_analysis.q_repetition_stats,
         "token_budget": text_analysis.q_token_budget,
         "sequence_pack": text_analysis.q_sequence_pack,
-        # — deduplication —
-        "ngram_jaccard_pairs": dedup.q_ngram_jaccard_pairs,
-        "simhash": dedup.q_simhash,
-        "simhash_neardup": dedup.q_simhash_neardup,
         # — similarity search —
-        "embedding_topk_blas": similarity.q_embedding_topk_blas,
+        "embedding_topk": similarity.q_embedding_topk,
         "kmeans_centroids": similarity.q_kmeans_centroids,
         "ivf_assign": similarity.q_ivf_assign,
         "ivf_topk": similarity.q_ivf_topk,
-        "ivf_topk_multiprobe": similarity.q_ivf_topk_multiprobe,
-        # — tail: long-stable rows past the driver's 50-query window.
-        #   Membership is MECHANICAL now: tools/check_window.py (run by
+        # — tail: rows past the driver's 50-query window.  Membership is
+        #   MECHANICAL: tools/check_window.py (run by
         #   tests/test_contract_tail.py) fails if any query whose
         #   implementing module (transitively) or oracle text changed since
-        #   the last round boundary parks past position 50.  The window
-        #   itself ends at ngram_jaccard_pairs: simhash onward sits in the
-        #   tail (clean since the last round boundary; oracle-checked per
-        #   pytest run by tests/test_contract_tail.py) —
-        "embedding_topk": similarity.q_embedding_topk,
+        #   the last round boundary parks past position 50 while a clean
+        #   query holds a window slot.  The window ends at ivf_topk; the
+        #   tail opens with the dedup rows the near-dedup edit left clean,
+        #   then embedding_topk_blas and ivf_topk_multiprobe (dirty only
+        #   through similarity's lazy dedup import: tier-2 overflow of a
+        #   saturated window), then the long-stable rows.  Every tail row is
+        #   oracle-checked per pytest run by tests/test_contract_tail.py —
+        "paragraph_dedup": dedup.q_paragraph_dedup,
+        "boilerplate_strip": dedup.q_boilerplate_strip,
+        "exact_dedup": dedup.q_exact_dedup,
+        "ngram_jaccard_pairs": dedup.q_ngram_jaccard_pairs,
+        "simhash": dedup.q_simhash,
+        "simhash_neardup": dedup.q_simhash_neardup,
+        "embedding_topk_blas": similarity.q_embedding_topk_blas,
+        "ivf_topk_multiprobe": similarity.q_ivf_topk_multiprobe,
         "binary_features": multimodal.q_binary_features,
         "media_frames": multimodal.q_media_frames,
         "media_decode": multimodal.q_media_decode,
@@ -223,7 +225,9 @@ _CHUNK_CTES = """tok AS (
 
 # The full MinHash-LSH pair pipeline as a CTE chain ending in ``mh_pairs``
 # (md5-affine hash family; mirrors operators/dedup.minhash_lsh_pairs with
-# num_hashes=16, bands=8, k=3, threshold 0.5).  Shared by the pairs query,
+# num_hashes=16, bands=8, k=3, threshold 0.5).  Its band buckets are an md5
+# prefix where the engine's are xxhash64 of the band's longs: bucket ids
+# differ, the pairs agree (both match exactly the equal bands).  Shared by the pairs query,
 # the connected-components clustering oracle, and (parametrized over its
 # source relation via _minhash_ctes) the conversation-level near-dup oracle.
 _MINHASH_CTES = """sh AS (

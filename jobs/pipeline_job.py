@@ -173,14 +173,18 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
             # displace its fuller original no matter how the ids sort.  The
             # signatures are bit-identical to dedup.minhash_signatures (Spark's
             # XXH64 in numpy), and banding, the per-bucket self-join and the
-            # exact-Jaccard verification keep minhash_lsh_pairs' shape: pairs
-            # come from band buckets, never an all-pairs join, and clustering
-            # runs over the sparse verified-pair edge set only.  The drop set
-            # is localCheckpointed (tiny), so its count and the anti-joins
-            # share one LSH execution.
-            from ocr_engine_spark.operators.dedup import canonical_drop_ids
+            # exact-Jaccard verification are dedup.banded_pairs, the same join
+            # the contract's minhash_lsh_pairs runs: pairs come from band
+            # buckets, never an all-pairs join, and clustering runs over the
+            # sparse verified-pair edge set only.  The drop set is
+            # localCheckpointed (tiny), so its count and the anti-joins share
+            # one LSH execution.
+            from ocr_engine_spark.operators.dedup import (
+                banded_pairs, canonical_drop_ids,
+            )
 
-            pairs = fx.lsh_pairs(feats, near_threshold)
+            pairs = banded_pairs(feats, fx.NUM_HASHES, fx.BANDS,
+                                 near_threshold)
             drop = (canonical_drop_ids(
                         pairs, lengths=feats.select("doc_id", "doc_len"))
                     .localCheckpoint(eager=True))

@@ -372,31 +372,25 @@ _CONV_PAIRS_ARTIFACT: dict[tuple, str] = {}
 
 def materialized_conv_pairs(spark: SparkSession, sf_dir: str,
                             kind: str) -> DataFrame:
-    """Write-once parquet artifact of the banded md5-family MinHash-LSH
-    verified pairs over the assembled plant corpus ``kind`` (the
-    ``materialized_planted_assembled`` table).  First caller per
+    """Write-once parquet artifact (``dedup.write_once_pairs``) of the banded
+    md5-family MinHash-LSH verified pairs over the assembled plant corpus
+    ``kind`` (the ``materialized_planted_assembled`` table).  First caller per
     (sf_dir, kind, corpus-mtime) runs the LSH chain and persists
     (doc_id_a bigint, doc_id_b bigint, jaccard double) — an exact parquet
     round-trip — and every later caller (the same query's second bench rep,
     the canonical end-product rows) scans the table instead of re-running
     signatures + banding + verification."""
     from ocr_engine_spark.operators.dedup import (
-        _table_mtime, artifact_tmpdir, evict_stale_artifacts,
-        minhash_lsh_pairs,
+        _table_mtime, minhash_lsh_pairs, write_once_pairs,
     )
 
     key = (sf_dir, kind, _table_mtime(sf_dir, "documents"))
-    path = _CONV_PAIRS_ARTIFACT.get(key)
-    if path is None:
-        evict_stale_artifacts(_CONV_PAIRS_ARTIFACT, key)
-        docs = materialized_planted_assembled(
-            spark, sf_dir, kind).select("doc_id", "text")
-        pairs = minhash_lsh_pairs(docs, num_hashes=16, bands=8, k=3,
-                                  jaccard_threshold=0.5, family="md5")
-        path = artifact_tmpdir("ocr_engine_conv_pairs_") + "/pairs.parquet"
-        pairs.write.mode("overwrite").parquet(path)
-        _CONV_PAIRS_ARTIFACT[key] = path
-    return spark.read.parquet(path)
+    return write_once_pairs(
+        spark, _CONV_PAIRS_ARTIFACT, key, "ocr_engine_conv_pairs_",
+        lambda: minhash_lsh_pairs(
+            materialized_planted_assembled(spark, sf_dir, kind),
+            num_hashes=16, bands=8, k=3, jaccard_threshold=0.5,
+            family="md5"))
 
 
 def q_conv_neardup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:

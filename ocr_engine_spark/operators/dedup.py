@@ -12,7 +12,8 @@ Scale design (100 TB corpus):
 - duplicate_clusters collapses pair graphs into components by iterative min-label
   propagation (O(diameter) rounds, lineage truncated per round);
 - hash family is pluggable: xxhash64 (fast production default) or md5-affine
-  (bit-identical in DuckDB -> every stage value-checkable by the SQL oracle).
+  (bit-identical in DuckDB -> signatures and pairs value-checkable by the SQL
+  oracle); both families band through the one ``banded_pairs`` join.
 
 Everything is built-in SQL expressions (hashing, aggregate, transform) — JVM-side,
 codegen-friendly, no Python in the hot path.
@@ -206,8 +207,8 @@ def _shingle_array(col: str = "text", k: int = 3):
 #   h_j(s) = a + j*b  — an affine one-hash family; max value 2^60 + 15*2^56 < 2^62,
 #   so the arithmetic never overflows int64 in either engine.  DuckDB computes the
 #   identical integers via CAST('0x' || substr(md5(s), ...) AS BIGINT), which is
-#   what makes the whole LSH pipeline (signatures, band buckets, verification sets)
-#   value-checkable against the SQL oracle.
+#   what makes the signatures, verification sets and pairs value-checkable
+#   against the SQL oracle (band bucket ids are engine-local: see banded_pairs).
 
 HASH_FAMILIES = ("xxhash64", "md5")
 
@@ -217,143 +218,123 @@ def _md5_prefix_sql(expr: str, start: int = 1, length: int = 15) -> str:
     return f"cast(conv(substr(md5({expr}), {start}, {length}), 16, 10) as bigint)"
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 16, k: int = 3,
-                       family: str = "xxhash64") -> DataFrame:
-    """Per-row MinHash signature: sig[j] = min over shingles of a j-seeded hash.
+def _hashed_shingles(docs: DataFrame, num_hashes: int, k: int,
+                     family: str) -> DataFrame:
+    """``docs`` rows with at least one shingle, plus ``minhash`` (sig[j] = min
+    over shingles of a j-seeded hash) and ``sset`` (the distinct base shingle
+    hashes, the exact-Jaccard verification set) of one hash family.
 
-    One array expression per row; zero shuffles.  Each shingle string is hashed ONCE
-    (the ``num_hashes`` family derives numerically: xxhash64(h, j) rehash or the
-    md5-affine a + j*b), and the whole signature is a single ``aggregate`` fold whose
-    input array sits in operand position, so the shingle build + base hashing run
-    once per row (a ``transform(sequence(0, H-1), j -> aggregate(shingles, ...))``
-    spelling re-evaluated the shingle pipeline per hash index: 16x the work).
+    Each shingle string is hashed ONCE into ``hp``: the ``num_hashes`` family
+    derives numerically (xxhash64(h, j) rehash or the md5-affine a + j*b), and
+    the signature is a single ``aggregate`` fold whose input array sits in
+    operand position, so the shingle build + base hashing run once per row (a
+    ``transform(sequence(0, H-1), j -> aggregate(shingles, ...))`` spelling
+    re-evaluated the shingle pipeline per hash index: 16x the work).  When both
+    outputs are read, ``hp`` is referenced twice and stays one materialized
+    column (CollapseProject does not duplicate it).  The sets hold hashed
+    shingles: bigint array_intersect is far cheaper than string intersect, and
+    Jaccard over distinct shingle hashes equals string-set Jaccard up to hash
+    collisions (~2^-60 per pair).
     """
     if family not in HASH_FAMILIES:
         raise ValueError(f"family must be one of {HASH_FAMILIES}")
+    seq = f"sequence(0, {num_hashes - 1})"
     if family == "xxhash64":
-        sig = F.expr(
-            f"aggregate(transform(shingles, s -> xxhash64(s)),"
-            f" array_repeat({LONG_MAX}L, {num_hashes}),"
-            f" (acc, h) -> zip_with(acc, sequence(0, {num_hashes - 1}),"
-            f"  (m, j) -> least(m, xxhash64(h, j))))"
-        )
+        hp = "transform(shingles, s -> xxhash64(s))"
+        fold = f"(acc, h) -> zip_with(acc, {seq}, (m, j) -> least(m, xxhash64(h, j)))"
+        sset = "array_distinct(hp)"
     else:
-        # chained transforms: md5(s) is computed once per shingle, then both affine
-        # coefficients slice the same hex (a lambda computing md5 twice would double
-        # the crypto work per element)
-        pairs = (
-            "transform(transform(shingles, s -> md5(s)),"
-            " m -> named_struct("
-            "'a', cast(conv(substr(m, 1, 15), 16, 10) as bigint),"
-            " 'b', cast(conv(substr(m, 17, 14), 16, 10) as bigint)))"
-        )
-        sig = F.expr(
-            f"aggregate({pairs},"
-            f" array_repeat({LONG_MAX}L, {num_hashes}),"
-            f" (acc, p) -> zip_with(acc, sequence(0, {num_hashes - 1}),"
-            f"  (m, j) -> least(m, p.a + j * p.b)))"
-        )
+        # chained transforms: md5(s) is computed once per shingle, then both
+        # affine coefficients slice the same hex (a lambda computing md5 twice
+        # would double the crypto work per element)
+        hp = ("transform(transform(shingles, s -> md5(s)),"
+              " m -> named_struct("
+              "'a', cast(conv(substr(m, 1, 15), 16, 10) as bigint),"
+              " 'b', cast(conv(substr(m, 17, 14), 16, 10) as bigint)))")
+        fold = f"(acc, p) -> zip_with(acc, {seq}, (m, j) -> least(m, p.a + j * p.b))"
+        sset = "array_distinct(transform(hp, p -> p.a))"
+    sig = f"aggregate(hp, array_repeat({LONG_MAX}L, {num_hashes}), {fold})"
     return (
         docs.withColumn("shingles", _shingle_array(k=k))
         .where(F.size("shingles") > 0)
-        .withColumn("minhash", sig)
-        .drop("shingles")
+        .withColumn("hp", F.expr(hp))
+        .withColumn("minhash", F.expr(sig))
+        .withColumn("sset", F.expr(sset))
+        .drop("shingles", "hp")
+    )
+
+
+def minhash_signatures(docs: DataFrame, num_hashes: int = 16, k: int = 3,
+                       family: str = "xxhash64") -> DataFrame:
+    """Per-row MinHash signature (``_hashed_shingles``' ``minhash``): ``docs``
+    rows with at least one shingle plus ``minhash``.  One array expression per
+    row; zero shuffles."""
+    return _hashed_shingles(docs, num_hashes, k, family).drop("sset")
+
+
+def banded_pairs(sigs: DataFrame, num_hashes: int, bands: int,
+                 jaccard_threshold: float) -> DataFrame:
+    """LSH over precomputed signatures: band buckets over ``minhash`` ->
+    per-bucket self-join -> pair dedup -> exact Jaccard over ``sset``.
+
+    ``sigs`` is a (doc_id, minhash array<bigint> of ``num_hashes``, sset
+    array<bigint>) frame; rows with NULL ``minhash`` are skipped.  Band ``b``'s
+    bucket is ``xxhash64`` of its ``num_hashes // bands`` longs — bucket ids are
+    only compared with each other, so any hash of the band serves, and two docs
+    share a bucket exactly when the band matches (up to 64-bit collisions).
+    Candidates are verified as ``round(inter/union, 6) >= jaccard_threshold``.
+    Returns (doc_id_a, doc_id_b, jaccard) with doc_id_a < doc_id_b.
+    """
+    rows = num_hashes // bands
+    sigs = sigs.where(F.col("minhash").isNotNull())
+    buckets = [F.xxhash64(*[F.col("minhash")[b * rows + r]
+                            for r in range(rows)]) for b in range(bands)]
+    banded = sigs.select("doc_id", F.posexplode(F.array(*buckets))
+                         .alias("band", "bucket"))
+    cand = (
+        banded.alias("a")
+        .join(banded.alias("b"),
+              (F.col("a.band") == F.col("b.band"))
+              & (F.col("a.bucket") == F.col("b.bucket"))
+              & (F.col("a.doc_id") < F.col("b.doc_id")))
+        # map-side-combinable pair dedup (bands can collide more than once)
+        .groupBy(F.col("a.doc_id").alias("doc_id_a"),
+                 F.col("b.doc_id").alias("doc_id_b"))
+        .agg(F.count(F.lit(1)).alias("_hits"))
+        .drop("_hits")
+    )
+    sets = sigs.select("doc_id", "sset")  # column pruning drops minhash here
+    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
+    return (
+        cand.join(sets.withColumnRenamed("doc_id", "doc_id_a")
+                  .withColumnRenamed("sset", "set_a"), "doc_id_a")
+        .join(sets.withColumnRenamed("doc_id", "doc_id_b")
+              .withColumnRenamed("sset", "set_b"), "doc_id_b")
+        .withColumn("jaccard", F.round(
+            inter / (F.size("set_a") + F.size("set_b") - inter), 6))
+        .where(F.col("jaccard") >= jaccard_threshold)
+        .select("doc_id_a", "doc_id_b", "jaccard")
     )
 
 
 def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 16, bands: int = 8,
                       k: int = 3, jaccard_threshold: float = 0.7,
-                      family: str = "xxhash64",
-                      persist: bool = True) -> DataFrame:
-    """MinHash LSH near-dup pairs: band -> bucket-join -> exact-Jaccard verification.
+                      family: str = "xxhash64") -> DataFrame:
+    """MinHash LSH near-dup pairs: ``_hashed_shingles`` -> ``banded_pairs``.
 
-    Returns (doc_id_a, doc_id_b, jaccard) with doc_id_a < doc_id_b.
-    ``persist=False`` skips caching the signature build side (each consumer
-    recomputes its own column-pruned subtree) — kept for A/B benchmarking of
-    the cache trade-off (BENCH/dedup_regression.md).
+    Returns (doc_id_a, doc_id_b, jaccard) with doc_id_a < doc_id_b.  The
+    signature frame is persisted (banding and verification both read it: the
+    write-once / join-twice LSH artifact; a cluster job would checkpoint it)
+    and registered for ``release_persisted_artifacts``.  Both families band
+    with ``banded_pairs``' one bucket spelling, xxhash64 of the band's longs.
+    The DuckDB oracle buckets by an md5 prefix of the band instead: bucket ids
+    differ between the engines, but both put two docs in one bucket exactly
+    when their band matches, so the candidate and verified pairs agree.
     """
-    if family not in HASH_FAMILIES:
-        raise ValueError(f"family must be one of {HASH_FAMILIES}")
-    rows = num_hashes // bands
-    # Shared per-shingle hash column: the signature fold AND the verification set
-    # both read `hp`, so each shingle is hashed ONCE per row (re-deriving the
-    # shingle pipeline per consumer doubled the crypto work).  The filter between
-    # the projections is a CollapseProject barrier, so `hp` stays a materialized
-    # column, not an inlined expression.
-    staged = (
-        docs.select("doc_id", "text")
-        .withColumn("shingles", _shingle_array(k=k))
-        .where(F.size("shingles") > 0)
-    )
-    if family == "xxhash64":
-        hp = "transform(shingles, s -> xxhash64(s))"
-        sig = (f"aggregate(hp, array_repeat({LONG_MAX}L, {num_hashes}),"
-               f" (acc, h) -> zip_with(acc, sequence(0, {num_hashes - 1}),"
-               f"  (m, j) -> least(m, xxhash64(h, j))))")
-        sset = "array_distinct(hp)"
-        bucket_hash = (f"b -> xxhash64(concat_ws(',',"
-                       f" slice(minhash, b * {rows} + 1, {rows})))")
-    else:
-        hp = ("transform(transform(shingles, s -> md5(s)),"
-              " m -> named_struct("
-              "'a', cast(conv(substr(m, 1, 15), 16, 10) as bigint),"
-              " 'b', cast(conv(substr(m, 17, 14), 16, 10) as bigint)))")
-        sig = (f"aggregate(hp, array_repeat({LONG_MAX}L, {num_hashes}),"
-               f" (acc, p) -> zip_with(acc, sequence(0, {num_hashes - 1}),"
-               f"  (m, j) -> least(m, p.a + j * p.b)))")
-        sset = "array_distinct(transform(hp, p -> p.a))"
-        joined = f"concat_ws(',', slice(minhash, b * {rows} + 1, {rows}))"
-        bucket_hash = f"b -> {_md5_prefix_sql(joined)}"
-    # verification sets hold hashed shingles: bigint array_intersect is far
-    # cheaper than string intersect and Jaccard over distinct shingle hashes
-    # equals string-set Jaccard up to hash collisions (~2^-60 per pair).
-    # Persisted: banding and verification are both consumers (the write-once /
-    # join-twice LSH artifact; a cluster job would checkpoint this table).
-    sigs = (
-        staged.withColumn("hp", F.expr(hp))
-        .select("doc_id", F.expr(sig).alias("minhash"), F.expr(sset).alias("sset"))
-    )
-    if persist:
-        sigs = _persist_tracked(sigs)
-    banded = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(f"transform(sequence(0, {bands - 1}), {bucket_hash})")
-        ).alias("band", "bucket"),
-    )
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        # map-side-combinable pair dedup (bands can collide more than once)
-        .groupBy(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("_hits"))
-        .drop("_hits")
-    )
-    with_sets = sigs.select("doc_id", "sset")  # column pruning drops minhash here
-    verified = (
-        cand.join(with_sets.withColumnRenamed("doc_id", "doc_id_a")
-                  .withColumnRenamed("sset", "set_a"), "doc_id_a")
-        .join(with_sets.withColumnRenamed("doc_id", "doc_id_b")
-              .withColumnRenamed("sset", "set_b"), "doc_id_b")
-        .withColumn("inter", F.size(F.array_intersect("set_a", "set_b")).cast("double"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.size("set_a") + F.size("set_b") - F.col("inter")), 6),
-        )
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
-    return verified
+    sigs = _persist_tracked(
+        _hashed_shingles(docs.select("doc_id", "text"), num_hashes, k, family)
+        .select("doc_id", "minhash", "sset"))
+    return banded_pairs(sigs, num_hashes, bands, jaccard_threshold)
 
 
 def _table_mtime(sf_dir: str, name: str) -> float:
@@ -414,6 +395,31 @@ def evict_stale_artifacts(cache: dict, key: tuple) -> None:
         cache.pop(k)
 
 
+def write_once_pairs(spark: SparkSession, cache: dict, key: tuple,
+                     prefix: str, build) -> DataFrame:
+    """Read the pairs parquet cached in ``cache`` under ``key``; on a miss,
+    write ``build()`` to a new ``artifact_tmpdir(prefix)`` first.
+
+    The build's own signature caches are released once the parquet is
+    written, and only those (``persisted_artifact_count`` /
+    ``release_persisted_artifacts(keep=)``): a global release here would also
+    unpersist unrelated builders a caller still holds.  Entries superseded by
+    ``key`` (same key, older corpus mtime) are evicted first.  (doc_id bigint,
+    doc_id bigint, jaccard double) round-trips parquet exactly, so consumers
+    see bit-identical pairs either way."""
+    path = cache.get(key)
+    if path is None:
+        evict_stale_artifacts(cache, key)
+        mark = persisted_artifact_count()
+        try:
+            path = artifact_tmpdir(prefix) + "/pairs.parquet"
+            build().write.mode("overwrite").parquet(path)
+        finally:
+            release_persisted_artifacts(keep=mark)
+        cache[key] = path
+    return spark.read.parquet(path)
+
+
 def materialized_lsh_pairs(spark: SparkSession, sf_dir: str,
                            jaccard_threshold: float = 0.5,
                            family: str = "md5") -> DataFrame:
@@ -423,40 +429,27 @@ def materialized_lsh_pairs(spark: SparkSession, sf_dir: str,
     fans out to clustering + canonicalization from the checkpoint — it never
     rebuilds the signature -> band -> bucket-join -> verify subtree per
     consumer.  This mirrors that: the first caller per (sf_dir, threshold,
-    family, table-mtime) materializes the pairs to parquet (and releases the
-    build-side caches); ``q_minhash_lsh_pairs``, ``q_dedup_clusters`` and
+    family, table-mtime) materializes the pairs to parquet
+    (``write_once_pairs``); ``q_minhash_lsh_pairs``, ``q_dedup_clusters`` and
     ``q_dedup_canonical`` all consume the artifact, so a session running the
     whole suite computes the LSH pipeline exactly once.  Keying on the table
     mtime invalidates the artifact if the corpus under ``sf_dir`` changes
-    within a process.  (doc_id bigint, doc_id bigint, jaccard double) round-
-    trips parquet exactly, so consumers see bit-identical pairs either way.
+    within a process.
     """
     key = (sf_dir, jaccard_threshold, family, _table_mtime(sf_dir, "documents"))
-    path = _PAIRS_ARTIFACT.get(key)
-    if path is None:
-        evict_stale_artifacts(_PAIRS_ARTIFACT, key)
-        # release only the caches THIS build registers: a global release here
-        # would also unpersist unrelated builders a caller still holds
-        before = {id(x) for x in _PERSISTED}
-        docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
-        pairs = minhash_lsh_pairs(
-            docs, jaccard_threshold=jaccard_threshold, family=family)
-        path = artifact_tmpdir("ocr_engine_lsh_pairs_") + "/pairs.parquet"
-        pairs.write.mode("overwrite").parquet(path)
-        for df_ in [x for x in _PERSISTED if id(x) not in before]:
-            try:
-                df_.unpersist()
-            except Exception:  # session already stopped
-                pass
-        _PERSISTED[:] = [x for x in _PERSISTED if id(x) in before]
-        _PAIRS_ARTIFACT[key] = path
-    return spark.read.parquet(path)
+    return write_once_pairs(spark, _PAIRS_ARTIFACT, key, "ocr_engine_lsh_pairs_",
+                            lambda: minhash_lsh_pairs(
+                                spread(load(spark, sf_dir, "documents")
+                                       .select("doc_id", "text")),
+                                jaccard_threshold=jaccard_threshold,
+                                family=family))
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contract spelling uses the md5-affine family so every stage — signatures,
-    band buckets, candidate join, exact-Jaccard verification — replays in the
-    DuckDB oracle and the result is value-checked, not rows-only.  Production
+    """Contract spelling uses the md5-affine family so signatures, candidate
+    pairs and exact-Jaccard verification replay in the DuckDB oracle (its md5
+    band buckets match exactly the bands the engine's xxhash64 buckets match)
+    and the result is value-checked, not rows-only.  Production
     corpora that don't need cross-engine verification use family='xxhash64'.
     Reads the write-once pairs artifact (materialized_lsh_pairs)."""
     return materialized_lsh_pairs(spark, sf_dir, jaccard_threshold=0.5,

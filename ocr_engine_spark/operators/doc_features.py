@@ -13,9 +13,11 @@ expressions), ``doc_features`` tokenizes each document ONCE in a
 - ``bg``: the word-bigram hashes with multiplicity (the bigram stream of
   ``text_analysis.lm_quality_scored``, hashed).
 
-Banding, verification, the bigram model and scoring then read that one
-persisted frame.  ``dedup`` and ``text_analysis`` stay the defined semantics
-(their contract rows and the oracle this module is tested against).
+The bigram model and scoring (below) and near-dedup then read that one
+persisted frame.  This module owns no LSH: the pipeline bands and verifies
+``minhash``/``sset`` with ``dedup.banded_pairs``, the join the contract's
+``minhash_lsh_pairs`` runs.  ``dedup`` and ``text_analysis`` stay the defined
+semantics (their contract rows and the oracle this module is tested against).
 
 Shingles follow ``dedup._shingle_sql`` exactly: tokens are
 ``split(trim(text), ' +')`` (spaces only — tabs and newlines are token
@@ -36,7 +38,8 @@ from ocr_engine_spark.kernel import xxh64
 from ocr_engine_spark.operators.text_analysis import LM_MIN_COUNT
 
 # the pipeline's near-dedup geometry: 16 MinHash values of word 3-shingles in
-# 8 bands of 2 (minhash_lsh_pairs' num_hashes, k and bands)
+# 8 bands of 2 (minhash_lsh_pairs' num_hashes, k and bands; BANDS is read by
+# the pipeline's dedup.banded_pairs call)
 NUM_HASHES = 16
 K = 3
 BANDS = 8
@@ -189,44 +192,6 @@ def doc_features(docs: DataFrame, signature: bool,
 
     return docs.mapInArrow(lambda it: features(it, signature, bigrams),
                            StructType(fields))
-
-
-def lsh_pairs(feats: DataFrame, jaccard_threshold: float) -> DataFrame:
-    """``dedup.minhash_lsh_pairs`` over precomputed features: band buckets
-    over ``minhash`` -> per-bucket self-join -> pair dedup -> exact Jaccard
-    over ``sset``.  Returns (doc_id_a, doc_id_b, jaccard), doc_id_a <
-    doc_id_b.  A bucket id is any hash of the band's longs (ids are only
-    compared with each other), so this hashes the longs directly instead of
-    their decimal string."""
-    rows = NUM_HASHES // BANDS
-    sigs = feats.where(F.col("minhash").isNotNull())
-    buckets = [F.xxhash64(*[F.col("minhash")[b * rows + r]
-                            for r in range(rows)]) for b in range(BANDS)]
-    banded = sigs.select("doc_id", F.posexplode(F.array(*buckets))
-                         .alias("band", "bucket"))
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"),
-              (F.col("a.band") == F.col("b.band"))
-              & (F.col("a.bucket") == F.col("b.bucket"))
-              & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_id_a"),
-                 F.col("b.doc_id").alias("doc_id_b"))
-        .agg(F.count(F.lit(1)).alias("_hits"))
-        .drop("_hits")
-    )
-    sets = sigs.select("doc_id", "sset")
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    return (
-        cand.join(sets.withColumnRenamed("doc_id", "doc_id_a")
-                  .withColumnRenamed("sset", "set_a"), "doc_id_a")
-        .join(sets.withColumnRenamed("doc_id", "doc_id_b")
-              .withColumnRenamed("sset", "set_b"), "doc_id_b")
-        .withColumn("jaccard", F.round(
-            inter / (F.size("set_a") + F.size("set_b") - inter), 6))
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
 
 
 def bigram_model(ref: DataFrame) -> np.ndarray:

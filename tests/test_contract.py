@@ -79,11 +79,29 @@ def test_lsh_pairs_artifact_written_once(spark, entrymod):
     # the artifact IS the pairs table the direct builder would produce
     docs = dedup.spread(
         dedup.load(spark, SF_DIR, "documents").select("doc_id", "text"))
-    direct = dedup.minhash_lsh_pairs(
-        docs, jaccard_threshold=0.5, family="md5", persist=False)
+    mark = dedup.persisted_artifact_count()
+    try:
+        direct = dedup.minhash_lsh_pairs(
+            docs, jaccard_threshold=0.5, family="md5")
+        want = sorted(map(tuple, direct.collect()))
+    finally:
+        dedup.release_persisted_artifacts(keep=mark)
     got = sorted(map(tuple, df.collect()))
-    want = sorted(map(tuple, direct.collect()))
     assert got == want
+
+
+def test_conv_pairs_artifact_releases_its_caches(spark):
+    """Building the conversation-level pairs artifact leaves the dedup cache
+    registry as deep as it found it: the signature frame its LSH build
+    persisted is released once the parquet is written."""
+    from ocr_engine_spark.operators import conversations, dedup
+
+    dedup.release_persisted_artifacts()
+    conversations._CONV_PAIRS_ARTIFACT.clear()  # force a build
+    before = dedup.persisted_artifact_count()
+    assert conversations.materialized_conv_pairs(
+        spark, SF_DIR, "truncated").count() > 0
+    assert dedup.persisted_artifact_count() == before
 
 
 def test_every_query_has_a_value_oracle():

@@ -275,6 +275,33 @@ def test_duplicate_clusters_raises_when_unconverged(spark):
         duplicate_clusters(pairs, max_iterations=2).collect()
 
 
+def test_banded_pairs_semantics(spark):
+    """The one LSH band/join/verify on a hand-built signature frame (4 hashes
+    in 2 bands of 2): a pair colliding in both bands comes out once, a Jaccard
+    exactly at the threshold is kept, a NULL-minhash row is ignored, and a
+    pair with identical sets but no shared band is never a candidate."""
+    from pyspark.sql.types import (
+        ArrayType, LongType, StructField, StructType,
+    )
+
+    from ocr_engine_spark.operators.dedup import banded_pairs
+
+    longs = ArrayType(LongType())
+    schema = StructType([StructField("doc_id", LongType()),
+                         StructField("minhash", longs),
+                         StructField("sset", longs)])
+    sigs = spark.createDataFrame([
+        (1, [1, 2, 3, 4], [1, 2, 3]),
+        (2, [1, 2, 3, 4], [1, 2, 3, 4]),      # both bands = doc 1; J = 3/4
+        (3, None, [1, 2, 3]),                 # no signature: skipped
+        (4, [5, 6, 7, 8], [9, 10]),
+        (5, [5, 0, 0, 8], [9, 10]),           # J = 1 but no band matches 4
+        (6, [1, 2, 9, 9], [1, 20, 21, 22]),   # band 0 = doc 1; J = 1/6
+    ], schema)
+    got = [tuple(r) for r in banded_pairs(sigs, 4, 2, 0.75).collect()]
+    assert got == [(1, 2, 0.75)]
+
+
 def test_release_persisted_artifacts(spark):
     """Build-side caches registered by the LSH/ppjoin builders are released
     (and the registry drained) by the public cleanup handle."""
