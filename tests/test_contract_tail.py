@@ -49,3 +49,32 @@ def test_changed_queries_sit_inside_driver_window():
 
     violations = check()
     assert not violations, violations
+
+
+def test_lazy_import_is_tracked_by_name():
+    """An in-function package import is tracked through its binding, so a
+    unit depends on the imported name only, not on every unit of that
+    module (the whole-module fallback stays for mentions outside an AST
+    import, e.g. a docstring)."""
+    from tools.check_window import ModuleInfo, propagate_dirty
+
+    dedup_mod = "ocr_engine_spark.operators.dedup"
+    user = ModuleInfo(
+        "def mtime(d):\n"
+        f"    from {dedup_mod} import _table_mtime\n"
+        "    return _table_mtime(d, 'x')\n", ["ocr_engine_spark", "operators"])
+    assert user.star_deps == set()
+    assert user.bindings["_table_mtime"] == (dedup_mod, "_table_mtime")
+
+    dedup = ModuleInfo("def _table_mtime(d, n):\n    return 0.0\n\n"
+                       "def banded_pairs():\n    return 1\n",
+                       ["ocr_engine_spark", "operators"])
+    head = {"ocr_engine_spark.operators.user": user, dedup_mod: dedup}
+    other, _ = propagate_dirty(head, {dedup_mod: {"banded_pairs"}})
+    assert other["ocr_engine_spark.operators.user"] == set()
+    same, _ = propagate_dirty(head, {dedup_mod: {"_table_mtime"}})
+    assert same["ocr_engine_spark.operators.user"] == {"mtime"}
+
+    mention = ModuleInfo(f'"""See {dedup_mod}."""\n\ndef f():\n    return 1\n',
+                         ["ocr_engine_spark", "operators"])
+    assert mention.star_deps == {dedup_mod}

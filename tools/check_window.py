@@ -111,6 +111,8 @@ class ModuleInfo:
         self.attr_refs: dict[str, set[tuple[str, str]]] = {}
         self.bindings: dict[str, tuple[str, str | None]] = {}
         self.star_deps: set[str] = set()
+        # (local name, binding) of every in-function package import
+        self._lazy: list[tuple[str, tuple[str, str | None]]] = []
         self.parsed = False
         try:
             tree = ast.parse(text)
@@ -156,6 +158,10 @@ class ModuleInfo:
                 toplevel_dumps.append(ast.dump(node))
         if toplevel_dumps:
             self.units[TOPLEVEL] = "\n".join(toplevel_dumps)
+        # a lazy in-function import whose binding survived at module scope is
+        # tracked name-by-name like a top-level one
+        ast_import_targets |= {b[0] for local, b in self._lazy
+                               if self.bindings.get(local) == b}
         # dotted textual mentions not covered by an AST import: lazy
         # importlib strings, docstring references -> depend on all of them
         for dotted in set(_REF.findall(text)):
@@ -188,8 +194,9 @@ class ModuleInfo:
                 if isinstance(sub, ast.Import):
                     for a in sub.names:
                         if a.name.startswith(PKG):
-                            self.bindings[a.asname or a.name.split(".")[0]] \
-                                = (a.name, None)
+                            local = a.asname or a.name.split(".")[0]
+                            self.bindings[local] = (a.name, None)
+                            self._lazy.append((local, (a.name, None)))
                 else:
                     src = sub.module or ""
                     if sub.level:
@@ -201,8 +208,9 @@ class ModuleInfo:
                             if a.name == "*":
                                 self.star_deps.add(src)
                             else:
-                                self.bindings[a.asname or a.name] = (src,
-                                                                     a.name)
+                                local = a.asname or a.name
+                                self.bindings[local] = (src, a.name)
+                                self._lazy.append((local, (src, a.name)))
                 del pkg_parts_dummy
 
 
