@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ocr_engine_spark.operators.artifacts import write_once
+
 # planted duplicate conversations for the dedup contract query (the
 # q_exact_dedup pattern: SQL-constructible derivations both engines replay):
 # every conversation whose numeric suffix N has N % CONV_DUP_MOD ==
@@ -250,7 +252,7 @@ def _planted_assembled(spark: SparkSession, sf_dir: str, residue: int,
 
 
 # write-once assembled-plant corpus artifacts, keyed (sf_dir, kind, corpus
-# mtime) — the materialized_lsh_pairs registry pattern (operators/dedup.py)
+# mtime) by ``artifacts.write_once``
 _ASSEMBLED_ARTIFACT: dict[tuple, str] = {}
 
 
@@ -267,20 +269,11 @@ def materialized_planted_assembled(spark: SparkSession, sf_dir: str,
     including the same query's second bench rep and the sibling canonical
     row — scans the parquet.  (doc_id bigint, conv_id string, text string)
     round-trips parquet exactly, so consumers see identical documents."""
-    from ocr_engine_spark.operators.dedup import (
-        _table_mtime, artifact_tmpdir, evict_stale_artifacts,
-    )
-
-    key = (sf_dir, kind, _table_mtime(sf_dir, "documents"))
-    path = _ASSEMBLED_ARTIFACT.get(key)
-    if path is None:
-        evict_stale_artifacts(_ASSEMBLED_ARTIFACT, key)
-        build = {"truncated": _neardup_assembled,
-                 "extended": _neardup_extended_assembled}[kind]
-        path = artifact_tmpdir("ocr_engine_conv_asm_") + "/assembled.parquet"
-        build(spark, sf_dir).write.mode("overwrite").parquet(path)
-        _ASSEMBLED_ARTIFACT[key] = path
-    return spark.read.parquet(path)
+    build = {"truncated": _neardup_assembled,
+             "extended": _neardup_extended_assembled}[kind]
+    return spark.read.parquet(write_once(
+        _ASSEMBLED_ARTIFACT, sf_dir, (kind,), "ocr_engine_conv_asm_",
+        lambda path: build(spark, sf_dir).write.parquet(path)))
 
 
 def _neardup_assembled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,7 +365,7 @@ _CONV_PAIRS_ARTIFACT: dict[tuple, str] = {}
 
 def materialized_conv_pairs(spark: SparkSession, sf_dir: str,
                             kind: str) -> DataFrame:
-    """Write-once parquet artifact (``dedup.write_once_pairs``) of the banded
+    """Write-once parquet artifact (``artifacts.write_once``) of the banded
     md5-family MinHash-LSH verified pairs over the assembled plant corpus
     ``kind`` (the ``materialized_planted_assembled`` table).  First caller per
     (sf_dir, kind, corpus-mtime) runs the LSH chain and persists
@@ -380,17 +373,14 @@ def materialized_conv_pairs(spark: SparkSession, sf_dir: str,
     round-trip — and every later caller (the same query's second bench rep,
     the canonical end-product rows) scans the table instead of re-running
     signatures + banding + verification."""
-    from ocr_engine_spark.operators.dedup import (
-        _table_mtime, minhash_lsh_pairs, write_once_pairs,
-    )
+    from ocr_engine_spark.operators.dedup import minhash_lsh_pairs
 
-    key = (sf_dir, kind, _table_mtime(sf_dir, "documents"))
-    return write_once_pairs(
-        spark, _CONV_PAIRS_ARTIFACT, key, "ocr_engine_conv_pairs_",
-        lambda: minhash_lsh_pairs(
+    return spark.read.parquet(write_once(
+        _CONV_PAIRS_ARTIFACT, sf_dir, (kind,), "ocr_engine_conv_pairs_",
+        lambda path: minhash_lsh_pairs(
             materialized_planted_assembled(spark, sf_dir, kind),
             num_hashes=16, bands=8, k=3, jaccard_threshold=0.5,
-            family="md5"))
+            family="md5").write.parquet(path)))
 
 
 def q_conv_neardup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -414,7 +404,7 @@ def q_conv_neardup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: banded bucket join (never all-pairs), components over the
     sparse LSH edge set only, broadcast-size drop set at real dup rates; the
     assembled-corpus materialization is the same checkpoint a production run
-    writes anyway (the pairs-artifact pattern, operators/dedup.py).
+    writes anyway (``artifacts.write_once``).
     """
     return _lsh_canonical_survivors(spark, sf_dir, "truncated",
                                     keep_longest=False)

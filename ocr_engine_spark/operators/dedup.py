@@ -23,6 +23,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+# the registry handles stay importable from here for the bench harnesses
+from ocr_engine_spark.operators.artifacts import (  # noqa: F401
+    _persist_tracked, persisted_artifact_count, release_persisted_artifacts,
+    write_once,
+)
 from ocr_engine_spark.operators.relational import load
 
 LONG_MAX = (1 << 63) - 1
@@ -34,61 +39,6 @@ LONG_MAX = (1 << 63) - 1
 PLANT_MOD = 20
 PLANT_RESIDUE = 7
 PLANT_OFFSET = 1_000_000
-
-# Persisted build-side artifacts (LSH signatures, ppjoin prefixes/sets): the
-# builders return LAZY DataFrames, so there is no natural in-function unpersist
-# point — the cache must outlive the call and be released by the caller.  Every
-# internal persist registers here; sessions that run many dedup queries (the
-# bench isolates per query with spark.catalog.clearCache()) should call
-# release_persisted_artifacts() after consuming a result to drop the blocks.
-_PERSISTED: list[DataFrame] = []
-
-
-# Soft cap on live build-side caches: long-lived sessions that never call
-# release_persisted_artifacts() (notebooks, the streaming job reusing dedup
-# builders) would otherwise pin cache blocks without bound.  Crossing the cap
-# evicts the OLDEST artifact — by then its consumer has run (builders persist
-# right before the consuming self-join materializes), so dropping it costs a
-# recompute at worst, never correctness.
-_PERSISTED_CAP = 16
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
-    while len(_PERSISTED) > _PERSISTED_CAP:
-        try:
-            _PERSISTED.pop(0).unpersist()
-        except Exception:  # stopped session: registry entry is already dead
-            pass
-    return df
-
-
-def persisted_artifact_count() -> int:
-    """Current registry depth — snapshot before a scoped block, then pass it
-    to ``release_persisted_artifacts(keep=...)`` to release only the artifacts
-    that block created (never another caller's caches)."""
-    return len(_PERSISTED)
-
-
-def release_persisted_artifacts(keep: int = 0) -> int:
-    """Unpersist dedup build-side artifacts cached by earlier calls, newest
-    first, down to registry depth ``keep`` (0 = release everything).
-
-    Returns the number of frames released.  Safe to call at any time: consuming
-    a returned DataFrame after release only loses the cache, not correctness.
-    """
-    n = 0
-    while len(_PERSISTED) > keep:
-        try:
-            _PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to release
-            pass
-    return n
-
 
 def spread(df: DataFrame, factor: int = 2) -> DataFrame:
     """Spread a small single-file scan across all cores before expression-heavy
@@ -337,87 +287,8 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 16, bands: int = 8,
     return banded_pairs(sigs, num_hashes, bands, jaccard_threshold)
 
 
-def _table_mtime(sf_dir: str, name: str) -> float:
-    """Cache-invalidation key: mtime of the backing parquet (file or directory).
-    Shared by every per-process artifact cache (dedup pairs, trained centroids,
-    stream-parity sources) so corpus rewrites invalidate them all the same way."""
-    import os
-
-    try:
-        return os.path.getmtime(f"{sf_dir}/{name}.parquet")
-    except OSError:
-        return -1.0
-
-
-# (sf_dir, threshold, family, table mtime) -> parquet path of the pairs table
+# (sf_dir, threshold, family, documents mtime) -> parquet path of the pairs
 _PAIRS_ARTIFACT: dict[tuple, str] = {}
-
-# every artifact tmpdir any per-process cache creates, removed at interpreter
-# exit so contract/bench runs leave nothing behind in /tmp
-_ARTIFACT_DIRS: list[str] = []
-_ATEXIT_REGISTERED = False  # dedicated flag: list emptiness is not a proxy
-# (tests drain the list via remove(), which would re-register the hook)
-
-
-def artifact_tmpdir(prefix: str) -> str:
-    """``tempfile.mkdtemp`` registered for atexit removal — the shared temp
-    policy for per-process parquet artifacts (LSH pairs, stream-parity
-    sources): live for the process, gone with it."""
-    import atexit
-    import tempfile
-
-    global _ATEXIT_REGISTERED
-    d = tempfile.mkdtemp(prefix=prefix)
-    if not _ATEXIT_REGISTERED:
-        atexit.register(_cleanup_artifact_dirs)
-        _ATEXIT_REGISTERED = True
-    _ARTIFACT_DIRS.append(d)
-    return d
-
-
-def _cleanup_artifact_dirs() -> None:
-    import shutil
-
-    while _ARTIFACT_DIRS:
-        shutil.rmtree(_ARTIFACT_DIRS.pop(), ignore_errors=True)
-
-
-def evict_stale_artifacts(cache: dict, key: tuple) -> None:
-    """Drop cache ENTRIES superseded by ``key`` (same key except the trailing
-    mtime component) so the registry cannot grow one entry per corpus
-    rewrite.  The superseded dirs themselves are deliberately NOT deleted
-    here: a caller may still hold a lazy DataFrame reading the old path (a
-    stale-but-consistent read), and deleting under it would turn that into a
-    runtime FileNotFound.  The dirs stay registered in _ARTIFACT_DIRS and
-    are reclaimed at interpreter exit — within-process growth is bounded by
-    the number of corpus rewrites, which is ~0 outside tests."""
-    for k in [k for k in cache if k[:-1] == key[:-1] and k != key]:
-        cache.pop(k)
-
-
-def write_once_pairs(spark: SparkSession, cache: dict, key: tuple,
-                     prefix: str, build) -> DataFrame:
-    """Read the pairs parquet cached in ``cache`` under ``key``; on a miss,
-    write ``build()`` to a new ``artifact_tmpdir(prefix)`` first.
-
-    The build's own signature caches are released once the parquet is
-    written, and only those (``persisted_artifact_count`` /
-    ``release_persisted_artifacts(keep=)``): a global release here would also
-    unpersist unrelated builders a caller still holds.  Entries superseded by
-    ``key`` (same key, older corpus mtime) are evicted first.  (doc_id bigint,
-    doc_id bigint, jaccard double) round-trips parquet exactly, so consumers
-    see bit-identical pairs either way."""
-    path = cache.get(key)
-    if path is None:
-        evict_stale_artifacts(cache, key)
-        mark = persisted_artifact_count()
-        try:
-            path = artifact_tmpdir(prefix) + "/pairs.parquet"
-            build().write.mode("overwrite").parquet(path)
-        finally:
-            release_persisted_artifacts(keep=mark)
-        cache[key] = path
-    return spark.read.parquet(path)
 
 
 def materialized_lsh_pairs(spark: SparkSession, sf_dir: str,
@@ -430,19 +301,19 @@ def materialized_lsh_pairs(spark: SparkSession, sf_dir: str,
     rebuilds the signature -> band -> bucket-join -> verify subtree per
     consumer.  This mirrors that: the first caller per (sf_dir, threshold,
     family, table-mtime) materializes the pairs to parquet
-    (``write_once_pairs``); ``q_minhash_lsh_pairs``, ``q_dedup_clusters`` and
-    ``q_dedup_canonical`` all consume the artifact, so a session running the
-    whole suite computes the LSH pipeline exactly once.  Keying on the table
-    mtime invalidates the artifact if the corpus under ``sf_dir`` changes
-    within a process.
+    (``artifacts.write_once``); ``q_minhash_lsh_pairs``, ``q_dedup_clusters``
+    and ``q_dedup_canonical`` all consume the artifact, so a session running
+    the whole suite computes the LSH pipeline exactly once.  (doc_id bigint,
+    doc_id bigint, jaccard double) round-trips parquet exactly, so consumers
+    see bit-identical pairs either way.
     """
-    key = (sf_dir, jaccard_threshold, family, _table_mtime(sf_dir, "documents"))
-    return write_once_pairs(spark, _PAIRS_ARTIFACT, key, "ocr_engine_lsh_pairs_",
-                            lambda: minhash_lsh_pairs(
-                                spread(load(spark, sf_dir, "documents")
-                                       .select("doc_id", "text")),
-                                jaccard_threshold=jaccard_threshold,
-                                family=family))
+    return spark.read.parquet(write_once(
+        _PAIRS_ARTIFACT, sf_dir, (jaccard_threshold, family),
+        "ocr_engine_lsh_pairs_",
+        lambda path: minhash_lsh_pairs(
+            spread(load(spark, sf_dir, "documents").select("doc_id", "text")),
+            jaccard_threshold=jaccard_threshold, family=family,
+        ).write.parquet(path)))
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import broadcast
 
+from ocr_engine_spark.operators.artifacts import _table_mtime
 from ocr_engine_spark.operators.relational import load
 
 
@@ -164,12 +165,6 @@ def train_centroids(corpus: DataFrame, k: int = 8, iterations: int = 3,
 _TRAINED_CACHE: dict = {}
 
 
-def _emb_mtime(sf_dir: str) -> float:
-    from ocr_engine_spark.operators.dedup import _table_mtime
-
-    return _table_mtime(sf_dir, "embeddings")
-
-
 def trained_centroids(spark: SparkSession, sf_dir: str, k: int = 8,
                       iterations: int = 3) -> DataFrame:
     """Trained centroids for the contract embeddings table, cached per (sf_dir,
@@ -179,7 +174,7 @@ def trained_centroids(spark: SparkSession, sf_dir: str, k: int = 8,
     mtime key invalidates the codebook if the table under ``sf_dir`` is
     rewritten within a process; an UNCHANGED path+mtime is assumed to mean
     unchanged data (parquet writers bump mtime on rewrite)."""
-    key = (sf_dir, k, iterations, _emb_mtime(sf_dir))
+    key = (sf_dir, k, iterations, _table_mtime(sf_dir, "embeddings"))
     if key not in _TRAINED_CACHE:
         emb = load(spark, sf_dir, "embeddings")
         cents = train_centroids(emb, k=k, iterations=iterations)

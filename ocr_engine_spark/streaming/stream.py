@@ -14,6 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocr_engine_spark.config import DEFAULT_CONFIG, EngineConfig
+from ocr_engine_spark.operators.artifacts import write_once
 from ocr_engine_spark.operators.extract import extract_transcripts
 
 TRANSCRIPTS_DDL = ("conv_id string, turn_idx int, role string, text string, "
@@ -156,9 +157,9 @@ def session_metrics_stream(stream: DataFrame,
     )
 
 
-# per-process synthesized stream sources, keyed (sf_dir, documents mtime) so a
-# corpus rewrite under sf_dir invalidates the synthesized source like every
-# other artifact cache (dedup._table_mtime)
+# per-process synthesized stream sources, keyed (sf_dir, documents mtime) by
+# ``artifacts.write_once`` so a corpus rewrite under sf_dir invalidates the
+# synthesized source like every other artifact cache
 _STREAM_PARITY_DIRS: dict[tuple, str] = {}
 
 
@@ -191,21 +192,18 @@ def ensure_stream_parity_source(spark: SparkSession, sf_dir: str) -> str:
     cache entry (the old dir survives until exit so held readers keep
     working)."""
     from ocr_engine_spark.operators.dedup import (
-        PLANT_MOD, PLANT_OFFSET, PLANT_RESIDUE, _table_mtime, artifact_tmpdir,
-        evict_stale_artifacts)
+        PLANT_MOD, PLANT_OFFSET, PLANT_RESIDUE)
 
-    cache_key = (sf_dir, _table_mtime(sf_dir, "documents"))
-    if cache_key not in _STREAM_PARITY_DIRS:
-        evict_stale_artifacts(_STREAM_PARITY_DIRS, cache_key)
+    def write(src: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         base = _single_turn_shape(docs, F.col("doc_id"))
         planted = _single_turn_shape(
             docs.where(F.col("doc_id") % PLANT_MOD == PLANT_RESIDUE),
             F.col("doc_id") + PLANT_OFFSET)
-        src = artifact_tmpdir("ocr_engine_stream_parity_") + "/transcripts"
         base.unionByName(planted).repartition(8).write.parquet(src)
-        _STREAM_PARITY_DIRS[cache_key] = src
-    return _STREAM_PARITY_DIRS[cache_key]
+
+    return write_once(_STREAM_PARITY_DIRS, sf_dir, (),
+                      "ocr_engine_stream_parity_", write)
 
 
 def q_stream_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,18 +275,13 @@ def ensure_stream_window_source(spark: SparkSession, sf_dir: str) -> str:
     over four hours (``doc_id % 240`` minutes past the origin), so tumbling
     1-hour windows receive rows from MULTIPLE micro-batches in arbitrary
     event-time order — the state-update path, not a one-batch fold."""
-    from ocr_engine_spark.operators.dedup import (
-        _table_mtime, artifact_tmpdir, evict_stale_artifacts)
-
-    cache_key = (sf_dir, _table_mtime(sf_dir, "documents"))
-    if cache_key not in _STREAM_WINDOW_DIRS:
-        evict_stale_artifacts(_STREAM_WINDOW_DIRS, cache_key)
+    def write(src: str) -> None:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        src = artifact_tmpdir("ocr_engine_stream_window_") + "/transcripts"
         (_single_turn_shape(docs, F.col("doc_id"), ts_col=F.expr(WINDOW_TS_SQL))
          .repartition(8).write.parquet(src))
-        _STREAM_WINDOW_DIRS[cache_key] = src
-    return _STREAM_WINDOW_DIRS[cache_key]
+
+    return write_once(_STREAM_WINDOW_DIRS, sf_dir, (),
+                      "ocr_engine_stream_window_", write)
 
 
 def q_stream_window_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,13 +333,9 @@ def ensure_stream_progress_source(spark: SparkSession, sf_dir: str) -> str:
     8-word chunks (``chunk_documents`` — deterministic, SQL-replayable), so
     per-conversation state genuinely accumulates across turns AND across
     micro-batches (the single-turn parity sources cannot exercise that)."""
-    from ocr_engine_spark.operators.dedup import (
-        _table_mtime, artifact_tmpdir, chunk_documents,
-        evict_stale_artifacts)
+    from ocr_engine_spark.operators.dedup import chunk_documents
 
-    cache_key = (sf_dir, _table_mtime(sf_dir, "documents"))
-    if cache_key not in _STREAM_PROGRESS_DIRS:
-        evict_stale_artifacts(_STREAM_PROGRESS_DIRS, cache_key)
+    def write(src: str) -> None:
         docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
                 .select("doc_id", "text"))
         tx = chunk_documents(docs).select(
@@ -356,10 +345,10 @@ def ensure_stream_progress_source(spark: SparkSession, sf_dir: str) -> str:
             F.col("chunk").alias("text"),
             F.lit(None).cast("string").alias("tool"),
             F.expr("timestamp'2026-01-01 00:00:00'").alias("ts"))
-        src = artifact_tmpdir("ocr_engine_stream_progress_") + "/transcripts"
         tx.repartition(8).write.parquet(src)
-        _STREAM_PROGRESS_DIRS[cache_key] = src
-    return _STREAM_PROGRESS_DIRS[cache_key]
+
+    return write_once(_STREAM_PROGRESS_DIRS, sf_dir, (),
+                      "ocr_engine_stream_progress_", write)
 
 
 def q_stream_progress_parity(spark: SparkSession, sf_dir: str) -> DataFrame:

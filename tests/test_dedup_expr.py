@@ -307,7 +307,7 @@ def test_release_persisted_artifacts(spark):
     (and the registry drained) by the public cleanup handle."""
     from pyspark import StorageLevel
 
-    from ocr_engine_spark.operators import dedup
+    from ocr_engine_spark.operators import artifacts, dedup
 
     docs = spark.createDataFrame(pd.DataFrame({
         "doc_id": [1, 2], "source": ["s", "s"],
@@ -315,11 +315,11 @@ def test_release_persisted_artifacts(spark):
     }))
     pairs = dedup.minhash_lsh_pairs(docs, jaccard_threshold=0.5, family="xxhash64")
     pairs.count()
-    assert len(dedup._PERSISTED) >= 1
-    cached = list(dedup._PERSISTED)
+    assert len(artifacts._PERSISTED) >= 1
+    cached = list(artifacts._PERSISTED)
     n = dedup.release_persisted_artifacts()
     assert n == len(cached)
-    assert dedup._PERSISTED == []
+    assert artifacts._PERSISTED == []
     assert all(df.storageLevel == StorageLevel.NONE for df in cached)
 
 

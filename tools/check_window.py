@@ -33,7 +33,9 @@ back to conservative whole-module dirtiness:
   unit referencing that name.
 
 Run directly (``python tools/check_window.py``) or via the pytest wrapper in
-``tests/test_contract_tail.py``; exit code 1 on violation.
+``tests/test_contract_tail.py``; exit code 1 on violation.  On success the
+direct run prints the dirty-query count and how many window slots still hold
+clean queries (the headroom of the next rotation).
 """
 
 from __future__ import annotations
@@ -434,6 +436,10 @@ def check(verbose: bool = False) -> list[str]:
             print(f"[window] overflow (tier 2, tail-suite covered): {name} "
                   f"at position {pos + 1} — window saturated with "
                   f"{n_dirty} dirty queries")
+    if verbose and not violations:
+        clean = sum(1 for n in window_names if not is_dirty(qs[n]))
+        print(f"[window] {n_dirty} dirty queries; {clean} clean window "
+              "slots left for the next rotation")
     return violations
 
 
