@@ -1,4 +1,4 @@
-"""Driver-contract regression: every queries() entry in the driver's window runs
+"""Contract regression: every queries() entry in the first-50 check window runs
 and matches its DuckDB oracle at sf0.001 (tests/test_contract_tail.py checks the
 entries past the window; the full sf0.01 sweep lives in
 tools/check_contract.py)."""
@@ -13,9 +13,27 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 import __spark_entry__ as _entry  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
-DRIVER_WINDOW = 50
-# the driver's check window; tests/test_contract_tail.py covers the rest
-WINDOW = list(_entry.queries())[:DRIVER_WINDOW]
+WINDOW_SIZE = 50
+# the first-50 check window of queries(); tests/test_contract_tail.py covers
+# the rest
+WINDOW = list(_entry.queries())[:WINDOW_SIZE]
+# rows this suite has always oracle-checked by id: they keep their test ids
+# here wherever a rotation of queries() places them
+PINNED = [
+    "extract_documents", "strip_ratio_by_source", "pricing_summary",
+    "top_revenue_orders", "region_revenue", "parts_with_lineitems",
+    "customers_without_orders", "event_windows", "hourly_event_rollup",
+    "asof_last_order", "event_range_page", "token_stats", "lang_id",
+    "quality_score", "shingle_count", "fingerprint", "exact_dedup",
+    "ngram_jaccard_pairs", "embedding_topk", "ivf_assign", "ivf_topk",
+    "embedding_neardup", "binary_features", "manifest_extract", "explode_parts",
+    "html_extract", "markdown_extract", "kmeans_centroids", "media_decode",
+    "event_sessions", "event_rolling", "tfidf", "dedup_canonical",
+    "tool_dispatch_extract", "stream_dedup_parity",
+    "conv_assemble", "conv_dedup", "span_svg", "embedding_neardup_ivf",
+    "source_mix", "conv_assemble_capped", "multi_source_union",
+]
+CHECKED = WINDOW + [n for n in PINNED if n not in WINDOW]
 
 
 @pytest.fixture(scope="module")
@@ -52,7 +70,7 @@ def test_window_and_tail_cover_every_query_once():
     assert set(ids) == set(_entry.queries())
 
 
-@pytest.mark.parametrize("name", WINDOW)
+@pytest.mark.parametrize("name", CHECKED)
 def test_query_matches_oracle(spark, entrymod, duck, name):
     from tools.check_contract import compare
 
@@ -60,6 +78,12 @@ def test_query_matches_oracle(spark, entrymod, duck, name):
     want = duck.execute(entrymod.oracle_sql()[name]).df()
     problems = compare(name, got, want)
     assert not problems, problems
+
+
+@pytest.mark.parametrize("name", ["simhash"])
+def test_rows_only_queries_run(spark, entrymod, name):
+    df = entrymod.queries()[name](spark, SF_DIR)
+    assert df.count() >= 0
 
 
 def test_lsh_pairs_artifact_written_once(spark, entrymod):

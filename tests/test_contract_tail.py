@@ -25,13 +25,15 @@ DRIVER_WINDOW = 50
 
 _all = list(entry.queries())
 TAIL = _all[DRIVER_WINDOW:]
+# rows rotated from the tail into the window keep their tail test ids
+ROTATED_IN = ["kmeans_centroids", "ivf_assign", "ivf_topk", "ivf_topk_multiprobe"]
 
 
 def test_tail_is_nonempty_iff_contract_exceeds_window():
     assert len(_all) > DRIVER_WINDOW  # if this shrinks, the suite is vacuous
 
 
-@pytest.mark.parametrize("name", TAIL)
+@pytest.mark.parametrize("name", TAIL + [n for n in ROTATED_IN if n not in TAIL])
 def test_tail_query_matches_oracle(spark, name):
     got = entry.queries()[name](spark, SF_DIR).toPandas()
     con = duck_connect(SF_DIR)
