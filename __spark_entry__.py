@@ -103,7 +103,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "shingle_count": text_analysis.q_shingle_count,
         "fingerprint": text_analysis.q_fingerprint,
         "vocab_stats": text_analysis.q_vocab_stats,
-        "tfidf": text_analysis.q_tfidf,
+        "sequence_pack": text_analysis.q_sequence_pack,
         "pii_redact": text_analysis.q_pii_redact,
         "contamination_check": text_analysis.q_contamination_check,
         # — deduplication —
@@ -124,7 +124,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stratified_sample": text_analysis.q_stratified_sample,
         "repetition_stats": text_analysis.q_repetition_stats,
         "token_budget": text_analysis.q_token_budget,
-        "sequence_pack": text_analysis.q_sequence_pack,
+        "tfidf": text_analysis.q_tfidf,
         "simhash": dedup.q_simhash,
         "simhash_neardup": dedup.q_simhash_neardup,
         "embedding_topk_blas": similarity.q_embedding_topk_blas,

@@ -84,7 +84,8 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
     Stage counts cost one extra aggregation over the ASSEMBLED frame (one row
     per conversation — orders of magnitude smaller than the turn corpus) and
     one over the written packed manifest; the turn-level corpus is scanned
-    once (plus once per resumed wave in checkpoint mode).
+    once (in checkpoint mode: once per wave, plus one profile scan of its
+    ``conv_id``/``turn_idx`` columns).
     """
     import pandas as pd
     from pyspark import StorageLevel
@@ -97,10 +98,9 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
     from ocr_engine_spark.operators.conversations import (
         assemble_conversations, dedup_conversations, truncate_to_budget,
     )
-    from ocr_engine_spark.operators.extract import (
-        AUTO, TARGET_PARTITION_BYTES, extract_transcripts,
-    )
+    from ocr_engine_spark.operators.extract import AUTO, extract_transcripts
     from ocr_engine_spark.operators.text_analysis import greedy_pack_assignment
+    from ocr_engine_spark.worker import skip_zip_rereads
 
     if quality_filter and quality_ref_mod < 2:
         # checked before any Spark action, so a degenerate config cannot fail
@@ -152,15 +152,12 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
                 cols.append((F.pmod(F.xxhash64("conv_id"),
                                     F.lit(quality_ref_mod)) == 0)
                             .alias("is_ref"))
-            # every Arrow Python task pays a fixed setup (0.1-0.25 s measured
-            # on Spark 4.1, most of it PySpark re-reading pyspark.zip's
-            # directory), so the pass is sized by volume, not by shuffle
-            # partitions: a document holds at most char_budget characters,
-            # and one task takes about TARGET_PARTITION_BYTES of them (a no-op
-            # once the corpus outgrows the shuffle partitions)
-            per_task = max(1, TARGET_PARTITION_BYTES // max(1, char_budget))
-            tasks = max(1, -(-n_convs // per_task))
-            feats = fx.doc_features(surv.select(*cols).coalesce(tasks),
+            # sized by the dedup shuffle's partitions, which AQE coalesces:
+            # with the per-task zip re-read gone (worker.skip_zip_rereads),
+            # coalescing the pass by volume no longer paid (pipeline_full on
+            # a 4-core host, 8 alternating pairs in one session: median
+            # 6.96 s with, 6.95 s without)
+            feats = fx.doc_features(surv.select(*cols),
                                     signature=near_dedup,
                                     bigrams=quality_filter)
             feats.persist(StorageLevel.MEMORY_AND_DISK)
@@ -261,6 +258,7 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
         ])
 
         def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+            skip_zip_rereads()
             pdf = pdf.sort_values("conv_id").reset_index(drop=True)
             seqs, offs = greedy_pack_assignment(pdf["n_tokens"], seq_budget)
             pdf["seq_id"] = pd.Series(seqs, dtype="int32")

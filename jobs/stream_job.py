@@ -19,9 +19,14 @@ deterministic ``batch_id`` via dynamic partition OVERWRITE inside ``foreachBatch
 id, the overwrite makes redelivery idempotent, and the checkpointLocation WAL
 guarantees no source file is consumed twice.  Kill the process at any point and
 re-run the same command: it resumes from the checkpoint.  Per-batch lineage
-metrics (turns, spans, strip ratio) are written AFTER the batch's data by
-``operators.checkpoint.commit_by_key``, the same data-then-metrics commit the
-checkpointed batch job runs per wave of buckets.
+metrics (conversations, turns, spans, strip ratio) are observed on the batch's
+data write and written AFTER it, as one literal row, by
+``operators.checkpoint.commit_by_key``: the same data-then-metrics commit the
+checkpointed batch job runs per wave of buckets.  A micro-batch is one
+data-write job plus one single-task metrics write; nothing is persisted and
+the written data is never read back.  The batch's distinct conversations are
+observed as ``size(collect_set(conv_id))``, which ``--max-files-per-trigger``
+bounds.
 """
 
 from __future__ import annotations
@@ -45,7 +50,7 @@ def write_batch(out_dir: str):
 
     def fn(batch_df, batch_id: int):
         commit_by_key(batch_df.withColumn("batch_id", F.lit(int(batch_id))),
-                      "batch_id", data_path, metrics_path)
+                      "batch_id", [int(batch_id)], data_path, metrics_path)
 
     return fn
 

@@ -10,11 +10,19 @@ Protocol (SURVEY.md §4.2.3):
 - A bucket is DONE iff its metrics row (status='done') exists; metrics are written
   AFTER the bucket's data (``commit_by_key``, the one data-then-metrics commit
   shared with the stream job's micro-batches), so a crash between the two re-runs
-  that bucket.
+  that bucket.  The metrics are observed on the data write itself
+  (``DataFrame.observe``) and written from the observation as literal rows:
+  nothing is persisted and the fresh output is never read back.
 - Resume = anti-join pending buckets against the done-set — only undone buckets are
   recomputed (left_anti on p).  Metrics rows record ``n_buckets`` and the dispatch
   policy; a resume under a different value of either raises instead of mixing
   bucket layouts or dispatch policies in one table.
+- One per-run profile (``bucket_profile``) counts each pending bucket's
+  conversations and turns from ``conv_id``/``turn_idx`` alone, in the JVM.
+  Empty buckets are skipped (they never get a metrics row, so a resume skips
+  them again), the profile supplies each bucket's exact ``conv_ids``, and a
+  wave whose written turns differ from the profile raises
+  ``ProfileMismatchError`` before its metrics write.
 - Spark's job commit is all-or-nothing, so durability granularity == job
   granularity: ``wave_buckets`` splits a run into per-wave data+metrics commits
   (a crash loses at most one in-flight wave; see run_extraction's docstring).
@@ -30,8 +38,7 @@ import json
 import os
 import time
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ocr_engine_spark.config import DEFAULT_CONFIG, EngineConfig
 from ocr_engine_spark.operators.extract import extract_transcripts, salted_key
@@ -91,44 +98,101 @@ METRICS_COLUMNS = ("run_id", "conv_ids", "turns", "spans", "strip_ratio",
                    "started", "finished", "status", "dispatch", "n_buckets")
 
 
-def commit_by_key(df: DataFrame, key: str, data_path: str, metrics_path: str,
-                  tags: dict | None = None) -> None:
+class ProfileMismatchError(RuntimeError):
+    """A wave wrote a different number of turns to a bucket than the run's
+    profile counted in it (the input changed between the two reads).  Raised
+    before the wave's metrics write, so a resume redoes the wave."""
+
+
+def bucket_profile(transcripts: DataFrame, n_buckets: int,
+                   buckets: list[int]) -> dict[int, tuple[int, int]]:
+    """``{p: (conv_ids, turns)}`` for the non-empty buckets among ``buckets``.
+
+    One aggregation that reads only ``conv_id`` and ``turn_idx`` and runs in
+    the JVM; the driver holds at most ``n_buckets`` rows.  ``conv_ids`` is
+    exact (``countDistinct``), whatever the size of the run.
+    """
+    bucketed = with_bucket(transcripts.select("conv_id", "turn_idx"),
+                           n_buckets)
+    if len(buckets) < n_buckets:
+        bucketed = bucketed.where(F.col("p").isin(buckets))
+    rows = (bucketed.groupBy("p")
+            .agg(F.countDistinct("conv_id").alias("conv_ids"),
+                 F.count(F.lit(1)).alias("turns"))
+            .collect())
+    return {r["p"]: (r["conv_ids"], r["turns"]) for r in rows}
+
+
+def commit_by_key(df: DataFrame, key: str, keys: list[int], data_path: str,
+                  metrics_path: str, tags: dict | None = None,
+                  profiled: dict[int, tuple[int, int]] | None = None) -> None:
     """The one data-then-metrics commit, shared by the checkpoint's waves and
     the stream job's micro-batches (the reference writes each result and its
     manifest row in one place, reference run.py:91-118).
 
-    Persist ``df``, overwrite its data partitions by ``key``, then overwrite
-    its per-key metrics rows (status='done' plus ``tags``: other
-    ``METRICS_COLUMNS`` as constants, or constant Columns such as
-    ``F.current_timestamp()``, resolved after the data commit).  The metrics
-    are the done-markers, strictly after the data, so a crash between the two
-    redoes the key.  The data write and the metrics share one
-    materialization: the input is scanned once and the fresh output is never
-    read back.  DISK_ONLY, not MEMORY_AND_DISK: memory caching unrolls a
-    whole partition into storage memory and OOMs small heaps on fat buckets
-    and on the fat micro-batches of an ``availableNow`` backfill, while disk
-    blocks stream out incrementally (measured: a 1.1M-turn / 4-bucket run
-    OOMs a default 1g driver with memory caching and passes with disk-only).
+    Overwrite ``df``'s data partitions by ``key`` (whose values are among
+    ``keys``), observing per key value the turns (``count_if``), ``sum`` of
+    ``n_spans`` and ``avg`` of ``strip_ratio`` on that one write.  Then
+    overwrite one metrics row per key value that has turns (status='done'
+    plus ``tags``: other ``METRICS_COLUMNS`` as constants, or constant
+    Columns such as ``F.current_timestamp()``, resolved after the data
+    commit), built from the observation as literals in a single-task write.
+    The metrics are the done-markers, strictly after the data, so a crash
+    between the two redoes the key.  Nothing is persisted and the fresh
+    output is never read back.
+
+    ``profiled`` maps key values to ``(conv_ids, turns)`` counted before the
+    write (``bucket_profile``): ``conv_ids`` comes from it, and observed
+    turns that differ from it raise ``ProfileMismatchError`` before the
+    metrics write.  Without it ``conv_ids`` is observed as
+    ``size(collect_set(conv_id))``, which holds a key's distinct ids in
+    memory: fine for a micro-batch, which ``maxFilesPerTrigger`` bounds, but
+    not for an unbounded wave.  Each key value adds three or four aggregates
+    to every row of the write, so keep ``keys`` to a wave's buckets.
     """
     tags = tags or {}
-    df.persist(StorageLevel.DISK_ONLY)
-    try:
-        overwrite_partitions(df, data_path, key)
-        metrics = (
-            df.groupBy(key)
-            .agg(
-                F.countDistinct("conv_id").alias("conv_ids"),
-                F.count(F.lit(1)).alias("turns"),
-                F.sum("n_spans").cast("long").alias("spans"),
-                F.avg("strip_ratio").alias("strip_ratio"),
-            )
-            .withColumn("status", F.lit("done"))
-            .withColumns({c: F.lit(v) for c, v in tags.items()})
-        )
-        layout = [c for c in METRICS_COLUMNS if c in metrics.columns]
-        overwrite_partitions(metrics.select(*layout, key), metrics_path, key)
-    finally:
-        df.unpersist()
+    exprs = []
+    for i, k in enumerate(keys):
+        on = F.col(key) == k
+        exprs += [F.count_if(on).alias(f"turns{i}"),
+                  F.sum(F.when(on, F.col("n_spans"))).alias(f"spans{i}"),
+                  F.avg(F.when(on, F.col("strip_ratio"))).alias(f"ratio{i}")]
+        if profiled is None:
+            exprs.append(F.size(F.collect_set(F.when(on, F.col("conv_id"))))
+                         .alias(f"convs{i}"))
+    seen = Observation()
+    overwrite_partitions(df.observe(seen, *exprs), data_path, key)
+    got = seen.get
+
+    rows = []
+    for i, k in enumerate(keys):
+        turns = got[f"turns{i}"]
+        if profiled is None:
+            conv_ids = got[f"convs{i}"]
+        else:
+            conv_ids, want = profiled[k]
+            if turns != want:
+                raise ProfileMismatchError(
+                    f"{key}={k}: the write saw {turns} turns but the run's "
+                    f"profile counted {want}; the input changed during the "
+                    "run, so this wave stays undone and a resume redoes it")
+        if turns:
+            rows.append(F.struct(
+                F.lit(conv_ids).cast("bigint").alias("conv_ids"),
+                F.lit(turns).cast("bigint").alias("turns"),
+                F.lit(got[f"spans{i}"]).cast("bigint").alias("spans"),
+                F.lit(got[f"ratio{i}"]).cast("double").alias("strip_ratio"),
+                F.lit(k).cast(df.schema[key].dataType).alias(key)))
+    if not rows:
+        return
+    metrics = (
+        df.sparkSession.range(1, numPartitions=1)
+        .select(F.inline(F.array(*rows)))
+        .withColumn("status", F.lit("done"))
+        .withColumns({c: F.lit(v) for c, v in tags.items()})
+    )
+    layout = [c for c in METRICS_COLUMNS if c in metrics.columns]
+    overwrite_partitions(metrics.select(*layout, key), metrics_path, key)
 
 
 def _dispatch_desc(dispatch_tool_json: bool,
@@ -185,6 +249,11 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     done = done_buckets(spark, metrics_path, expect=tags)
     bucketed = with_bucket(transcripts, n_buckets)
     pending_ids = [p for p in range(n_buckets) if p not in done]
+    # empty buckets never get a metrics row: each run profiles them again
+    # and skips them
+    profile = (bucket_profile(transcripts, n_buckets, pending_ids)
+               if pending_ids else {})
+    pending_ids = [p for p in pending_ids if p in profile]
     if wave_buckets and wave_buckets < len(pending_ids):
         waves = [pending_ids[i:i + wave_buckets]
                  for i in range(0, len(pending_ids), wave_buckets)]
@@ -194,8 +263,8 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
         pending = bucketed
         if len(wave) < n_buckets:
             pending = bucketed.where(F.col("p").isin(wave))
-        _run_wave(pending, len(wave), data_path, metrics_path,
-                  {"run_id": run_id, **tags}, cfg, passthrough,
+        _run_wave(pending, {p: profile[p] for p in wave}, data_path,
+                  metrics_path, {"run_id": run_id, **tags}, cfg, passthrough,
                   dispatch_tool_json, tool_kind_map)
 
     ran = n_buckets - len(done)
@@ -209,21 +278,21 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     }
 
 
-def _run_wave(pending: DataFrame, n_partitions: int, data_path: str,
-              metrics_path: str, tags: dict, cfg: EngineConfig,
+def _run_wave(pending: DataFrame, profiled: dict[int, tuple[int, int]],
+              data_path: str, metrics_path: str, tags: dict, cfg: EngineConfig,
               passthrough: tuple[str, ...], dispatch_tool_json: bool,
               tool_kind_map: dict[str, str] | None) -> None:
-    """One durable commit unit: extract `pending`, repartitioned by bucket, then
-    commit its data and its metrics rows."""
+    """One durable commit unit: extract `pending` (the rows of the profiled,
+    non-empty buckets ``profiled``), repartitioned by bucket, then commit its
+    data and its metrics rows."""
     started = time.time()
-    if pending.isEmpty():  # short-circuit probe, no extra full-count job
-        return
     extracted = extract_transcripts(
-        pending.repartition(n_partitions, "p"), cfg,
+        pending.repartition(len(profiled), "p"), cfg,
         passthrough=(*passthrough, "p"),
         dispatch_tool_json=dispatch_tool_json, tool_kind_map=tool_kind_map)
     # `extracted` holds only pending buckets, so every metrics row is new
     commit_by_key(
-        extracted, "p", data_path, metrics_path,
+        extracted, "p", list(profiled), data_path, metrics_path,
         tags={**tags, "started": F.lit(started).cast("timestamp"),
-              "finished": F.current_timestamp()})
+              "finished": F.current_timestamp()},
+        profiled=profiled)

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ocr_engine_spark.kernel import xxh64
 from ocr_engine_spark.operators.text_analysis import LM_MIN_COUNT
+from ocr_engine_spark.worker import skip_zip_rereads
 
 # the pipeline's near-dedup geometry: 16 MinHash values of word 3-shingles in
 # 8 bands of 2 (minhash_lsh_pairs' num_hashes, k and bands; BANDS is read by
@@ -170,6 +171,7 @@ def feature_batch(batch: pa.RecordBatch, signature: bool,
 
 def features(batches, signature: bool, bigrams: bool):
     """``feature_batch`` over each batch, slice by slice (``SLICE_BYTES``)."""
+    skip_zip_rereads()
     for b in batches:
         nbytes = pc.binary_length(b.column("text")).fill_null(0).to_numpy()
         for piece in _slices(b, nbytes, SLICE_BYTES):
@@ -220,6 +222,7 @@ def oov_rates(bg: pa.ListArray, model: np.ndarray) -> np.ndarray:
 def low_quality(batches, model: np.ndarray, max_oov: float):
     """The ``doc_id`` of each row whose ``oov_rate`` against ``model``
     exceeds ``max_oov``, slice by slice (``SLICE_BIGRAMS``)."""
+    skip_zip_rereads()
     for batch in batches:
         n = pc.list_value_length(batch.column("bg")).fill_null(0).to_numpy()
         for b in _slices(batch, n, SLICE_BIGRAMS):

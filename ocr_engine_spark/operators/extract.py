@@ -70,6 +70,9 @@ def _extract_batches_arrow(cfg: EngineConfig, passthrough: tuple[str, ...] = ())
         import pyarrow as pa
 
         from ocr_engine_spark.kernel.pipeline import extract_frame_arrow
+        from ocr_engine_spark.worker import skip_zip_rereads
+
+        skip_zip_rereads()
 
         for rb in batches:
             out = extract_frame_arrow(rb, cfg)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocr_engine_spark.operators.relational import load
+from ocr_engine_spark.worker import skip_zip_rereads
 
 # tiny per-language stopword lists for the n-gram/stopword-vote heuristic; the vote is
 # deterministic with ties broken by fixed language order (like the parser vote, E4)
@@ -430,6 +431,7 @@ def pack_sequences(docs: DataFrame, budget: int = 512) -> DataFrame:
     import pandas as pd
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        skip_zip_rereads()
         pdf = pdf.sort_values("doc_id").reset_index(drop=True)
         seqs, offs = greedy_pack_assignment(pdf["n_tokens"], budget)
         pdf["seq_id"] = pd.Series(seqs, dtype="int32")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ocr_engine_spark.config import DEFAULT_CONFIG, EngineConfig
 from ocr_engine_spark.operators.artifacts import write_once
 from ocr_engine_spark.operators.extract import extract_transcripts
+from ocr_engine_spark.worker import skip_zip_rereads
 
 TRANSCRIPTS_DDL = ("conv_id string, turn_idx int, role string, text string, "
                    "tool string, ts timestamp")
@@ -32,6 +33,7 @@ def _progress_update(timeout_ms: int | None):
     the inactivity timeout (no timer is ever registered)."""
 
     def update(key, pdfs, state):
+        skip_zip_rereads()
         if state.hasTimedOut:
             # Timeout invocation carries no data: drop the state (this is what
             # actually bounds it) and emit nothing — re-saving here would both

@@ -37,3 +37,34 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def oracle_problems(spark):
+    """``(name, sf_dir) -> problems``: one contract row run against its DuckDB
+    oracle, memoized for the session.  Rows that both tests/test_contract.py
+    and tests/test_contract_tail.py list (pinned ids past the window, rows
+    rotated into it) run once and report the same result under both ids; a
+    row that raises re-raises the same error."""
+    import __spark_entry__ as entry
+    from tools.check_contract import compare, duck_connect
+
+    results = {}
+    ducks = {}
+
+    def check(name: str, sf_dir: str) -> list[str]:
+        if (name, sf_dir) not in results:
+            if sf_dir not in ducks:
+                ducks[sf_dir] = duck_connect(sf_dir)
+            try:
+                got = entry.queries()[name](spark, sf_dir).toPandas()
+                want = ducks[sf_dir].execute(entry.oracle_sql()[name]).df()
+                results[name, sf_dir] = compare(name, got, want)
+            except Exception as e:
+                results[name, sf_dir] = e
+        result = results[name, sf_dir]
+        if isinstance(result, Exception):
+            raise result
+        return result
+
+    return check

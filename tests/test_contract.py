@@ -18,7 +18,8 @@ WINDOW_SIZE = 50
 # the rest
 WINDOW = list(_entry.queries())[:WINDOW_SIZE]
 # rows this suite has always oracle-checked by id: they keep their test ids
-# here wherever a rotation of queries() places them
+# here wherever a rotation of queries() places them (a row that the tail
+# suite also lists runs once; conftest's oracle_problems memoizes it)
 PINNED = [
     "extract_documents", "strip_ratio_by_source", "pricing_summary",
     "top_revenue_orders", "region_revenue", "parts_with_lineitems",
@@ -43,13 +44,6 @@ def entrymod():
     return m
 
 
-@pytest.fixture(scope="module")
-def duck(entrymod):
-    from tools.check_contract import duck_connect
-
-    return duck_connect(SF_DIR)
-
-
 def test_entry_smoke(spark, entrymod):
     df = entrymod.entry(spark)
     assert df.count() > 0
@@ -71,12 +65,8 @@ def test_window_and_tail_cover_every_query_once():
 
 
 @pytest.mark.parametrize("name", CHECKED)
-def test_query_matches_oracle(spark, entrymod, duck, name):
-    from tools.check_contract import compare
-
-    got = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    want = duck.execute(entrymod.oracle_sql()[name]).df()
-    problems = compare(name, got, want)
+def test_query_matches_oracle(oracle_problems, name):
+    problems = oracle_problems(name, SF_DIR)
     assert not problems, problems
 
 

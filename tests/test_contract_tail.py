@@ -18,7 +18,6 @@ REPO = pathlib.Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entry  # noqa: E402
-from tools.check_contract import compare, duck_connect  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 DRIVER_WINDOW = 50
@@ -26,7 +25,8 @@ DRIVER_WINDOW = 50
 _all = list(entry.queries())
 TAIL = _all[DRIVER_WINDOW:]
 # rows rotated from the tail into the window keep their tail test ids
-ROTATED_IN = ["kmeans_centroids", "ivf_assign", "ivf_topk", "ivf_topk_multiprobe"]
+ROTATED_IN = ["kmeans_centroids", "ivf_assign", "ivf_topk", "ivf_topk_multiprobe",
+              "sequence_pack"]
 
 
 def test_tail_is_nonempty_iff_contract_exceeds_window():
@@ -34,11 +34,8 @@ def test_tail_is_nonempty_iff_contract_exceeds_window():
 
 
 @pytest.mark.parametrize("name", TAIL + [n for n in ROTATED_IN if n not in TAIL])
-def test_tail_query_matches_oracle(spark, name):
-    got = entry.queries()[name](spark, SF_DIR).toPandas()
-    con = duck_connect(SF_DIR)
-    want = con.execute(entry.oracle_sql()[name]).df()
-    problems = compare(name, got, want)
+def test_tail_query_matches_oracle(oracle_problems, name):
+    problems = oracle_problems(name, SF_DIR)
     assert not problems, problems
 
 
