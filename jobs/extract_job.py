@@ -7,7 +7,7 @@ Cluster launch (north_star lifecycle — the Spark analogue of the reference CLI
     spark-submit --py-files engine.zip jobs/extract_job.py \
         --input  warehouse/transcripts \
         --output /data/extracted_run1 \
-        --run-id r1 --n-buckets 4096 --wave-buckets 512
+        --run-id r1 --n-buckets 4096 --wave-buckets 64
 
 Local smoke run:
 
@@ -47,7 +47,9 @@ def main() -> None:
     ap.add_argument("--wave-buckets", type=int, default=None,
                     help="commit the run in waves of this many buckets (durable "
                          "checkpoint per wave; a crash loses at most one wave). "
-                         "Default: single-wave (fastest, run-level durability)")
+                         "Default and cap: the most buckets one commit observes "
+                         "(checkpoint.OBSERVED_KEYS), so a single wave at the "
+                         "default --n-buckets")
     ap.add_argument("--cpus", type=int, default=0,
                     help="local[N] cores; 0 = use existing/spark-submit session")
     ap.add_argument("--word-formation-mode", default=None,

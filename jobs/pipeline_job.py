@@ -40,7 +40,7 @@ extended to the pipeline the extracted text feeds):
     spark-submit --py-files engine.zip jobs/pipeline_job.py \
         --input warehouse/transcripts --output /data/pretrain_run1 \
         --run-id r1 --char-budget 16000 --seq-budget 2048 --shards 1024 \
-        --checkpoint-extraction --n-buckets 4096 --wave-buckets 512
+        --checkpoint-extraction --n-buckets 4096 --wave-buckets 64
 
 Local smoke run:
 
@@ -152,11 +152,8 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
                 cols.append((F.pmod(F.xxhash64("conv_id"),
                                     F.lit(quality_ref_mod)) == 0)
                             .alias("is_ref"))
-            # sized by the dedup shuffle's partitions, which AQE coalesces:
-            # with the per-task zip re-read gone (worker.skip_zip_rereads),
-            # coalescing the pass by volume no longer paid (pipeline_full on
-            # a 4-core host, 8 alternating pairs in one session: median
-            # 6.96 s with, 6.95 s without)
+            # the pass runs on the dedup shuffle's partitions, which AQE
+            # already coalesces by size
             feats = fx.doc_features(surv.select(*cols),
                                     signature=near_dedup,
                                     bigrams=quality_filter)

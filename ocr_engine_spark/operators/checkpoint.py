@@ -24,8 +24,9 @@ Protocol (SURVEY.md §4.2.3):
   wave whose written turns differ from the profile raises
   ``ProfileMismatchError`` before its metrics write.
 - Spark's job commit is all-or-nothing, so durability granularity == job
-  granularity: ``wave_buckets`` splits a run into per-wave data+metrics commits
-  (a crash loses at most one in-flight wave; see run_extraction's docstring).
+  granularity: a run is split into per-wave data+metrics commits of at most
+  ``wave_buckets`` and at most ``OBSERVED_KEYS`` buckets (a crash loses at
+  most one in-flight wave; see run_extraction's docstring).
 
 Metrics schema follows FIXTURES.md §3 run_metrics: the graft of the reference's
 per-stage Timer instrumentation (/root/reference/src/utils.py:45-56) and manifest
@@ -98,6 +99,12 @@ METRICS_COLUMNS = ("run_id", "conv_ids", "turns", "spans", "strip_ratio",
                    "started", "finished", "status", "dispatch", "n_buckets")
 
 
+# the most key values one commit observes: every row of its data write
+# evaluates three or four aggregates per key value, so a wave of buckets is
+# capped at this many and the cost per row does not grow with ``n_buckets``
+OBSERVED_KEYS = 64
+
+
 class ProfileMismatchError(RuntimeError):
     """A wave wrote a different number of turns to a bucket than the run's
     profile counted in it (the input changed between the two reads).  Raised
@@ -123,9 +130,10 @@ def bucket_profile(transcripts: DataFrame, n_buckets: int,
     return {r["p"]: (r["conv_ids"], r["turns"]) for r in rows}
 
 
-def commit_by_key(df: DataFrame, key: str, keys: list[int], data_path: str,
-                  metrics_path: str, tags: dict | None = None,
-                  profiled: dict[int, tuple[int, int]] | None = None) -> None:
+def commit_by_key(df: DataFrame, key: str,
+                  keys: list[int] | dict[int, tuple[int, int]],
+                  data_path: str, metrics_path: str,
+                  tags: dict | None = None) -> None:
     """The one data-then-metrics commit, shared by the checkpoint's waves and
     the stream job's micro-batches (the reference writes each result and its
     manifest row in one place, reference run.py:91-118).
@@ -141,15 +149,20 @@ def commit_by_key(df: DataFrame, key: str, keys: list[int], data_path: str,
     between the two redoes the key.  Nothing is persisted and the fresh
     output is never read back.
 
-    ``profiled`` maps key values to ``(conv_ids, turns)`` counted before the
-    write (``bucket_profile``): ``conv_ids`` comes from it, and observed
-    turns that differ from it raise ``ProfileMismatchError`` before the
-    metrics write.  Without it ``conv_ids`` is observed as
+    ``keys`` may map each key value to its ``(conv_ids, turns)`` counted
+    before the write (``bucket_profile``): ``conv_ids`` then comes from it,
+    and observed turns that differ from it raise ``ProfileMismatchError``
+    before the metrics write.  A plain list observes ``conv_ids`` as
     ``size(collect_set(conv_id))``, which holds a key's distinct ids in
     memory: fine for a micro-batch, which ``maxFilesPerTrigger`` bounds, but
     not for an unbounded wave.  Each key value adds three or four aggregates
-    to every row of the write, so keep ``keys`` to a wave's buckets.
+    to every row of the write, so one commit takes at most ``OBSERVED_KEYS``
+    of them.
     """
+    if len(keys) > OBSERVED_KEYS:
+        raise ValueError(f"one commit observes at most {OBSERVED_KEYS} "
+                         f"{key} values, got {len(keys)}")
+    profiled = keys if isinstance(keys, dict) else None
     tags = tags or {}
     exprs = []
     for i, k in enumerate(keys):
@@ -221,16 +234,18 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     ``dispatch_tool_json`` / ``tool_kind_map`` enable the same S1 declared-kind
     dispatch as ``extract_transcripts``, which every wave runs.
 
-    ``wave_buckets``: commit granularity.  Default (None) processes every
-    pending bucket in one data write + one metrics write — fastest, but
-    Spark's job commit is all-or-nothing, so a mid-run crash durably keeps
-    NOTHING and resume recomputes the whole run.  With ``wave_buckets=k`` the
-    pending buckets are processed in waves of k, each wave its own
+    ``wave_buckets``: commit granularity.  The pending non-empty buckets are
+    processed in waves of ``wave_buckets``, each wave its own
     data-then-metrics commit: a crash loses at most the in-flight wave and
-    resume restarts exactly there.  Each wave re-scans the input (the bucket
-    id is a hash, not a pushable predicate), so at cluster scale either size
-    waves to cluster capacity (few waves) or seed from a p-partitioned
-    staging table (``write_bucketed``) so each wave's scan prunes.
+    resume restarts exactly there.  A wave holds at most ``OBSERVED_KEYS``
+    buckets (the most one commit observes), which is also the default (None):
+    fewest waves, but Spark's job commit is all-or-nothing, so a crash
+    durably keeps nothing of the in-flight wave.  At the default
+    ``n_buckets`` that is one wave for the whole run.  Each wave re-scans the
+    input (the bucket id is a hash, not a pushable predicate), so at cluster
+    scale either keep ``n_buckets`` to a few waves or seed from a
+    p-partitioned staging table (``write_bucketed``) so each wave's scan
+    prunes.
 
     Resuming with a different ``n_buckets`` or dispatch policy than the
     committed buckets used raises ``ValueError`` (see ``done_buckets``).
@@ -254,11 +269,8 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     profile = (bucket_profile(transcripts, n_buckets, pending_ids)
                if pending_ids else {})
     pending_ids = [p for p in pending_ids if p in profile]
-    if wave_buckets and wave_buckets < len(pending_ids):
-        waves = [pending_ids[i:i + wave_buckets]
-                 for i in range(0, len(pending_ids), wave_buckets)]
-    else:
-        waves = [pending_ids] if pending_ids else []
+    size = min(wave_buckets or OBSERVED_KEYS, OBSERVED_KEYS)
+    waves = [pending_ids[i:i + size] for i in range(0, len(pending_ids), size)]
     for wave in waves:
         pending = bucketed
         if len(wave) < n_buckets:
@@ -283,16 +295,19 @@ def _run_wave(pending: DataFrame, profiled: dict[int, tuple[int, int]],
               passthrough: tuple[str, ...], dispatch_tool_json: bool,
               tool_kind_map: dict[str, str] | None) -> None:
     """One durable commit unit: extract `pending` (the rows of the profiled,
-    non-empty buckets ``profiled``), repartitioned by bucket, then commit its
-    data and its metrics rows."""
+    non-empty buckets ``profiled``), hash-partitioned by bucket, then commit
+    its data and its metrics rows."""
     started = time.time()
+    # every task of the write sets up the observation's aggregates for each
+    # key, so a wave takes at most a few tasks per core, not one per bucket
+    tasks = min(len(profiled),
+                3 * pending.sparkSession.sparkContext.defaultParallelism)
     extracted = extract_transcripts(
-        pending.repartition(len(profiled), "p"), cfg,
+        pending.repartition(tasks, "p"), cfg,
         passthrough=(*passthrough, "p"),
         dispatch_tool_json=dispatch_tool_json, tool_kind_map=tool_kind_map)
     # `extracted` holds only pending buckets, so every metrics row is new
     commit_by_key(
-        extracted, "p", list(profiled), data_path, metrics_path,
+        extracted, "p", profiled, data_path, metrics_path,
         tags={**tags, "started": F.lit(started).cast("timestamp"),
-              "finished": F.current_timestamp()},
-        profiled=profiled)
+              "finished": F.current_timestamp()})

@@ -218,3 +218,27 @@ def test_run_profiles_once_instead_of_probing_each_wave(
                        n_buckets=N_BUCKETS, wave_buckets=3)
     assert len(profiles) == 1
     assert s["buckets_run"] == N_BUCKETS
+
+
+def test_waves_are_bounded_by_the_observed_keys(spark, transcripts_df,
+                                                tmp_path, monkeypatch):
+    """However many buckets a run or its wave_buckets asks for, one commit
+    observes at most OBSERVED_KEYS of them, so the aggregates each written
+    row evaluates stay bounded; the split run matches the oracle."""
+    monkeypatch.setattr(cp, "OBSERVED_KEYS", 3)
+    widths = []
+    real_commit = cp.commit_by_key
+    monkeypatch.setattr(cp, "commit_by_key",
+                        lambda df, key, keys, *a, **k:
+                        widths.append(len(keys)) or
+                        real_commit(df, key, keys, *a, **k))
+    s = run_extraction(spark, transcripts_df, str(tmp_path / "b"), "rB",
+                       n_buckets=N_BUCKETS, wave_buckets=N_BUCKETS)
+    filled = with_bucket(transcripts_df, N_BUCKETS).select("p").distinct()
+    assert max(widths) == 3 and sum(widths) == filled.count() > 3
+    _assert_metrics_match(
+        spark.read.parquet(s["metrics_path"]),
+        _oracle(spark.read.parquet(s["data_path"]), "p"), "p")
+    with pytest.raises(ValueError, match="at most 3"):
+        real_commit(spark.range(1), "id", [0, 1, 2, 3],
+                    str(tmp_path / "d"), str(tmp_path / "m"))
