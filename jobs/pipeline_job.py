@@ -31,7 +31,7 @@ the ``pipeline_e2e`` contract row), over a transcript table:
                                  contract row run as a pipeline stage.  Two
                                  distinct bigrams collide with probability
                                  about n^2/2^65 for n distinct bigrams)
-    -> pack_sequences           (greedy token packing into training sequences)
+    -> pack_by_group            (greedy token packing into training sequences)
 
 Cluster launch (the reference CLI lifecycle, /root/reference/run.py:24-45,
 extended to the pipeline the extracted text feeds):
@@ -82,26 +82,25 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
     summary dict with per-stage counts.
 
     Stage counts cost one extra aggregation over the ASSEMBLED frame (one row
-    per conversation — orders of magnitude smaller than the turn corpus) and
-    one over the written packed manifest; the turn-level corpus is scanned
-    once (in checkpoint mode: once per wave, plus one profile scan of its
-    ``conv_id``/``turn_idx`` columns).
+    per conversation — orders of magnitude smaller than the turn corpus); the
+    packed counts are observed on the packed write itself.  The turn-level
+    corpus is scanned once (in checkpoint mode: once per wave, plus one
+    profile scan of its ``conv_id``/``turn_idx`` columns).
     """
-    import pandas as pd
     from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        IntegerType, LongType, StringType, StructField, StructType,
-    )
+    from pyspark.sql import Observation, functions as F
 
     from ocr_engine_spark.config import DEFAULT_CONFIG
     from ocr_engine_spark.operators.conversations import (
         assemble_conversations, dedup_conversations, truncate_to_budget,
     )
     from ocr_engine_spark.operators.extract import AUTO, extract_transcripts
-    from ocr_engine_spark.operators.text_analysis import greedy_pack_assignment
-    from ocr_engine_spark.worker import skip_zip_rereads
+    from ocr_engine_spark.operators.text_analysis import pack_by_group
 
+    if shards < 1:
+        # checked before any Spark action: the shard hash pmod(…, 0) fails
+        # only at the pack, after every stage upstream has run
+        raise ValueError(f"--shards must be >= 1, got {shards}")
     if quality_filter and quality_ref_mod < 2:
         # checked before any Spark action, so a degenerate config cannot fail
         # only after extraction waves are written: mod 1 marks EVERY document
@@ -128,8 +127,8 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
             dispatch_tool_json=dispatch_tool_json, tool_kind_map=tool_kind_map)
 
     asm = assemble_conversations(truncate_to_budget(extracted, char_budget))
-    # assembled = one row per conversation; persist so the dedup survivors,
-    # the packed join-back, and the stage counts reuse one materialization
+    # assembled = one row per conversation; persist so the dedup survivors
+    # and the conversation count reuse one materialization
     asm.persist(StorageLevel.DISK_ONLY)
     feats = None
     try:
@@ -245,52 +244,37 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
             "doc_text",
             F.size(F.split(F.trim("doc_text"), " +")).cast("bigint")
             .alias("n_tokens"))
-        pack_schema = StructType([
-            StructField("conv_id", StringType()),
-            StructField("shard", StringType()),
-            StructField("doc_text", StringType()),
-            StructField("n_tokens", LongType()),
-            StructField("seq_id", IntegerType()),
-            StructField("seq_offset", LongType()),
-        ])
-
-        def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            skip_zip_rereads()
-            pdf = pdf.sort_values("conv_id").reset_index(drop=True)
-            seqs, offs = greedy_pack_assignment(pdf["n_tokens"], seq_budget)
-            pdf["seq_id"] = pd.Series(seqs, dtype="int32")
-            pdf["seq_offset"] = pd.Series(offs, dtype="int64")
-            return pdf
-
-        out = docs.groupBy("shard").applyInPandas(pack, schema=pack_schema)
-        out.persist(StorageLevel.DISK_ONLY)
-        try:
-            data_path = os.path.join(out_dir, "packed")
-            # FULL overwrite, not dynamic-by-shard: the job always computes
-            # every shard, and a re-run with a different --shards must not
-            # leave stale partitions behind (packed output is derived data —
-            # the resumable stage is the extraction checkpoint upstream)
-            out.write.mode("overwrite").partitionBy("shard").parquet(data_path)
-            stats = out.agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.countDistinct("shard", "seq_id").alias("n_sequences"),
-                F.sum("n_tokens").alias("n_tokens")).collect()[0]
-            summary = {
-                "run_id": run_id, "extraction": ext_summary,
-                "conversations": n_convs,
-                "survivors": stats["n_docs"],
-                "dropped_duplicates": (n_convs - stats["n_docs"]
-                                       - (n_near or 0) - (n_lowq or 0)),
-                "sequences": stats["n_sequences"],
-                "tokens": int(stats["n_tokens"] or 0),
-                "data_path": data_path,
-            }
-            if n_near is not None:
-                summary["dropped_near_duplicates"] = n_near
-            if n_lowq is not None:
-                summary["dropped_low_quality"] = n_lowq
-        finally:
-            out.unpersist()
+        data_path = os.path.join(out_dir, "packed")
+        seen = Observation()
+        # FULL overwrite, not dynamic-by-shard: the job always computes every
+        # shard, and a re-run with a different --shards must not leave stale
+        # partitions behind (packed output is derived data — the resumable
+        # stage is the extraction checkpoint upstream).  Offset 0 counts the
+        # sequences, since every document has n_tokens >= 1 ('' gives 1)
+        (pack_by_group(docs, "shard", "conv_id", seq_budget)
+         .observe(seen, F.count(F.lit(1)).alias("n_docs"),
+                  F.count_if(F.col("seq_offset") == 0).alias("n_sequences"),
+                  F.sum("n_tokens").alias("n_tokens"))
+         .write.mode("overwrite").partitionBy("shard").parquet(data_path))
+        # zero conversations is the only way to zero survivors (each dedup
+        # stage keeps one document per family, the quality gate keeps its
+        # reference slice); AQE prunes that empty plan, losing the observation
+        stats = (seen.get if n_convs
+                 else {"n_docs": 0, "n_sequences": 0, "n_tokens": 0})
+        summary = {
+            "run_id": run_id, "extraction": ext_summary,
+            "conversations": n_convs,
+            "survivors": stats["n_docs"],
+            "dropped_duplicates": (n_convs - stats["n_docs"]
+                                   - (n_near or 0) - (n_lowq or 0)),
+            "sequences": stats["n_sequences"],
+            "tokens": stats["n_tokens"],
+            "data_path": data_path,
+        }
+        if n_near is not None:
+            summary["dropped_near_duplicates"] = n_near
+        if n_lowq is not None:
+            summary["dropped_low_quality"] = n_lowq
     finally:
         asm.unpersist()
         if feats is not None:

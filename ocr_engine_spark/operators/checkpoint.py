@@ -252,6 +252,9 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
 
     Returns a summary dict {run_id, buckets_total, buckets_done_before, buckets_run}.
     """
+    if n_buckets < 1:
+        # no bucket means no wave: a success summary with nothing written
+        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     if wave_buckets is not None and wave_buckets < 1:
         # a non-positive wave size would make `waves` empty and silently skip
         # every bucket while still returning a success summary

@@ -479,37 +479,37 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
 
     Iterative min-label propagation: label(v) <- min(label(v), min over
     neighbors) until a fixpoint, converging in O(component diameter) rounds
-    (near-dup clusters are shallow).  Each round is one join + one map-side
-    combinable min-aggregation; lineage is truncated per round with
-    ``localCheckpoint`` so the plan does not grow with iterations — the standard
-    Spark shape for iterative graph algorithms without a graph library.
+    (near-dup clusters are shallow).  Round 1 is seeded from the symmetric
+    edges in one aggregation (every node is a ``src``).  Each later round is
+    one join + one map-side combinable aggregation that also carries each
+    node's previous label as ``old`` (NULL on neighbor rows), so the round's
+    ``localCheckpoint`` — which keeps the plan from growing, the standard
+    Spark shape for iterative graph algorithms without a graph library —
+    shows whether any label changed.
     """
     edges = (
         pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
         .union(pairs.select(F.col("doc_id_b").alias("src"),
                             F.col("doc_id_a").alias("dst")))
     ).localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("doc_id")).distinct()
-        .withColumn("cluster_id", F.col("doc_id"))
-    ).localCheckpoint(eager=True)
+    labels = edges.groupBy("src").agg(
+        F.least(F.col("src"), F.min("dst")).alias("cluster_id")
+    ).withColumnRenamed("src", "doc_id")
     converged = False
-    for _ in range(max_iterations):
+    for _ in range(max_iterations - 1):
         nbr = (
-            edges.join(labels, edges.src == labels.doc_id)
+            edges.join(labels.withColumnRenamed("doc_id", "src"), "src")
             .select(F.col("dst").alias("doc_id"), "cluster_id")
         )
         merged = (
-            labels.unionByName(nbr)
+            labels.withColumn("old", F.col("cluster_id"))
+            .unionByName(nbr, allowMissingColumns=True)
             .groupBy("doc_id")
-            .agg(F.min("cluster_id").alias("cluster_id"))
+            .agg(F.min("cluster_id").alias("cluster_id"),
+                 F.max("old").alias("old"))
         ).localCheckpoint(eager=True)
-        changed = (
-            merged.alias("n").join(labels.alias("o"), "doc_id")
-            .where(F.col("n.cluster_id") != F.col("o.cluster_id"))
-        )
-        labels = merged
-        if changed.isEmpty():
+        labels = merged.select("doc_id", "cluster_id")
+        if merged.where(F.col("cluster_id") != F.col("old")).isEmpty():
             converged = True
             break
     if not converged:
@@ -520,7 +520,7 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
             f"duplicate_clusters did not reach a fixpoint within "
             f"{max_iterations} label-propagation rounds; a component's diameter "
             f"exceeds the cap — raise max_iterations for chain-shaped graphs")
-    return labels.select("doc_id", "cluster_id")
+    return labels
 
 
 def canonical_drop_ids(pairs: DataFrame,

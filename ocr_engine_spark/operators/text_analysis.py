@@ -393,16 +393,11 @@ def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PACK_SCHEMA = ("doc_id long, source string, n_tokens bigint, "
-               "seq_id int, seq_offset bigint")
-
-
 def greedy_pack_assignment(n_tokens, budget: int):
-    """The greedy fill itself, factored so every packing surface (the
-    contract operator below, jobs/pipeline_job's text-carrying variant) runs
-    the IDENTICAL loop: documents in the caller's order fill a sequence until
-    the next would overflow ``budget``; oversized documents sit alone.
-    Returns parallel (seq_ids, offsets) lists."""
+    """The greedy fill itself: documents in the caller's order fill a
+    sequence until the next would overflow ``budget``; oversized documents
+    sit alone.  ``pack_by_group`` runs it once per group.  Returns parallel
+    (seq_ids, offsets) lists."""
     seqs, offs = [], []
     seq = fill = 0
     for n in n_tokens:
@@ -415,33 +410,46 @@ def greedy_pack_assignment(n_tokens, budget: int):
     return seqs, offs
 
 
-def pack_sequences(docs: DataFrame, budget: int = 512) -> DataFrame:
-    """Greedy contiguous sequence packing per source (the training-sequence
-    assembly step): documents in doc_id order fill a sequence until the next
-    one would overflow ``budget`` tokens, which starts a new sequence;
-    oversized documents occupy a sequence alone.
+def pack_by_group(df: DataFrame, group: str, order: str,
+                  budget: int) -> DataFrame:
+    """Greedy contiguous sequence packing per ``group``: the rows of ``df``
+    (which carries ``n_tokens``) in ``order`` fill a sequence until the next
+    would overflow ``budget`` tokens.  Every column passes through, and
+    ``seq_id int`` and ``seq_offset bigint`` are appended.
 
-    The running (sequence, fill) state is a SEQUENTIAL scan — not expressible
-    with window functions — so this is the one pipeline operator that uses the
-    grouped-map Pandas surface (``groupBy(source).applyInPandas``): state
-    stays per-group and bounded, groups parallelize across executors, and the
-    per-group order is total (doc_id), so results are deterministic under any
-    partitioning.
+    The fill is a SEQUENTIAL scan — not expressible with window functions —
+    so packing is a grouped map (``applyInPandas``): state stays per-group
+    and bounded, and with ``order`` unique per group the result is
+    deterministic under any partitioning.
     """
     import pandas as pd
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    # a new list: StructType.add would mutate df's cached schema
+    schema = StructType(list(df.schema.fields) + [
+        StructField("seq_id", IntegerType()),
+        StructField("seq_offset", LongType())])
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         skip_zip_rereads()
-        pdf = pdf.sort_values("doc_id").reset_index(drop=True)
+        pdf = pdf.sort_values(order).reset_index(drop=True)
         seqs, offs = greedy_pack_assignment(pdf["n_tokens"], budget)
         pdf["seq_id"] = pd.Series(seqs, dtype="int32")
         pdf["seq_offset"] = pd.Series(offs, dtype="int64")
         return pdf
 
+    return df.groupBy(group).applyInPandas(pack, schema=schema)
+
+
+def pack_sequences(docs: DataFrame, budget: int = 512) -> DataFrame:
+    """Greedy contiguous sequence packing per source in doc_id order (the
+    training-sequence assembly step; see ``pack_by_group``) -> (doc_id
+    bigint, source, n_tokens bigint, seq_id int, seq_offset bigint);
+    oversized documents occupy a sequence alone."""
     with_n = docs.select(
-        "doc_id", "source",
+        F.col("doc_id").cast("bigint").alias("doc_id"), "source",
         F.size(F.split(F.trim("text"), " +")).cast("bigint").alias("n_tokens"))
-    return with_n.groupBy("source").applyInPandas(pack, schema=PACK_SCHEMA)
+    return pack_by_group(with_n, "source", "doc_id", budget)
 
 
 def q_sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:

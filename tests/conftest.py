@@ -39,6 +39,19 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def spark_job_ids(spark, request):
+    """``() -> ids`` of the Spark jobs this test has started from its own
+    thread so far: the test body runs in a job group of its own."""
+    sc = spark.sparkContext
+    group = request.node.nodeid
+    sc.setJobGroup(group, "jobs of one test")
+    yield lambda: sc.statusTracker().getJobIdsForGroup(group)
+    for prop in ("spark.jobGroup.id", "spark.job.description",
+                 "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(prop, None)
+
+
 @pytest.fixture(scope="session")
 def oracle_problems(spark):
     """``(name, sf_dir) -> problems``: one contract row run against its DuckDB

@@ -242,3 +242,14 @@ def test_waves_are_bounded_by_the_observed_keys(spark, transcripts_df,
     with pytest.raises(ValueError, match="at most 3"):
         real_commit(spark.range(1), "id", [0, 1, 2, 3],
                     str(tmp_path / "d"), str(tmp_path / "m"))
+
+
+def test_zero_buckets_fails_before_any_spark_job(spark, transcripts_df,
+                                                tmp_path, spark_job_ids):
+    """n_buckets < 1 makes no wave: rather than a success summary with
+    nothing written, the run is rejected before any Spark job."""
+    out = tmp_path / "zero"
+    with pytest.raises(ValueError, match="n_buckets must be >= 1"):
+        run_extraction(spark, transcripts_df, str(out), "rZ", n_buckets=0)
+    assert spark_job_ids() == []
+    assert not out.exists()

@@ -222,6 +222,31 @@ def test_duplicate_clusters_long_chain_converges(spark):
     assert got == {i: 0 for i in range(n + 1)}
 
 
+def test_duplicate_clusters_checkpoints_edges_and_one_round(spark,
+                                                            monkeypatch):
+    """A clique and a star centred on its minimum converge in the seeded
+    round: the components checkpoint the edges and the one merge round that
+    shows no label changed, nothing else."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from ocr_engine_spark.operators.dedup import duplicate_clusters
+
+    clique = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    star = [(10, leaf) for leaf in range(11, 16)]
+    pairs = spark.createDataFrame(pd.DataFrame(
+        clique + star, columns=["doc_id_a", "doc_id_b"]))
+    calls = []
+    real = DataFrame.localCheckpoint
+    monkeypatch.setattr(DataFrame, "localCheckpoint",
+                        lambda self, *a, **k: calls.append(1)
+                        or real(self, *a, **k))
+    got = {r["doc_id"]: r["cluster_id"]
+           for r in duplicate_clusters(pairs).collect()}
+    assert len(calls) == 2
+    assert got == {**{i: 1 for i in range(1, 5)},
+                   **{i: 10 for i in range(10, 16)}}
+
+
 def test_simhash_neardup_matches_brute_force(spark):
     """Band blocking (4 x 15-bit slices) has provably perfect recall for
     Hamming <= 3 (pigeonhole): banded output equals brute-force all-pairs."""

@@ -25,6 +25,22 @@ def corpus(spark):
         dups.select("conv_id").distinct().count()
 
 
+def truncated_reruns(df):
+    """Each odd-hash base conversation of >= 6 turns re-uploaded minus its
+    last turn, as 'aaa_<conv_id>'."""
+    last = (df.groupBy("conv_id")
+            .agg(F.max("turn_idx").alias("mx")))
+    return (df.join(last, "conv_id")
+            .where((F.crc32("conv_id") % 2 == 1)
+                   & ~F.col("conv_id").startswith("dup_")
+                   # >=6 turns: dropping ONE turn keeps shingle Jaccard
+                   # well above the 0.5 stage threshold
+                   & (F.col("mx") >= 5)
+                   & (F.col("turn_idx") < F.col("mx")))
+            .drop("mx")
+            .withColumn("conv_id", F.concat(F.lit("aaa_"), "conv_id")))
+
+
 def test_pipeline_drops_planted_duplicates(spark, corpus, tmp_path):
     df, n_base, n_dup = corpus
     s = run_pipeline(spark, df, str(tmp_path / "out"), run_id="t1",
@@ -109,17 +125,7 @@ def test_near_dedup_drops_truncated_reruns(spark, corpus, tmp_path):
     and silently drop the fuller original): the keep-longest rule is what is
     pinned, not a lucky id ordering."""
     df, n_base, n_dup = corpus
-    last = (df.groupBy("conv_id")
-            .agg(F.max("turn_idx").alias("mx")))
-    ndups = (df.join(last, "conv_id")
-             .where((F.crc32("conv_id") % 2 == 1)
-                    & ~F.col("conv_id").startswith("dup_")
-                    # >=6 turns: dropping ONE turn keeps shingle Jaccard
-                    # well above the 0.5 stage threshold
-                    & (F.col("mx") >= 5)
-                    & (F.col("turn_idx") < F.col("mx")))
-             .drop("mx")
-             .withColumn("conv_id", F.concat(F.lit("aaa_"), "conv_id")))
+    ndups = truncated_reruns(df)
     n_near = ndups.select("conv_id").distinct().count()
     assert n_near > 0
     full = df.unionByName(ndups)
@@ -279,3 +285,62 @@ def test_quality_filter_empty_model_raises(spark, tmp_path):
         run_pipeline(spark, df, str(tmp_path / "q_nomodel"), run_id="t24",
                      char_budget=100_000, seq_budget=256, shards=2,
                      quality_filter=True, quality_ref_mod=ref_mod)
+
+
+def test_zero_shards_fails_before_any_spark_job(spark, corpus, tmp_path,
+                                               spark_job_ids):
+    """--shards < 1 would fail only at the pack's pmod, after extraction,
+    LSH and the LM gate ran; it is rejected before any Spark job."""
+    df, _, _ = corpus
+    out = tmp_path / "no_shards"
+    with pytest.raises(ValueError, match="--shards must be >= 1"):
+        run_pipeline(spark, df, str(out), run_id="t26",
+                     char_budget=100_000, seq_budget=256, shards=0,
+                     checkpoint_extraction=True, n_buckets=4,
+                     near_dedup=True, quality_filter=True)
+    assert spark_job_ids() == []
+    assert not (out / "extraction").exists()
+
+
+# the DataFrame actions and parquet writes one full run makes on the ledger
+# corpus below
+LEDGER = {"count": 3, "collect": 1, "isEmpty": 1, "localCheckpoint": 4,
+          "toArrow": 1, "parquet": 3}
+
+
+def test_pipeline_action_ledger(spark, corpus, tmp_path, monkeypatch):
+    """Every DataFrame action of a checkpointed run with near-dedup and the
+    quality gate, counted by method: a stage that grows an action (a
+    re-read, a probe, a checkpoint) shows here.  The packed parquet keeps
+    its columns and types."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    df, _, n_dup = corpus
+    # near-duplicates, so the components run their merge rounds
+    ndups = truncated_reruns(df)
+    full = df.unionByName(ndups)
+    n_near = ndups.select("conv_id").distinct().count()
+    assert n_near > 0
+
+    calls = {name: 0 for name in LEDGER}
+    for cls, names in ((DataFrame, ("count", "collect", "isEmpty",
+                                    "localCheckpoint", "toArrow")),
+                       (DataFrameWriter, ("parquet",))):
+        for name in names:
+            def counted(self, *a, _real=getattr(cls, name), _name=name, **k):
+                calls[_name] += 1
+                return _real(self, *a, **k)
+            monkeypatch.setattr(cls, name, counted)
+    s = run_pipeline(spark, full, str(tmp_path / "ledger"), run_id="t27",
+                     char_budget=100_000, seq_budget=256, shards=4,
+                     checkpoint_extraction=True, n_buckets=4,
+                     near_dedup=True, quality_filter=True, quality_ref_mod=3)
+    monkeypatch.undo()
+    assert calls == LEDGER
+    assert s["dropped_near_duplicates"] == n_near
+    assert s["dropped_duplicates"] == n_dup
+    schema = spark.read.parquet(s["data_path"]).schema
+    assert [(f.name, f.dataType.simpleString()) for f in schema] == [
+        ("conv_id", "string"), ("doc_text", "string"), ("n_tokens", "bigint"),
+        ("seq_id", "int"), ("seq_offset", "bigint"), ("shard", "string")]

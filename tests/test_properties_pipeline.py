@@ -192,3 +192,28 @@ def test_sequence_packing_matches_python_packer(spark, tmp_path):
         # oversized docs (700 > 512) sit alone at offset 0
     big = [i for i, t, s in docs if len(t.split(" ")) == 700]
     assert all(got[i][1] == 0 for i in big)
+    packed = pack_sequences(loaded, budget=512)
+    assert [(f.name, f.dataType.simpleString())
+            for f in packed.schema] == [
+        ("doc_id", "bigint"), ("source", "string"), ("n_tokens", "bigint"),
+        ("seq_id", "int"), ("seq_offset", "bigint")]
+
+    # the pipeline's spelling of the same packer: string conv_ids packed per
+    # shard
+    from pyspark.sql import functions as F
+
+    from ocr_engine_spark.operators.text_analysis import pack_by_group
+
+    shard_docs = packed.select(
+        F.format_string("c%04d", "doc_id").alias("conv_id"),
+        F.concat(F.lit("shard_"), F.substring("source", 2, 1)).alias("shard"),
+        "n_tokens")
+    by_shard = [
+        {(r["conv_id"], r["shard"], r["n_tokens"], r["seq_id"],
+          r["seq_offset"])
+         for r in pack_by_group(frame, "shard", "conv_id", 512).collect()}
+        for frame in (shard_docs, shard_docs.repartition(13))]
+    assert by_shard[0] == by_shard[1]
+    assert by_shard[0] == {(f"c{i:04d}", f"shard_{src[1]}", n, *got[i])
+                           for i, t, src in docs
+                           for n in [len(t.split(" "))]}
