@@ -20,13 +20,13 @@ id, the overwrite makes redelivery idempotent, and the checkpointLocation WAL
 guarantees no source file is consumed twice.  Kill the process at any point and
 re-run the same command: it resumes from the checkpoint.  Per-batch lineage
 metrics (conversations, turns, spans, strip ratio) are observed on the batch's
-data write and written AFTER it, as one literal row, by
-``operators.checkpoint.commit_by_key``: the same data-then-metrics commit the
-checkpointed batch job runs per wave of buckets.  A micro-batch is one
-data-write job plus one single-task metrics write; nothing is persisted and
-the written data is never read back.  The batch's distinct conversations are
-observed as ``size(collect_set(conv_id))``, which ``--max-files-per-trigger``
-bounds.
+data write and written AFTER it by ``operators.checkpoint.commit_by_key``: the
+same data-then-metrics commit the checkpointed batch job runs per wave of
+buckets.  The driver writes the batch's one metrics row as a small parquet
+file through the session's Hadoop ``FileSystem``, so a micro-batch is one
+Spark job, the data write; nothing is persisted and the written data is never
+read back.  The batch's distinct conversations are observed as
+``size(collect_set(conv_id))``, which ``--max-files-per-trigger`` bounds.
 """
 
 from __future__ import annotations

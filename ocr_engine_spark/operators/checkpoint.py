@@ -11,8 +11,11 @@ Protocol (SURVEY.md §4.2.3):
   AFTER the bucket's data (``commit_by_key``, the one data-then-metrics commit
   shared with the stream job's micro-batches), so a crash between the two re-runs
   that bucket.  The metrics are observed on the data write itself
-  (``DataFrame.observe``) and written from the observation as literal rows:
-  nothing is persisted and the fresh output is never read back.
+  (``DataFrame.observe``), and the driver writes them as one small parquet file
+  per bucket through the session's Hadoop ``FileSystem`` (the Iceberg split:
+  executors write data, the driver commits metadata).  The data write is the
+  commit's one Spark action: nothing is persisted and the fresh output is
+  never read back.
 - Resume = anti-join pending buckets against the done-set — only undone buckets are
   recomputed (left_anti on p).  Metrics rows record ``n_buckets`` and the dispatch
   policy; a resume under a different value of either raises instead of mixing
@@ -35,10 +38,14 @@ accumulation (/root/reference/run.py:91-118) — metrics written as data, not lo
 
 from __future__ import annotations
 
+import io
 import json
 import os
-import time
+import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ocr_engine_spark.config import DEFAULT_CONFIG, EngineConfig
@@ -78,7 +85,10 @@ def done_buckets(spark: SparkSession, metrics_path: str,
     (absent or null) skip its check.  The done set and the checks share one
     read.
     """
-    if not os.path.exists(metrics_path):
+    fs, jpath, root = _hadoop_fs(spark, metrics_path)
+    # a marker write cut before its first rename leaves only hidden staging
+    # directories, which hold no key=value partition for Spark to read
+    if not fs.globStatus(jpath(root, "*=*")):
         return set()
     m = spark.read.parquet(metrics_path).where(F.col("status") == "done")
     checked = [c for c in (expect or {}) if c in m.columns]
@@ -94,9 +104,22 @@ def done_buckets(spark: SparkSession, metrics_path: str,
 
 
 # metrics row layout: run_metrics (FIXTURES.md §3) writes every column, the
-# stream job's batch_metrics the untagged ones; the commit key comes last
-METRICS_COLUMNS = ("run_id", "conv_ids", "turns", "spans", "strip_ratio",
-                   "started", "finished", "status", "dispatch", "n_buckets")
+# stream job's batch_metrics the untagged ones; the commit key is the
+# partition directory, so Spark reads it back last.  The types are the ones
+# Spark itself gives these columns; a timestamp without its zone would read
+# back as timestamp_ntz.
+METRICS_SCHEMA = pa.schema([
+    ("run_id", pa.string()), ("conv_ids", pa.int64()), ("turns", pa.int64()),
+    ("spans", pa.int64()), ("strip_ratio", pa.float64()),
+    ("started", pa.timestamp("us", tz="UTC")),
+    ("finished", pa.timestamp("us", tz="UTC")),
+    ("status", pa.string()), ("dispatch", pa.string()),
+    ("n_buckets", pa.int32())])
+METRICS_COLUMNS = tuple(METRICS_SCHEMA.names)
+
+# prefix of the hidden directory a commit stages its metrics files in: Spark's
+# file listing skips names that start with "."
+STAGING_PREFIX = ".markers-"
 
 
 # the most key values one commit observes: every row of its data write
@@ -140,19 +163,20 @@ def commit_by_key(df: DataFrame, key: str,
 
     Overwrite ``df``'s data partitions by ``key`` (whose values are among
     ``keys``), observing per key value the turns (``count_if``), ``sum`` of
-    ``n_spans`` and ``avg`` of ``strip_ratio`` on that one write.  Then
-    overwrite one metrics row per key value that has turns (status='done'
-    plus ``tags``: other ``METRICS_COLUMNS`` as constants, or constant
-    Columns such as ``F.current_timestamp()``, resolved after the data
-    commit), built from the observation as literals in a single-task write.
-    The metrics are the done-markers, strictly after the data, so a crash
-    between the two redoes the key.  Nothing is persisted and the fresh
-    output is never read back.
+    ``n_spans`` and ``avg`` of ``strip_ratio`` on that one write, the
+    commit's only Spark action.  Then the driver writes one metrics row per key
+    value that has turns (status='done' plus ``tags``, plain Python values
+    of other ``METRICS_COLUMNS``) as ``metrics_path/key=value/`` (see
+    ``_write_markers``).  A commit tagged with ``started`` is also stamped
+    ``finished``, the driver's clock once the data write returns.  The
+    metrics are the done-markers, strictly after the data, so a crash
+    anywhere between the two redoes the key.  Nothing is persisted and the
+    fresh output is never read back.
 
     ``keys`` may map each key value to its ``(conv_ids, turns)`` counted
     before the write (``bucket_profile``): ``conv_ids`` then comes from it,
     and observed turns that differ from it raise ``ProfileMismatchError``
-    before the metrics write.  A plain list observes ``conv_ids`` as
+    before any metrics row is written.  A plain list observes ``conv_ids`` as
     ``size(collect_set(conv_id))``, which holds a key's distinct ids in
     memory: fine for a micro-batch, which ``maxFilesPerTrigger`` bounds, but
     not for an unbounded wave.  Each key value adds three or four aggregates
@@ -176,8 +200,10 @@ def commit_by_key(df: DataFrame, key: str,
     seen = Observation()
     overwrite_partitions(df.observe(seen, *exprs), data_path, key)
     got = seen.get
+    if "started" in tags:
+        tags = {**tags, "finished": datetime.now(timezone.utc)}
 
-    rows = []
+    rows = {}
     for i, k in enumerate(keys):
         turns = got[f"turns{i}"]
         if profiled is None:
@@ -190,22 +216,56 @@ def commit_by_key(df: DataFrame, key: str,
                     f"profile counted {want}; the input changed during the "
                     "run, so this wave stays undone and a resume redoes it")
         if turns:
-            rows.append(F.struct(
-                F.lit(conv_ids).cast("bigint").alias("conv_ids"),
-                F.lit(turns).cast("bigint").alias("turns"),
-                F.lit(got[f"spans{i}"]).cast("bigint").alias("spans"),
-                F.lit(got[f"ratio{i}"]).cast("double").alias("strip_ratio"),
-                F.lit(k).cast(df.schema[key].dataType).alias(key)))
-    if not rows:
-        return
-    metrics = (
-        df.sparkSession.range(1, numPartitions=1)
-        .select(F.inline(F.array(*rows)))
-        .withColumn("status", F.lit("done"))
-        .withColumns({c: F.lit(v) for c, v in tags.items()})
-    )
-    layout = [c for c in METRICS_COLUMNS if c in metrics.columns]
-    overwrite_partitions(metrics.select(*layout, key), metrics_path, key)
+            rows[k] = {"conv_ids": conv_ids, "turns": turns,
+                       "spans": got[f"spans{i}"],
+                       "strip_ratio": got[f"ratio{i}"], "status": "done",
+                       **tags}
+    if rows:
+        _write_markers(df.sparkSession, metrics_path, key, rows)
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path class, root Path)`` of ``path`` under the session's
+    Hadoop config, so file, hdfs and s3a targets resolve as the job's own
+    writes do."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    root = jpath(path)
+    return root.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, root
+
+
+def _write_markers(spark: SparkSession, metrics_path: str, key: str,
+                   rows: dict) -> None:
+    """Commit one metrics row per key value from the driver, with no Spark
+    job.  Each row becomes an in-memory parquet file (``METRICS_SCHEMA``
+    types, named ``part-….parquet``) staged in a hidden directory of
+    ``metrics_path``; once every file is staged, each key value's
+    ``key=value/`` is deleted and its staged directory renamed over it.  A
+    crash before a key's rename leaves that key without a marker (a resume
+    redoes it) and stale staging directories, which Spark's listing skips
+    and the next commit clears.  One writer owns a metrics path at a time,
+    as with the data path."""
+    fs, jpath, root = _hadoop_fs(spark, metrics_path)
+    for stale in fs.globStatus(jpath(root, STAGING_PREFIX + "*")) or ():
+        fs.delete(stale.getPath(), True)
+    staged = {}
+    for k, row in rows.items():
+        schema = pa.schema([f for f in METRICS_SCHEMA if f.name in row])
+        buf = io.BytesIO()
+        pq.write_table(pa.Table.from_pylist([row], schema=schema), buf)
+        name = uuid.uuid4()
+        staged[k] = jpath(root, f"{STAGING_PREFIX}{name.hex}")
+        out = fs.create(
+            jpath(staged[k], f"part-00000-{name}.c000.snappy.parquet"), False)
+        try:
+            out.write(buf.getvalue())
+        finally:
+            out.close()
+    for k, stage in staged.items():
+        final = jpath(root, f"{key}={k}")
+        fs.delete(final, True)
+        if not fs.rename(stage, final):
+            raise OSError(f"could not rename the staged metrics of {key}={k} "
+                          f"into {metrics_path}")
 
 
 def _dispatch_desc(dispatch_tool_json: bool,
@@ -300,7 +360,7 @@ def _run_wave(pending: DataFrame, profiled: dict[int, tuple[int, int]],
     """One durable commit unit: extract `pending` (the rows of the profiled,
     non-empty buckets ``profiled``), hash-partitioned by bucket, then commit
     its data and its metrics rows."""
-    started = time.time()
+    started = datetime.now(timezone.utc)
     # every task of the write sets up the observation's aggregates for each
     # key, so a wave takes at most a few tasks per core, not one per bucket
     tasks = min(len(profiled),
@@ -312,5 +372,4 @@ def _run_wave(pending: DataFrame, profiled: dict[int, tuple[int, int]],
     # `extracted` holds only pending buckets, so every metrics row is new
     commit_by_key(
         extracted, "p", profiled, data_path, metrics_path,
-        tags={**tags, "started": F.lit(started).cast("timestamp"),
-              "finished": F.current_timestamp()})
+        tags={**tags, "started": started})

@@ -1,20 +1,23 @@
 """The observed data-then-metrics commit (``checkpoint.commit_by_key``) shared
 by the checkpoint's waves and the stream job's micro-batches: one data write
-observed for its metrics, one single-task metrics write built from the
-observation, nothing persisted, and metrics equal to the groupBy aggregation
-the commit used to run over the persisted output."""
+observed for its metrics and the only Spark job of the commit, metrics rows
+written by the driver from the observation, nothing persisted, and metrics
+equal to the groupBy aggregation the commit used to run over the persisted
+output."""
 
 import math
+import os
 import pathlib
 import sys
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 import ocr_engine_spark.operators.checkpoint as cp
 from ocr_engine_spark.operators.checkpoint import (
-    METRICS_COLUMNS, ProfileMismatchError, commit_by_key, done_buckets,
-    run_extraction, with_bucket,
+    METRICS_COLUMNS, STAGING_PREFIX, ProfileMismatchError, commit_by_key,
+    done_buckets, run_extraction, with_bucket,
 )
 from ocr_engine_spark.operators.extract import extract_transcripts
 from ocr_engine_spark.sources.transcripts import generate_transcripts
@@ -23,6 +26,17 @@ from ocr_engine_spark.streaming.stream import TRANSCRIPTS_DDL
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "jobs"))
 
 N_BUCKETS = 8
+
+# what Spark reads back from each metrics table, whichever writer wrote it
+RUN_METRICS_DTYPES = [
+    ("run_id", "string"), ("conv_ids", "bigint"), ("turns", "bigint"),
+    ("spans", "bigint"), ("strip_ratio", "double"),
+    ("started", "timestamp"), ("finished", "timestamp"),
+    ("status", "string"), ("dispatch", "string"), ("n_buckets", "int"),
+    ("p", "int")]
+BATCH_METRICS_DTYPES = [
+    ("conv_ids", "bigint"), ("turns", "bigint"), ("spans", "bigint"),
+    ("strip_ratio", "double"), ("status", "string"), ("batch_id", "int")]
 
 
 @pytest.fixture(scope="module")
@@ -63,10 +77,9 @@ def _assert_metrics_match(metrics, oracle, key):
         assert math.isclose(g.strip_ratio, w.strip_ratio, rel_tol=1e-12)
 
 
-def test_commit_is_one_data_job_and_one_single_task_metrics_job(
-        spark, transcripts_df, tmp_path):
-    """A micro-batch-shaped commit runs exactly two Spark jobs (the data
-    write, then a one-task metrics write) and persists nothing."""
+def test_commit_is_one_spark_job(spark, transcripts_df, tmp_path):
+    """A micro-batch-shaped commit runs exactly one Spark job (the data
+    write; the driver writes the metrics row) and persists nothing."""
     src = str(tmp_path / "src")
     transcripts_df.coalesce(2).write.parquet(src)
     batch = extract_transcripts(spark.read.parquet(src)).withColumn(
@@ -82,11 +95,8 @@ def test_commit_is_one_data_job_and_one_single_task_metrics_job(
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert _persisted(spark) == before
     tracker = sc.statusTracker()
-    jobs = sorted(tracker.getJobIdsForGroup(group))
-    assert len(jobs) == 2, jobs
-    metrics_tasks = sum(tracker.getStageInfo(s).numTasks
-                        for s in tracker.getJobInfo(jobs[-1]).stageIds)
-    assert metrics_tasks == 1
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1, jobs
     m = spark.read.parquet(str(tmp_path / "metrics")).collect()
     assert [(r.batch_id, r.turns, r.status) for r in m] == [
         (7, transcripts_df.count(), "done")]
@@ -96,7 +106,7 @@ def test_run_metrics_match_groupby_oracle(spark, transcripts_df, tmp_path):
     s = run_extraction(spark, transcripts_df, str(tmp_path / "run"), "rP",
                        n_buckets=N_BUCKETS, wave_buckets=3)
     metrics = spark.read.parquet(s["metrics_path"])
-    assert metrics.columns == [*METRICS_COLUMNS, "p"]
+    assert metrics.dtypes == RUN_METRICS_DTYPES
     _assert_metrics_match(
         metrics, _oracle(spark.read.parquet(s["data_path"]), "p"), "p")
 
@@ -112,12 +122,154 @@ def test_batch_metrics_match_groupby_oracle(spark, transcripts_df, tmp_path):
     q.awaitTermination(180)
     assert q.exception() is None
     metrics = spark.read.parquet(str(out / "batch_metrics"))
-    assert metrics.columns == ["conv_ids", "turns", "spans", "strip_ratio",
-                               "status", "batch_id"]
+    assert metrics.dtypes == BATCH_METRICS_DTYPES
     _assert_metrics_match(
         metrics,
         _oracle(spark.read.parquet(str(out / "extracted")), "batch_id"),
         "batch_id")
+
+
+def _part_files(path):
+    return [os.path.join(d, f) for d, _, files in os.walk(path)
+            for f in files if f.endswith(".parquet")]
+
+
+def test_metrics_table_mixing_spark_and_driver_files(spark, transcripts_df,
+                                                     tmp_path):
+    """A partition in the format Spark wrote metrics in (INT96 timestamps)
+    and the driver-written ones read back as one table with the pinned
+    types, in either file order, and the resume sees every bucket done."""
+    out = str(tmp_path / "mixed")
+    s = run_extraction(spark, transcripts_df, out, "rX", n_buckets=N_BUCKETS)
+    path = s["metrics_path"]
+    want = sorted(spark.read.parquet(path).collect())
+    first = min(r.p for r in want)
+    spark_rows = (spark.read.parquet(path).where(F.col("p") == first)
+                  .drop("p").collect())
+    schema = spark.read.parquet(path).drop("p").schema
+    for f in _part_files(f"{path}/p={first}"):
+        os.remove(f)
+    (spark.createDataFrame(spark_rows, schema).coalesce(1).write
+     .mode("overwrite").parquet(f"{path}/p={first}"))
+
+    started = METRICS_COLUMNS.index("started")
+    written = [pq.ParquetFile(f).schema.column(started).physical_type
+               for f in _part_files(path)]
+    assert written.count("INT96") == 1
+    assert set(written) == {"INT64", "INT96"}
+    others = [f"{path}/p={r.p}" for r in want if r.p != first]
+    for paths in ([path], [*others, f"{path}/p={first}"]):
+        m = spark.read.option("basePath", path).parquet(*paths)
+        assert m.dtypes == RUN_METRICS_DTYPES
+        assert sorted(m.collect()) == want
+    done = {r.p for r in want}
+    assert done_buckets(spark, path, expect={"n_buckets": N_BUCKETS}) == done
+    again = run_extraction(spark, transcripts_df, out, "rX",
+                           n_buckets=N_BUCKETS)
+    assert again["buckets_done_before"] == len(done)
+
+
+class _FailingFs:
+    """A Hadoop FileSystem whose first ``delete`` of a committed partition
+    (``at="delete"``: every file staged, nothing replaced yet) or first
+    ``rename`` (``at="rename"``: the partition deleted, not yet replaced)
+    raises instead."""
+
+    def __init__(self, fs, at):
+        self._fs, self._at = fs, at
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+    def delete(self, path, recursive):
+        if (self._at == "delete"
+                and not path.getName().startswith(STAGING_PREFIX)):
+            raise RuntimeError("injected crash before the delete")
+        return self._fs.delete(path, recursive)
+
+    def rename(self, src, dst):
+        if self._at == "rename":
+            raise RuntimeError("injected crash before the rename")
+        return self._fs.rename(src, dst)
+
+
+@pytest.mark.parametrize("at", ["delete", "rename"])
+def test_marker_crash_after_data_write_redoes_the_wave(
+        spark, transcripts_df, tmp_path, monkeypatch, at):
+    """A crash in wave 2's marker step, after its data write, leaves that
+    wave undone and stale staging directories that Spark's reads skip; the
+    resume clears them and converges on the single-run output."""
+    want = (spark.read.parquet(
+        run_extraction(spark, transcripts_df, str(tmp_path / "base"), "rK",
+                       n_buckets=N_BUCKETS)["data_path"])
+        .select("conv_id", "turn_idx", "extracted_text")
+        .orderBy("conv_id", "turn_idx").collect())
+    filled = sorted(r.p for r in with_bucket(transcripts_df, N_BUCKETS)
+                    .select("p").distinct().collect())
+    wave1 = set(filled[:3])
+    assert len(filled) > 3
+
+    markers = {"n": 0}
+    real_markers, real_fs = cp._write_markers, cp._hadoop_fs
+
+    def counted(*a):
+        markers["n"] += 1
+        return real_markers(*a)
+
+    def fs_of(*a):
+        fs, jpath, root = real_fs(*a)
+        return (_FailingFs(fs, at) if markers["n"] == 2 else fs), jpath, root
+
+    out = str(tmp_path / "crash")
+    metrics = f"{out}/run_metrics"
+    monkeypatch.setattr(cp, "_write_markers", counted)
+    monkeypatch.setattr(cp, "_hadoop_fs", fs_of)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_extraction(spark, transcripts_df, out, "rK", n_buckets=N_BUCKETS,
+                       wave_buckets=3)
+    monkeypatch.undo()
+
+    assert done_buckets(spark, metrics) == wave1
+    assert [d for d in os.listdir(metrics)
+            if d.startswith(STAGING_PREFIX)] != []
+    assert {r.p for r in spark.read.parquet(metrics).collect()} == wave1
+
+    resumed = run_extraction(spark, transcripts_df, out, "rK",
+                             n_buckets=N_BUCKETS, wave_buckets=3)
+    assert resumed["buckets_done_before"] == len(wave1)
+    assert [d for d in os.listdir(metrics)
+            if d.startswith(STAGING_PREFIX)] == []
+    assert done_buckets(spark, metrics) == set(filled)
+    got = (spark.read.parquet(resumed["data_path"])
+           .select("conv_id", "turn_idx", "extracted_text")
+           .orderBy("conv_id", "turn_idx").collect())
+    assert got == want
+
+
+def test_first_wave_marker_crash_resumes(spark, transcripts_df, tmp_path,
+                                         monkeypatch):
+    """When the metrics path holds nothing but stale staging directories,
+    the resume finds no done bucket rather than failing to read the
+    table."""
+    out = str(tmp_path / "first")
+    real_fs = cp._hadoop_fs
+
+    def fs_of(*a):
+        fs, jpath, root = real_fs(*a)
+        return _FailingFs(fs, "rename"), jpath, root
+
+    monkeypatch.setattr(cp, "_hadoop_fs", fs_of)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_extraction(spark, transcripts_df, out, "rF", n_buckets=N_BUCKETS)
+    monkeypatch.undo()
+    stale = os.listdir(f"{out}/run_metrics")
+    assert stale and all(d.startswith(STAGING_PREFIX) for d in stale)
+    assert done_buckets(spark, f"{out}/run_metrics") == set()
+    resumed = run_extraction(spark, transcripts_df, out, "rF",
+                             n_buckets=N_BUCKETS)
+    assert resumed["buckets_done_before"] == 0
+    assert (spark.read.parquet(resumed["data_path"]).count()
+            == transcripts_df.count())
 
 
 def test_stream_zero_row_file_commits_nothing(spark, transcripts_df,

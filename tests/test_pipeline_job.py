@@ -305,7 +305,7 @@ def test_zero_shards_fails_before_any_spark_job(spark, corpus, tmp_path,
 # the DataFrame actions and parquet writes one full run makes on the ledger
 # corpus below
 LEDGER = {"count": 3, "collect": 1, "isEmpty": 1, "localCheckpoint": 4,
-          "toArrow": 1, "parquet": 3}
+          "toArrow": 1, "parquet": 2}
 
 
 def test_pipeline_action_ledger(spark, corpus, tmp_path, monkeypatch):

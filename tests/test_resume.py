@@ -145,7 +145,7 @@ def test_wave_mode_crash_keeps_committed_waves(spark, transcripts_df, tmp_path,
 
     def dying_write(df, target, partition_col, flavor="auto"):
         calls["n"] += 1
-        if calls["n"] == 3:  # wave 1 = calls 1 (data) + 2 (metrics); die in wave 2
+        if calls["n"] == 2:  # one data write per wave; die in wave 2
             raise RuntimeError("injected executor loss")
         return real_write(df, target, partition_col, flavor)
 
