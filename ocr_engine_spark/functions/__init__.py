@@ -1,29 +1,36 @@
-"""SQL-exposable per-stage scalar functions (SURVEY.md §2.10).
+"""SQL-callable per-stage functions (SURVEY.md §2.10).
 
-Each pipeline stage is also available as a named, registered, Arrow-vectorized
-``pandas_udf`` so stages are independently testable and usable from ``spark.sql``:
+Each pipeline stage is also a named, registered scalar ``arrow_udf``, so stages
+are independently testable and usable from ``spark.sql``:
 
     from ocr_engine_spark.functions import register_all
     register_all(spark)
     spark.sql("SELECT ocr_extract(text).extracted_text FROM transcripts")
 
-These wrap the same oracle kernels as the fused ``mapInArrow`` path
-(ocr_engine_spark/kernel/*) — the semantics live in exactly one place; the fused path
-remains the production hot path (one Python crossing per batch instead of one per
-expression).  This mirrors the reference's pluggable word-formation surface
-(/root/reference/src/ocr.py:19-21) where each stage is an importable function.
+Each takes one Arrow batch of its column (nulls read as ``""``) and runs the
+batch kernel (ocr_engine_spark/kernel/pipeline.py) once on it, the same code
+the fused ``mapInArrow`` production path runs; rows outside the kernel's
+closed forms fall back to the per-turn oracle inside the kernel there as here.
+``ocr_recognize`` alone loops per row: span recognition has no batch spelling.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import (
     DoubleType, IntegerType, StringType, StructField, StructType,
 )
 
 from ocr_engine_spark.config import DEFAULT_CONFIG
+from ocr_engine_spark.kernel import astr
+from ocr_engine_spark.kernel.normalize import recognize_one
+from ocr_engine_spark.kernel.pipeline import (
+    _R2_NON_TEXTY, _canonicalize_column, _deskew_columns, _extract_frame_impl,
+)
+from ocr_engine_spark.worker import skip_zip_rereads
 
 EXTRACT_RESULT = StructType([
     StructField("extracted_text", StringType()),
@@ -33,46 +40,32 @@ EXTRACT_RESULT = StructType([
 ])
 
 
-@pandas_udf(StringType())
-def ocr_canonicalize(text: pd.Series) -> pd.Series:
+@arrow_udf(StringType())
+def ocr_canonicalize(text: pa.Array) -> pa.Array:
     """E1/E2/S7: Unicode NFC + newline/width normalization + deskew, as one scalar."""
-    from ocr_engine_spark.kernel.canonicalize import canonicalize, deskew
+    skip_zip_rereads()
+    canon = _canonicalize_column(astr.fill_null(text), DEFAULT_CONFIG.max_chars)
+    # the kernel may hand back large_string; Spark rejects it for a string UDF
+    return _deskew_columns(canon)[0].cast(pa.string())
 
-    cfg = DEFAULT_CONFIG
-    return text.map(
-        lambda t: deskew(canonicalize(t if t is not None else "", cfg.max_chars))[0])
 
-
-@pandas_udf(StringType())
-def ocr_detect_format(text: pd.Series) -> pd.Series:
+@arrow_udf(StringType())
+def ocr_detect_format(text: pa.Array) -> pa.Array:
     """E4/A6 format vote: the parser (html/markdown/json/plain) with the most
     threshold-passing spans; ties -> first in fixed parser order."""
-    from ocr_engine_spark.kernel.canonicalize import canonicalize, deskew
-    from ocr_engine_spark.kernel.detect import detect_spans
-
-    cfg = DEFAULT_CONFIG
-
-    def one(t):
-        canon, _, _ = deskew(canonicalize(t if t is not None else "", cfg.max_chars))
-        fmt, _ = detect_spans(canon, cfg.score_thr, cfg.iou_thr)
-        return fmt
-
-    return text.map(one)
+    skip_zip_rereads()
+    cols, _ = _extract_frame_impl(astr.fill_null(text), None, DEFAULT_CONFIG)
+    return cols["fmt"]
 
 
-@pandas_udf(EXTRACT_RESULT)
-def ocr_extract(text: pd.Series) -> pd.DataFrame:
+@arrow_udf(EXTRACT_RESULT)
+def ocr_extract(text: pa.Array) -> pa.Array:
     """The full fused pipeline as a scalar: text -> struct(extracted_text, n_spans,
     strip_ratio, fmt)."""
-    from ocr_engine_spark.kernel.pipeline import extract_turn
-
-    rows = [extract_turn(t if t is not None else "", DEFAULT_CONFIG) for t in text]
-    return pd.DataFrame({
-        "extracted_text": [r["extracted_text"] for r in rows],
-        "n_spans": pd.array([r["n_spans"] for r in rows], dtype="int32"),
-        "strip_ratio": [r["strip_ratio"] for r in rows],
-        "fmt": [r["fmt"] for r in rows],
-    })
+    skip_zip_rereads()
+    cols, _ = _extract_frame_impl(astr.fill_null(text), None, DEFAULT_CONFIG)
+    names = EXTRACT_RESULT.fieldNames()
+    return pa.StructArray.from_arrays([cols[c] for c in names], names=names)
 
 
 RECOGNIZE_RESULT = StructType([
@@ -82,30 +75,30 @@ RECOGNIZE_RESULT = StructType([
 ])
 
 
-@pandas_udf(RECOGNIZE_RESULT)
-def ocr_recognize(raw: pd.Series, kind: pd.Series) -> pd.DataFrame:
+@arrow_udf(RECOGNIZE_RESULT)
+def ocr_recognize(raw: pa.Array, kind: pa.Array) -> pa.Array:
     """E9-E11 span normalization standalone: (raw, kind) -> struct(text, conf,
     kind) — entity decode, control strip, placeholder remap, whitespace collapse,
     token cap, min-confidence, numeric re-kinding."""
-    from ocr_engine_spark.kernel.normalize import recognize_one
-
+    skip_zip_rereads()
     cfg = DEFAULT_CONFIG
-    rows = [
-        recognize_one(r if r is not None else "", k if k is not None else "text",
-                      cfg.placeholder_char, cfg.max_seq_len)
-        for r, k in zip(raw, kind)
-    ]
-    return pd.DataFrame({"text": [r[0] for r in rows],
-                         "conf": [r[1] for r in rows],
-                         "kind": [r[2] for r in rows]})
+    return pa.array(
+        [recognize_one(r, k, cfg.placeholder_char, cfg.max_seq_len)
+         for r, k in zip(astr.npy(astr.fill_null(raw)),
+                         astr.npy(astr.fill_null(kind, "text")))],
+        type=pa.struct([("text", pa.string()), ("conf", pa.float64()),
+                        ("kind", pa.string())]))
 
 
-@pandas_udf(DoubleType())
-def ocr_content_conf(text: pd.Series) -> pd.Series:
-    """F2 span-confidence scoring exposed standalone (texty-character fraction)."""
-    from ocr_engine_spark.kernel.detect import content_conf
-
-    return text.map(lambda t: content_conf(t if t is not None else ""))
+@arrow_udf(DoubleType())
+def ocr_content_conf(text: pa.Array) -> pa.Array:
+    """F2 span-confidence scoring exposed standalone (texty-character
+    fraction, 0.0 for the empty string) — detect.content_conf per row."""
+    skip_zip_rereads()
+    text = astr.fill_null(text)
+    n = astr.length(text)
+    texty = n - astr.count_re(text, _R2_NON_TEXTY)
+    return pa.array(texty / np.maximum(n, 1))  # the empty string reads 0/1
 
 
 REGISTRY = {

@@ -55,11 +55,6 @@ def arr(x) -> pa.Array:
     return pa.array(x, type=_LS)
 
 
-def ser(a: pa.Array) -> pd.Series:
-    """Back to an object-dtype pandas Series (the kernel's exchange dtype)."""
-    return pd.Series(a.to_numpy(zero_copy_only=False), dtype=object)
-
-
 def npy(a) -> np.ndarray:
     return a.to_numpy(zero_copy_only=False)
 

@@ -201,7 +201,7 @@ OUTPUT_COLUMNS = [
 # ---------------------------------------------------------------------------
 
 from ocr_engine_spark.kernel.detect import (  # noqa: E402
-    _HTML_TAG, _LINK_PENALTY, _MD_FENCE, _MD_LEAD, _NON_TEXTY, _TAGLIKE,
+    _HTML_TAG, _LINK_PENALTY, _MD_FENCE, _MD_LEAD, _NON_TEXTY,
 )
 from ocr_engine_spark.kernel.normalize import (  # noqa: E402
     _CC_EXCEPT_TAB_NL, _MD_EMPH, _MD_LINK, _NUMERIC, _WS,
@@ -264,6 +264,36 @@ _R2_JSON_START = f"^[{_S}]*[{{\\[]"
 # every match of this consumes exactly one '&', and two matches can never
 # share one, so (#'&' > #safe-refs) <=> _UNSAFE_AMP's lookahead fires
 _R2_SAFE_REF = r"&(?:amp|lt|gt|quot|apos|#39|#x27);"
+
+
+def _canonicalize_column(a_raw, max_chars: int):
+    """Vectorized canonicalize over the batch (null-filled utf8 array in, one
+    out): the exact restatement of canonicalize.canonicalize, returning the
+    input array itself when no row changes (no copy of the corpus)."""
+    # NFC normalize with an all-ASCII skip (ASCII is NFC-invariant) and a
+    # per-row quick check — pyarrow's utf8_normalize ignores its form
+    # option (see kernel/astr.py), so NFC itself stays on unicodedata,
+    # touching only the rows that actually need recomposition
+    ascii_rows = astr.is_ascii(a_raw)
+    if ascii_rows.all():
+        canon = a_raw
+    else:
+        vals = astr.npy(a_raw)
+        nvals = None
+        for i in np.flatnonzero(~ascii_rows):
+            s = vals[i]
+            if not unicodedata.is_normalized("NFC", s):
+                if nvals is None:
+                    nvals = vals.copy()
+                nvals[i] = unicodedata.normalize("NFC", s)
+        canon = a_raw if nvals is None else astr.arr(nvals)
+    # one fused pass: \r\n? -> \n equals replace('\r\n')+replace('\r'),
+    # skipped wholesale when no row carries a '\r' (no full-corpus copy)
+    if astr.contains_lit(canon, "\r").any():
+        canon = astr.replace_re(canon, _R2_CRLF, "\n")
+    if max_chars and astr.length(canon).max(initial=0) > max_chars:
+        canon = astr.slice_cp(canon, 0, max_chars)
+    return canon
 
 
 def _deskew_columns(canon):
@@ -594,12 +624,11 @@ def _md_outputs(desk, raw_len: np.ndarray, cfg: EngineConfig,
     return extracted, spans_out, n_spans, strip_ratio, plain_wins
 
 
-# entity references the closed-form decode handles exactly: with every '&'
-# starting one of these, ordered literal replaces (amp LAST so its output '&'
-# can never re-trigger a decode) equal html.unescape's single pass
-_SAFE_ENTITIES = ("&lt;", "&gt;", "&quot;", "&apos;", "&#39;", "&#x27;", "&amp;")
+# fires on an '&' that starts none of the entity references the closed-form
+# decode handles exactly: with every '&' starting one of them, ordered literal
+# replaces (amp LAST so its output '&' can never re-trigger a decode) equal
+# html.unescape's single pass
 _UNSAFE_AMP = re.compile(r"&(?!(?:amp|lt|gt|quot|apos|#39|#x27);)")
-_TAGLIKE_GATE = _TAGLIKE  # detect's own tag-noise pattern
 
 from ocr_engine_spark.kernel.detect import (  # noqa: E402
     _HTML_A_ZONE, _HTML_DROP, _NEWLINE_RE,
@@ -977,17 +1006,8 @@ def extract_frame_arrow(batch, cfg: EngineConfig = DEFAULT_CONFIG):
     tidx_a = batch.column("turn_idx")
     if tidx_a.type != pa.int32():
         tidx_a = tidx_a.cast(pa.int32())
-    arrs = [
-        conv_a, tidx_a,
-        pa.array(cols["extracted_text"], type=pa.string()),
-        spans,
-        pa.array(cols["n_spans"], type=pa.int32()),
-        pa.array(cols["strip_ratio"], type=pa.float64()),
-        pa.array(cols["fmt"], type=pa.string()),
-        pa.array(cols["is_blank"], type=pa.bool_()),
-        pa.array(cols["angle"], type=pa.float64()),
-        pa.array(cols["page_skew"], type=pa.float64()),
-    ]
+    arrs = [conv_a, tidx_a, cols["extracted_text"], spans,
+            *(cols[c] for c in OUTPUT_COLUMNS[4:])]
     return pa.RecordBatch.from_arrays(arrs, names=OUTPUT_COLUMNS)
 
 
@@ -996,8 +1016,11 @@ def _extract_frame_impl(a_raw, declared, cfg: EngineConfig):
     column, ``declared`` the per-row payload kind ('' = undeclared) or None.
 
     Returns ``(cols, spans)``: ``cols`` the computed output columns as
-    aligned arrays, ``spans`` the row-sorted flat span tuple
+    aligned, typed Arrow arrays (what ``extract_frame_arrow`` and the SQL
+    function ``ocr_extract`` emit), ``spans`` the row-sorted flat span tuple
     ``(rows, start, end, kind, conf, text)``."""
+    import pyarrow as pa
+
     n = len(a_raw)
     raw_len = astr.length(a_raw)
 
@@ -1013,30 +1036,8 @@ def _extract_frame_impl(a_raw, declared, cfg: EngineConfig):
               and cfg.iou_thr >= 0 and cfg.word_formation_mode == "line"
               and _line_closed_form_ok(cfg))
     if vec_ok:
-        # NFC normalize with an all-ASCII skip (ASCII is NFC-invariant) and a
-        # per-row quick check — pyarrow's utf8_normalize ignores its form
-        # option (see kernel/astr.py), so NFC itself stays on unicodedata,
-        # touching only the rows that actually need recomposition
-        ascii_rows = astr.is_ascii(a_raw)
-        if ascii_rows.all():
-            canon = a_raw
-        else:
-            vals = astr.npy(a_raw)
-            nvals = None
-            for i in np.flatnonzero(~ascii_rows):
-                s = vals[i]
-                if not unicodedata.is_normalized("NFC", s):
-                    if nvals is None:
-                        nvals = vals.copy()
-                    nvals[i] = unicodedata.normalize("NFC", s)
-            canon = a_raw if nvals is None else astr.arr(nvals)
-        # one fused pass: \r\n? -> \n equals replace('\r\n')+replace('\r'),
-        # skipped wholesale when no row carries a '\r' (no full-corpus copy)
-        if astr.contains_lit(canon, "\r").any():
-            canon = astr.replace_re(canon, _R2_CRLF, "\n")
-        if cfg.max_chars and astr.length(canon).max(initial=0) > cfg.max_chars:
-            canon = astr.slice_cp(canon, 0, cfg.max_chars)
-        desk, is_blank_v, angle_v = _deskew_columns(canon)
+        desk, is_blank_v, angle_v = _deskew_columns(
+            _canonicalize_column(a_raw, cfg.max_chars))
         fast, md_fast, html_fast, json_fast, forced = _route_masks(
             desk, cfg, declared)
     else:  # nonzero margins: closed form not proven — everything per-turn
@@ -1144,9 +1145,13 @@ def _extract_frame_impl(a_raw, declared, cfg: EngineConfig):
         page_skew[i] = r["page_skew"]
 
     cols = {
-        "extracted_text": extracted, "n_spans": n_spans,
-        "strip_ratio": strip_ratio, "fmt": fmt, "is_blank": is_blank,
-        "angle": angle, "page_skew": page_skew,
+        "extracted_text": pa.array(extracted, type=pa.string()),
+        "n_spans": pa.array(n_spans, type=pa.int32()),
+        "strip_ratio": pa.array(strip_ratio, type=pa.float64()),
+        "fmt": pa.array(fmt, type=pa.string()),
+        "is_blank": pa.array(is_blank, type=pa.bool_()),
+        "angle": pa.array(angle, type=pa.float64()),
+        "page_skew": pa.array(page_skew, type=pa.float64()),
     }
     if sl[0]:
         flat_acc.append(tuple(np.asarray(c) for c in sl))

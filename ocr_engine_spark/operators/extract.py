@@ -258,9 +258,3 @@ def extract_transcripts(df: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
         schema = EXTRACTED_SCHEMA
     return pruned.mapInArrow(
         _extract_batches_arrow(cfg, tuple(passthrough)), schema=schema)
-
-
-def extracted_ordered(extracted: DataFrame) -> DataFrame:
-    """Stable fixture ordering (ORDER BY conv_id, turn_idx) — comparison-time only;
-    production output stays unordered with sort keys present (SURVEY.md §4.2.4)."""
-    return extracted.orderBy("conv_id", "turn_idx")

@@ -18,29 +18,17 @@ def explain(df: DataFrame, mode: str = "formatted") -> str:
         df._jdf.queryExecution(), mode)
 
 
-def read_schemas(df: DataFrame) -> list[str]:
-    """The ReadSchema of every file scan in the plan — what actually hits storage."""
-    return [l.split("ReadSchema:", 1)[1].strip()
-            for l in explain(df).splitlines() if "ReadSchema:" in l]
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """PushedFilters of every scan (empty list entries mean a full scan)."""
-    return [l.split("PushedFilters:", 1)[1].strip()
-            for l in explain(df).splitlines() if "PushedFilters:" in l]
-
-
-def has_python_eval(df: DataFrame) -> bool:
-    """True if any Python-worker node (ArrowEval/BatchEval/MapInPandas) is in the
-    plan.  Relational/dedup operators must keep this False; kernel operators True."""
-    p = explain(df)
-    return "EvalPython" in p or "MapInPandas" in p or "FlatMapGroupsInPandas" in p
+def python_stage_count(df: DataFrame) -> int:
+    """Number of Python-worker nodes in the executed plan: scalar UDF evals
+    (ArrowEvalPython/BatchEvalPython) and the map/grouped-map stages
+    (MapInArrow/MapInPandas/FlatMapGroupsInPandas).  Relational/dedup
+    operators must keep this 0; the extraction kernel is exactly 1."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum(plan.count(node) for node in (
+        "ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+        "FlatMapGroupsInPandas", "MapInArrow"))
 
 
 def exchange_count(df: DataFrame) -> int:
     """Number of Exchange (shuffle/broadcast-exchange) nodes — the scale currency."""
     return explain(df).count("Exchange")
-
-
-def broadcast_join_count(df: DataFrame) -> int:
-    return explain(df).count("BroadcastHashJoin")

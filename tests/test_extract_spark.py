@@ -7,8 +7,9 @@ import math
 import pytest
 
 from ocr_engine_spark.operators.extract import (
-    SALT_BLOCK, extract_transcripts, extracted_ordered, salted_key,
+    SALT_BLOCK, extract_transcripts, salted_key,
 )
+from ocr_engine_spark.plans import python_stage_count
 from ocr_engine_spark.sources.transcripts import generate_transcripts
 
 
@@ -21,7 +22,8 @@ def transcripts_df(spark):
 def test_spark_matches_golden_byte_for_byte(spark, transcripts_df, golden_turns):
     """north_rule invariant: per-turn text equality under stable (conv_id, turn_idx)
     ordering, Spark path vs frozen oracle fixtures."""
-    got = extracted_ordered(extract_transcripts(transcripts_df)).collect()
+    got = extract_transcripts(transcripts_df).orderBy(
+        "conv_id", "turn_idx").collect()
     want = sorted(golden_turns, key=lambda r: (r["conv_id"], r["turn_idx"]))
     assert len(got) == len(want)
     for g, w in zip(got, want):
@@ -65,10 +67,10 @@ def test_plan_is_scan_exchange_pythoneval(spark, transcripts_df, tmp_path):
     path = str(tmp_path / "t.parquet")
     transcripts_df.write.mode("overwrite").parquet(path)
     df = spark.read.parquet(path)
-    plan = extract_transcripts(df, num_partitions=4)._jdf.queryExecution().executedPlan().toString()
+    out = extract_transcripts(df, num_partitions=4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1  # exactly the repartition-before-UDF shuffle
-    assert ("MapInArrow" in plan or "MapInPandas" in plan
-            or "ArrowEvalPython" in plan)
+    assert python_stage_count(out) == 1
     scan_line = [l for l in plan.split("\n") if "Scan parquet" in l or "ReadSchema" in l]
     txt = "\n".join(scan_line)
     assert "role" not in txt and "ts" not in txt  # column pruning reached the scan

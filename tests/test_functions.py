@@ -78,3 +78,75 @@ def test_ocr_recognize_sql_matches_kernel(spark):
     want = [recognize_one(raw, kind, DEFAULT_CONFIG.placeholder_char,
                           DEFAULT_CONFIG.max_seq_len) for raw, kind in cases]
     assert got == [tuple(w) for w in want]
+
+
+# every batch-kernel function is checked row by row against its per-row oracle
+# over the corpus plus edge rows: null, empty, CRLF, quoted lines, a non-NFC
+# "é" (e + combining acute), tag-only HTML
+EDGE_ROWS = [None, "", "one\r\ntwo\rthree", "> quoted\n>> deeper\nplain line",
+             "cafe\u0301 au lait here", "<div><span></span></div>"]
+
+
+@pytest.fixture(scope="module")
+def oracle_texts(registered, corpus_view):
+    texts = list(corpus_view["text"]) + EDGE_ROWS
+    registered.createDataFrame(
+        pd.DataFrame({"i": range(len(texts)), "text": texts})
+    ).createOrReplaceTempView("tx_oracle")
+    return texts
+
+
+def _sql_column(spark, expr):
+    rows = spark.sql(f"SELECT i, {expr} AS r FROM tx_oracle ORDER BY i").collect()
+    return [r["r"] for r in rows]
+
+
+def _canon(t):
+    from ocr_engine_spark.config import DEFAULT_CONFIG
+    from ocr_engine_spark.kernel.canonicalize import canonicalize, deskew
+
+    return deskew(canonicalize(t if t is not None else "",
+                               DEFAULT_CONFIG.max_chars))[0]
+
+
+def test_sql_canonicalize_matches_oracle(registered, oracle_texts):
+    got = _sql_column(registered, "ocr_canonicalize(text)")
+    assert got == [_canon(t) for t in oracle_texts]
+
+
+def test_sql_detect_format_matches_oracle(registered, oracle_texts):
+    from ocr_engine_spark.config import DEFAULT_CONFIG as cfg
+    from ocr_engine_spark.kernel.detect import detect_spans
+
+    got = _sql_column(registered, "ocr_detect_format(text)")
+    assert got == [detect_spans(_canon(t), cfg.score_thr, cfg.iou_thr)[0]
+                   for t in oracle_texts]
+
+
+def test_sql_content_conf_matches_oracle(registered, oracle_texts):
+    from ocr_engine_spark.kernel.detect import content_conf
+
+    got = _sql_column(registered, "ocr_content_conf(text)")
+    assert got == [content_conf(t if t is not None else "")
+                   for t in oracle_texts]
+
+
+def test_sql_extract_matches_oracle_all_fields(registered, oracle_texts):
+    from ocr_engine_spark.kernel.pipeline import extract_turn
+
+    got = _sql_column(registered, "ocr_extract(text)")
+    for r, t in zip(got, oracle_texts):
+        want = extract_turn(t if t is not None else "")
+        assert r.asDict() == {c: want[c] for c in
+                              ("extracted_text", "n_spans", "strip_ratio",
+                               "fmt")}, t
+
+
+def test_stage_functions_are_scalar_arrow_udfs():
+    from pyspark.util import PythonEvalType
+
+    from ocr_engine_spark.functions import REGISTRY, ocr_extract
+
+    assert ocr_extract.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF
+    assert {fn.evalType for fn in REGISTRY.values()} == {
+        PythonEvalType.SQL_SCALAR_ARROW_UDF}

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import pytest
 
-from ocr_engine_spark.plans import explain as plan
+from ocr_engine_spark.plans import explain as plan, python_stage_count
 
 SF = "/root/testdata/sf0.001"
 
@@ -51,12 +51,11 @@ def test_semi_and_anti_joins(q):
 
 
 def test_dedup_stays_jvm_side(q):
-    # minhash/simhash/exact dedup are built-in expressions: no Python worker, no
-    # BatchEvalPython / ArrowEvalPython nodes anywhere in the plan
+    # minhash/simhash/exact dedup are built-in expressions: no Python worker
+    # node (scalar eval, mapInArrow/mapInPandas) anywhere in the plan
     for name in ("exact_dedup", "minhash_lsh_pairs", "simhash",
                  "ngram_jaccard_pairs", "token_stats", "lang_id"):
-        p = plan(q[name])
-        assert "EvalPython" not in p, f"{name} fell back to Python"
+        assert python_stage_count(q[name]) == 0, f"{name} fell back to Python"
 
 
 def test_strip_ratio_is_join_free(q):
@@ -112,10 +111,12 @@ def test_extraction_exchange_is_salted(spark):
     from ocr_engine_spark.sources.transcripts import generate_transcripts
 
     df = spark.createDataFrame(generate_transcripts(5, whale_factor=5))
-    p = plan(extract_transcripts(df, num_partitions=8))
-    # one round-robin-free hash exchange on the salted key, then the Arrow stage
+    out = extract_transcripts(df, num_partitions=8)
+    p = plan(out)
+    # one round-robin-free hash exchange on the salted key, then the Arrow
+    # stage: the kernel's one Python crossing
     assert "xxhash64" in p and ("hashpartitioning" in p or "Exchange" in p)
-    assert "MapInArrow" in p or "MapInPandas" in p
+    assert python_stage_count(out) == 1
 
 
 def test_extraction_default_is_shuffle_free(spark, tmp_path):

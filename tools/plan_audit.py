@@ -25,6 +25,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from ocr_engine_spark.plans import python_stage_count
 
     spark = (
         SparkSession.builder.master("local[4]")
@@ -43,9 +44,7 @@ def main() -> None:
         plan = df._jdf.queryExecution().executedPlan().toString()
         n_ex = len(re.findall(r"Exchange (?:hash|range|Single)", plan))
         n_bc = plan.count("BroadcastExchange")
-        n_py = (plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
-                + plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas")
-                + plan.count("MapInArrow"))
+        n_py = python_stage_count(df)
         scans = re.findall(r"ReadSchema: (struct<[^\n]*)", plan)
         scan = scans[0][:80] if scans else "(no file scan)"
         rows.append((name, n_ex, n_bc, n_py, scan))
