@@ -13,20 +13,25 @@ Local smoke run (drain everything available, then exit):
     python jobs/stream_job.py --input BENCH/transcripts_bench.parquet \
         --output /tmp/stream_out --cpus 4 --available-now
 
-Exactly-once protocol: every micro-batch lands in an output partition keyed by its
-deterministic ``batch_id`` via dynamic partition OVERWRITE inside ``foreachBatch``
-— after a crash, Structured Streaming replays the uncommitted batch with the SAME
-id, the overwrite makes redelivery idempotent, and the checkpointLocation WAL
-guarantees no source file is consumed twice.  Kill the process at any point and
-re-run the same command: it resumes from the checkpoint.  Per-batch lineage
-metrics (conversations, turns, spans, strip ratio) are observed on the batch's
-data write and written AFTER it by ``operators.checkpoint.commit_by_key``: the
+Exactly-once protocol: every micro-batch lands in an output partition
+``batch_id=N/`` keyed by its deterministic ``batch_id`` and overwritten inside
+``foreachBatch`` — after a crash, Structured Streaming replays the uncommitted
+batch with the SAME id, the overwrite makes redelivery idempotent, and the
+checkpointLocation WAL guarantees no source file is consumed twice.  Kill the
+process at any point and re-run the same command: it resumes from the
+checkpoint.  The batch is written by ``operators.checkpoint.commit_by_key``, the
 same data-then-metrics commit the checkpointed batch job runs per wave of
-buckets.  The driver writes the batch's one metrics row as a small parquet
-file through the session's Hadoop ``FileSystem``, so a micro-batch is one
-Spark job, the data write; nothing is persisted and the written data is never
-read back.  The batch's distinct conversations are observed as
-``size(collect_set(conv_id))``, which ``--max-files-per-trigger`` bounds.
+buckets.  A batch is one key, so Spark writes it into a hidden staging
+directory and the driver renames that over ``batch_id=N/``.  The batch id is
+never a column or a literal of the batch's plan, so the write's generated code
+is compiled by the first batch and reused by every later one.  Per-batch
+lineage metrics (conversations, turns, spans, strip ratio) are observed on the
+data write, and the driver writes the batch's one metrics row AFTER it as a
+small parquet file through the session's Hadoop ``FileSystem``, so a
+micro-batch is one Spark job, the data write; nothing is persisted and the
+written data is never read back.  The batch's distinct conversations are
+observed as ``size(collect_set(conv_id))``, which ``--max-files-per-trigger``
+bounds.
 """
 
 from __future__ import annotations
@@ -41,16 +46,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def write_batch(out_dir: str):
     """foreachBatch sink: data + metrics, both overwrite-keyed by batch_id."""
-    from pyspark.sql import functions as F
-
     from ocr_engine_spark.operators.checkpoint import commit_by_key
 
     data_path = os.path.join(out_dir, "extracted")
     metrics_path = os.path.join(out_dir, "batch_metrics")
 
     def fn(batch_df, batch_id: int):
-        commit_by_key(batch_df.withColumn("batch_id", F.lit(int(batch_id))),
-                      "batch_id", [int(batch_id)], data_path, metrics_path)
+        commit_by_key(batch_df, "batch_id", [int(batch_id)], data_path,
+                      metrics_path)
 
     return fn
 

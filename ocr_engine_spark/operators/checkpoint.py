@@ -4,9 +4,15 @@ Protocol (SURVEY.md §4.2.3):
 
 - The corpus is bucketed into ``n_buckets`` deterministic partitions:
   p = pmod(salted_key(), n_buckets), i.e. xxhash64(conv_id, turn_idx // SALT_BLOCK).
-- Output and metrics are parquet tables partitioned by ``p`` with DYNAMIC partition
-  overwrite, so re-running a bucket is idempotent (exactly-once by overwrite, the
-  Iceberg overwritePartitions analogue — Parquet-local here, catalog pluggable).
+- Output and metrics are parquet tables partitioned by ``p``, and a commit
+  overwrites the partitions it writes, so re-running a bucket is idempotent
+  (exactly-once by overwrite, the Iceberg overwritePartitions analogue —
+  Parquet-local here, catalog pluggable).  A commit of many keys (a wave) is a
+  DYNAMIC partition overwrite.  A commit of one key (every micro-batch of the
+  stream job) writes the frame without its key into a hidden staging
+  directory, and the driver renames that over ``key=value/``: the key value
+  never enters the write's plan, so its generated code is the same for every
+  key value and Spark compiles it once per session, not once per commit.
 - A bucket is DONE iff its metrics row (status='done') exists; metrics are written
   AFTER the bucket's data (``commit_by_key``, the one data-then-metrics commit
   shared with the stream job's micro-batches), so a crash between the two re-runs
@@ -117,9 +123,10 @@ METRICS_SCHEMA = pa.schema([
     ("n_buckets", pa.int32())])
 METRICS_COLUMNS = tuple(METRICS_SCHEMA.names)
 
-# prefix of the hidden directory a commit stages its metrics files in: Spark's
-# file listing skips names that start with "."
-STAGING_PREFIX = ".markers-"
+# prefix of the hidden directories a commit stages its files in, under the
+# data path for a one-key data write and under the metrics path for the
+# markers: Spark's file listing skips names that start with "."
+STAGING_PREFIX = ".staging-"
 
 
 # the most key values one commit observes: every row of its data write
@@ -162,16 +169,26 @@ def commit_by_key(df: DataFrame, key: str,
     manifest row in one place, reference run.py:91-118).
 
     Overwrite ``df``'s data partitions by ``key`` (whose values are among
-    ``keys``), observing per key value the turns (``count_if``), ``sum`` of
-    ``n_spans`` and ``avg`` of ``strip_ratio`` on that one write, the
-    commit's only Spark action.  Then the driver writes one metrics row per key
-    value that has turns (status='done' plus ``tags``, plain Python values
-    of other ``METRICS_COLUMNS``) as ``metrics_path/key=value/`` (see
+    ``keys``), observing per key value the turns, ``sum`` of ``n_spans`` and
+    ``avg`` of ``strip_ratio`` on that one write, the commit's only Spark
+    action.  Then the driver writes one metrics row per key value that has
+    turns (status='done' plus ``tags``, plain Python values of other
+    ``METRICS_COLUMNS``) as ``metrics_path/key=value/`` (see
     ``_write_markers``).  A commit tagged with ``started`` is also stamped
     ``finished``, the driver's clock once the data write returns.  The
     metrics are the done-markers, strictly after the data, so a crash
     anywhere between the two redoes the key.  Nothing is persisted and the
     fresh output is never read back.
+
+    The number of keys picks the write.  Many keys (a wave) run one dynamic
+    partition overwrite partitioned by ``key``, observing ``count_if(key ==
+    k)`` and the like per key value.  One key (every micro-batch) is
+    ``_write_one_key``: every row of ``df`` belongs to it, so the write
+    drops ``key``, observes plain aggregates and is swapped into
+    ``key=value/`` by the driver.  No key literal may enter that plan:
+    Spark inlines literals into its generated code, so a plan that named the
+    batch id would compile new classes for every micro-batch and run them
+    cold.
 
     ``keys`` may map each key value to its ``(conv_ids, turns)`` counted
     before the write (``bucket_profile``): ``conv_ids`` then comes from it,
@@ -188,18 +205,16 @@ def commit_by_key(df: DataFrame, key: str,
                          f"{key} values, got {len(keys)}")
     profiled = keys if isinstance(keys, dict) else None
     tags = tags or {}
-    exprs = []
-    for i, k in enumerate(keys):
-        on = F.col(key) == k
-        exprs += [F.count_if(on).alias(f"turns{i}"),
-                  F.sum(F.when(on, F.col("n_spans"))).alias(f"spans{i}"),
-                  F.avg(F.when(on, F.col("strip_ratio"))).alias(f"ratio{i}")]
-        if profiled is None:
-            exprs.append(F.size(F.collect_set(F.when(on, F.col("conv_id"))))
-                         .alias(f"convs{i}"))
-    seen = Observation()
-    overwrite_partitions(df.observe(seen, *exprs), data_path, key)
-    got = seen.get
+    if len(keys) == 1:
+        got = _write_one_key(df, key, next(iter(keys)), data_path,
+                             convs=profiled is None)
+    else:
+        exprs = []
+        for i, k in enumerate(keys):
+            exprs += _observed(i, F.col(key) == k, profiled is None)
+        seen = Observation()
+        overwrite_partitions(df.observe(seen, *exprs), data_path, key)
+        got = seen.get
     if "started" in tags:
         tags = {**tags, "finished": datetime.now(timezone.utc)}
 
@@ -224,6 +239,63 @@ def commit_by_key(df: DataFrame, key: str,
         _write_markers(df.sparkSession, metrics_path, key, rows)
 
 
+def _observed(i: int, on, convs: bool) -> list:
+    """The aggregates a commit observes for its ``i``-th key value, over the
+    rows where ``on`` holds (every row when ``on`` is None)."""
+    def of(c):
+        return F.col(c) if on is None else F.when(on, F.col(c))
+    exprs = [(F.count(F.lit(1)) if on is None else F.count_if(on))
+             .alias(f"turns{i}"),
+             F.sum(of("n_spans")).alias(f"spans{i}"),
+             F.avg(of("strip_ratio")).alias(f"ratio{i}")]
+    if convs:
+        exprs.append(F.size(F.collect_set(of("conv_id"))).alias(f"convs{i}"))
+    return exprs
+
+
+def _write_one_key(df: DataFrame, key: str, value: int, data_path: str,
+                   convs: bool) -> dict:
+    """Overwrite ``data_path/key=value/`` with ``df`` (all of whose rows
+    belong to that key value) and return what the write observed, keyed as
+    ``commit_by_key`` reads it.
+
+    Spark writes ``df`` without ``key`` into a fresh hidden directory of
+    ``data_path``, with no ``_SUCCESS`` file.  If the write saw turns, the
+    driver deletes ``key=value/`` and renames the staged directory over it;
+    otherwise it deletes the staged directory, so an empty commit leaves no
+    partition.  A crash before the delete leaves the previous ``key=value/``
+    readable and a stale staging directory, which Spark's listing skips and
+    the next one-key commit clears."""
+    fs, jpath, root = _hadoop_fs(df.sparkSession, data_path)
+    _clear_staging(fs, jpath, root)
+    stage = jpath(root, f"{STAGING_PREFIX}{uuid.uuid4().hex}")
+    seen = Observation()
+    (df.drop(key).observe(seen, *_observed(0, None, convs)).write
+     .mode("errorifexists")
+     .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+     .parquet(stage.toString()))
+    got = seen.get
+    if got["turns0"]:
+        _replace(fs, stage, jpath(root, f"{key}={value}"))
+    else:
+        fs.delete(stage, True)
+    return got
+
+
+def _clear_staging(fs, jpath, root) -> None:
+    """Delete the staging directories a crashed commit left under ``root``."""
+    for stale in fs.globStatus(jpath(root, STAGING_PREFIX + "*")) or ():
+        fs.delete(stale.getPath(), True)
+
+
+def _replace(fs, stage, final) -> None:
+    """Delete ``final`` and rename the staged directory ``stage`` to it."""
+    fs.delete(final, True)
+    if not fs.rename(stage, final):
+        raise OSError(f"could not rename {stage.toString()} to "
+                      f"{final.toString()}")
+
+
 def _hadoop_fs(spark: SparkSession, path: str):
     """``(FileSystem, Path class, root Path)`` of ``path`` under the session's
     Hadoop config, so file, hdfs and s3a targets resolve as the job's own
@@ -245,8 +317,7 @@ def _write_markers(spark: SparkSession, metrics_path: str, key: str,
     and the next commit clears.  One writer owns a metrics path at a time,
     as with the data path."""
     fs, jpath, root = _hadoop_fs(spark, metrics_path)
-    for stale in fs.globStatus(jpath(root, STAGING_PREFIX + "*")) or ():
-        fs.delete(stale.getPath(), True)
+    _clear_staging(fs, jpath, root)
     staged = {}
     for k, row in rows.items():
         schema = pa.schema([f for f in METRICS_SCHEMA if f.name in row])
@@ -261,11 +332,7 @@ def _write_markers(spark: SparkSession, metrics_path: str, key: str,
         finally:
             out.close()
     for k, stage in staged.items():
-        final = jpath(root, f"{key}={k}")
-        fs.delete(final, True)
-        if not fs.rename(stage, final):
-            raise OSError(f"could not rename the staged metrics of {key}={k} "
-                          f"into {metrics_path}")
+        _replace(fs, stage, jpath(root, f"{key}={k}"))
 
 
 def _dispatch_desc(dispatch_tool_json: bool,
@@ -285,7 +352,7 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
                    tool_kind_map: dict[str, str] | None = None) -> dict:
     """Checkpointed, resumable extraction run.
 
-    Layout: {out_dir}/extracted/p=*/   (data, dynamic-overwrite by p)
+    Layout: {out_dir}/extracted/p=*/   (data, overwritten by p)
             {out_dir}/run_metrics/p=*/ (lineage rows, written after data)
 
     ``passthrough`` columns ride through the kernel into the checkpointed

@@ -24,11 +24,15 @@ def spark():
     """Shared local SparkSession for the Spark-layer tests (SURVEY.md §5.2)."""
     from pyspark.sql import SparkSession
 
+    from ocr_engine_spark.session import CODEGEN_CACHE_ENTRIES
+
     spark = (
         SparkSession.builder.master("local[4]")
         .appName("ocr-engine-spark-tests")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
@@ -50,6 +54,14 @@ def spark_job_ids(spark, request):
     for prop in ("spark.jobGroup.id", "spark.job.description",
                  "spark.job.interruptOnCancel"):
         sc.setLocalProperty(prop, None)
+
+
+@pytest.fixture
+def codegen_compiles(spark):
+    """``() -> n``: the classes Spark's code generator has compiled in this
+    JVM so far (a cache hit compiles none)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return lambda: metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 @pytest.fixture(scope="session")

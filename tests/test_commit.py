@@ -291,8 +291,103 @@ def test_stream_zero_row_file_commits_nothing(spark, transcripts_df,
     batches = {r.batch_id for r in data.select("batch_id").distinct().collect()}
     assert len(batches) == 1
     assert data.count() == transcripts_df.count()
+    (batch,) = batches
     assert [(r.batch_id, r.turns) for r in metrics.collect()] == [
-        (batches.pop(), transcripts_df.count())]
+        (batch, transcripts_df.count())]
+    # the empty batch left no partition, and the one-key commit left neither
+    # a _SUCCESS file nor a staging directory
+    for table in ("extracted", "batch_metrics"):
+        assert os.listdir(out / table) == [f"batch_id={batch}"]
+    _assert_only_part_files(out / "extracted" / f"batch_id={batch}")
+
+
+def _assert_only_part_files(path):
+    """``path`` holds parquet part files and their checksums, nothing else."""
+    names = os.listdir(path)
+    assert names
+    for name in names:
+        assert (name.startswith("part-")
+                or name.startswith(".part-") and name.endswith(".crc")), name
+
+
+def _rows(df):
+    return sorted((r.conv_id, r.turn_idx, r.extracted_text)
+                  for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def halves(transcripts_df):
+    """Two extracted frames with no turn in common."""
+    return [extract_transcripts(transcripts_df.where(F.col("turn_idx") % 2 == i))
+            for i in (0, 1)]
+
+
+def test_one_key_commit_replaces_the_key(spark, halves, tmp_path):
+    """Committing one key twice leaves exactly the second frame's rows under
+    ``key=value/`` and one marker, with no staging leftovers."""
+    data, metrics = tmp_path / "data", tmp_path / "metrics"
+    for frame in halves:
+        commit_by_key(frame, "batch_id", [3], str(data), str(metrics))
+    got = spark.read.parquet(str(data))
+    assert {r.batch_id for r in got.select("batch_id").collect()} == {3}
+    assert _rows(got) == _rows(halves[1])
+    assert [(r.batch_id, r.turns) for r in
+            spark.read.parquet(str(metrics)).collect()] == [
+        (3, halves[1].count())]
+    assert os.listdir(data) == os.listdir(metrics) == ["batch_id=3"]
+    _assert_only_part_files(data / "batch_id=3")
+
+
+def test_one_key_crash_before_the_swap_keeps_the_previous_data(
+        spark, halves, tmp_path, monkeypatch):
+    """A one-key commit that dies after staging its data, before replacing
+    ``key=value/``, leaves the previous partition and marker readable; the
+    next commit clears the stale staging directory."""
+    data, metrics = tmp_path / "data", tmp_path / "metrics"
+    first, second = halves
+    commit_by_key(first, "batch_id", [3], str(data), str(metrics))
+    real_fs = cp._hadoop_fs
+
+    def fs_of(*a):
+        fs, jpath, root = real_fs(*a)
+        return _FailingFs(fs, "delete"), jpath, root
+
+    monkeypatch.setattr(cp, "_hadoop_fs", fs_of)
+    with pytest.raises(RuntimeError, match="injected"):
+        commit_by_key(second, "batch_id", [3], str(data), str(metrics))
+    monkeypatch.undo()
+    assert [d for d in os.listdir(data)
+            if d.startswith(STAGING_PREFIX)] != []
+    assert _rows(spark.read.parquet(str(data))) == _rows(first)
+    assert [r.turns for r in spark.read.parquet(str(metrics)).collect()] == [
+        first.count()]
+
+    commit_by_key(second, "batch_id", [3], str(data), str(metrics))
+    assert os.listdir(data) == ["batch_id=3"]
+    assert _rows(spark.read.parquet(str(data))) == _rows(second)
+
+
+def test_stream_micro_batches_after_the_first_compile_nothing(
+        spark, transcripts_df, tmp_path, codegen_compiles):
+    """The batch id never enters a micro-batch's plan, so once one batch has
+    run, later batches of the same query shape reuse its compiled code."""
+    from stream_job import run_stream
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+
+    def drain():
+        q = run_stream(spark, src, out, max_files_per_trigger=1,
+                       available_now=True)
+        q.awaitTermination(180)
+        assert q.exception() is None
+        return [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+
+    transcripts_df.coalesce(1).write.parquet(src)
+    assert drain() == [0]
+    transcripts_df.repartition(3).write.mode("append").parquet(src)
+    before = codegen_compiles()
+    assert drain() == [1, 2, 3]
+    assert codegen_compiles() - before == 0
 
 
 def test_empty_bucket_gets_no_metrics_row_and_resume_skips_it(
