@@ -124,9 +124,9 @@ METRICS_SCHEMA = pa.schema([
 METRICS_COLUMNS = tuple(METRICS_SCHEMA.names)
 
 # prefix of the hidden directories a commit stages its files in, under the
-# data path for a one-key data write and under the metrics path for the
-# markers: Spark's file listing skips names that start with "."
-STAGING_PREFIX = ".staging-"
+# metrics path for the markers and under the data path for a one-key data
+# write: Spark's file listing skips names that start with "."
+STAGING_PREFIX = ".markers-"
 
 
 # the most key values one commit observes: every row of its data write
@@ -211,7 +211,14 @@ def commit_by_key(df: DataFrame, key: str,
     else:
         exprs = []
         for i, k in enumerate(keys):
-            exprs += _observed(i, F.col(key) == k, profiled is None)
+            on = F.col(key) == k
+            exprs += [F.count_if(on).alias(f"turns{i}"),
+                      F.sum(F.when(on, F.col("n_spans"))).alias(f"spans{i}"),
+                      F.avg(F.when(on, F.col("strip_ratio")))
+                      .alias(f"ratio{i}")]
+            if profiled is None:
+                exprs.append(F.size(F.collect_set(F.when(on, F.col("conv_id"))))
+                             .alias(f"convs{i}"))
         seen = Observation()
         overwrite_partitions(df.observe(seen, *exprs), data_path, key)
         got = seen.get
@@ -239,20 +246,6 @@ def commit_by_key(df: DataFrame, key: str,
         _write_markers(df.sparkSession, metrics_path, key, rows)
 
 
-def _observed(i: int, on, convs: bool) -> list:
-    """The aggregates a commit observes for its ``i``-th key value, over the
-    rows where ``on`` holds (every row when ``on`` is None)."""
-    def of(c):
-        return F.col(c) if on is None else F.when(on, F.col(c))
-    exprs = [(F.count(F.lit(1)) if on is None else F.count_if(on))
-             .alias(f"turns{i}"),
-             F.sum(of("n_spans")).alias(f"spans{i}"),
-             F.avg(of("strip_ratio")).alias(f"ratio{i}")]
-    if convs:
-        exprs.append(F.size(F.collect_set(of("conv_id"))).alias(f"convs{i}"))
-    return exprs
-
-
 def _write_one_key(df: DataFrame, key: str, value: int, data_path: str,
                    convs: bool) -> dict:
     """Overwrite ``data_path/key=value/`` with ``df`` (all of whose rows
@@ -269,8 +262,13 @@ def _write_one_key(df: DataFrame, key: str, value: int, data_path: str,
     fs, jpath, root = _hadoop_fs(df.sparkSession, data_path)
     _clear_staging(fs, jpath, root)
     stage = jpath(root, f"{STAGING_PREFIX}{uuid.uuid4().hex}")
+    exprs = [F.count(F.lit(1)).alias("turns0"),
+             F.sum("n_spans").alias("spans0"),
+             F.avg("strip_ratio").alias("ratio0")]
+    if convs:
+        exprs.append(F.size(F.collect_set("conv_id")).alias("convs0"))
     seen = Observation()
-    (df.drop(key).observe(seen, *_observed(0, None, convs)).write
+    (df.drop(key).observe(seen, *exprs).write
      .mode("errorifexists")
      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
      .parquet(stage.toString()))

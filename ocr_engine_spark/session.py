@@ -1,30 +1,14 @@
 """Shared SparkSession construction for the jobs/ entry points.
 
 One place for the launch conventions all jobs share (AQE on, Arrow batch
-sizing, WARN logs, the codegen cache size), so a config fix cannot drift
-between entry points.  On a cluster the session comes from spark-submit and
-``cpus=0`` leaves master and sizing to the submit conf; ``cpus=N`` is the
-local[N] smoke-run path.
-
-``CODEGEN_CACHE_ENTRIES`` sizes Spark's cache of compiled whole-stage classes
-(``spark.sql.codegen.cache.maxEntries``, default 100, least recently used
-evicted).  One ``pipeline_full``-shaped run of ``jobs/pipeline_job.py``
-compiles about 199 distinct classes, so at 100 entries every run in a session
-evicted the previous run's classes and compiled them all again.  At 1000 a
-session keeps a whole run's classes: a long-lived driver, a test session or a
-benchmark's timed run after its warm-up compiles next to nothing on a repeat.
-A single ``spark-submit`` run gains only the reuse within the run (214
-compilations fell to 199).  The key is a static conf: it applies when this
-call creates the session, not to a session that already exists.
+sizing, WARN logs), so a config fix cannot drift between entry points.  On a
+cluster the session comes from spark-submit and ``cpus=0`` leaves master and
+sizing to the submit conf; ``cpus=N`` is the local[N] smoke-run path.
 """
 
 from __future__ import annotations
 
 import os
-
-# entries of Spark's compiled-class cache: a whole pipeline run's ~199 classes
-# with room to spare (see the module docstring)
-CODEGEN_CACHE_ENTRIES = 1000
 
 
 def build_session(app_name: str, cpus: int = 0,
@@ -53,8 +37,6 @@ def build_session(app_name: str, cpus: int = 0,
         )
     spark = (
         builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.codegen.cache.maxEntries",
-                str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # event-time semantics are timezone-dependent in two DIFFERENT ways:
         # timestamp literals/date_trunc follow the session timezone, while

@@ -24,15 +24,11 @@ def spark():
     """Shared local SparkSession for the Spark-layer tests (SURVEY.md §5.2)."""
     from pyspark.sql import SparkSession
 
-    from ocr_engine_spark.session import CODEGEN_CACHE_ENTRIES
-
     spark = (
         SparkSession.builder.master("local[4]")
         .appName("ocr-engine-spark-tests")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.codegen.cache.maxEntries",
-                str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -344,24 +344,3 @@ def test_pipeline_action_ledger(spark, corpus, tmp_path, monkeypatch):
     assert [(f.name, f.dataType.simpleString()) for f in schema] == [
         ("conv_id", "string"), ("doc_text", "string"), ("n_tokens", "bigint"),
         ("seq_id", "int"), ("seq_offset", "bigint"), ("shard", "string")]
-
-
-def test_repeated_pipeline_run_reuses_its_compiled_code(spark, corpus,
-                                                       tmp_path,
-                                                       codegen_compiles):
-    """The session's codegen cache holds a whole run's classes, so a second
-    run of the same shape (waved checkpoint, near-dedup, LM gate) compiles
-    next to nothing."""
-    df, _, _ = corpus
-    full = df.unionByName(truncated_reruns(df))
-
-    def compiles(name):
-        before = codegen_compiles()
-        run_pipeline(spark, full, str(tmp_path / name), run_id="t28",
-                     char_budget=100_000, seq_budget=256, shards=4,
-                     checkpoint_extraction=True, n_buckets=4,
-                     near_dedup=True, quality_filter=True, quality_ref_mod=3)
-        return codegen_compiles() - before
-
-    first = compiles("first")
-    assert compiles("second") <= 5, first
