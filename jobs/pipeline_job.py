@@ -31,7 +31,16 @@ the ``pipeline_e2e`` contract row), over a transcript table:
                                  contract row run as a pipeline stage.  Two
                                  distinct bigrams collide with probability
                                  about n^2/2^65 for n distinct bigrams)
-    -> pack_by_group            (greedy token packing into training sequences)
+    -> pack_by_group            (greedy token packing into training
+                                 sequences: one mapInArrow over the rows
+                                 hashed by shard and sorted by conv_id, its
+                                 fill state carried across Arrow batches)
+
+Every Python stage above (the kernel, the feature pass, the LM scorer and the
+packer) is a mapInArrow, so each holds one Arrow batch
+(spark.sql.execution.arrow.maxRecordsPerBatch rows) at a time, and none of
+the modules their closures load imports pandas (pyarrow 16 still loads it
+lazily, at its first conversion of Python or numpy data to Arrow).
 
 Cluster launch (the reference CLI lifecycle, /root/reference/run.py:24-45,
 extended to the pipeline the extracted text feeds):
@@ -232,7 +241,7 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
                 bc.destroy()
             n_lowq = lowq.count()
             surv = surv.join(lowq, "conv_id", "left_anti")
-        # packing carries conv_id + doc_text THROUGH the grouped map (no
+        # packing carries conv_id + doc_text THROUGH the Arrow map (no
         # numeric surrogate key, no join-back): conv_id is unique, so the
         # per-shard sort is a total order and the output is deterministic
         # under any partitioning — and a hash collision cannot fan out rows

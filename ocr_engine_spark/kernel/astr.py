@@ -18,14 +18,13 @@ Byte-equality with the scalar kernel is the non-negotiable contract, so:
 - every public helper is pinned against its pandas spelling by
   tests/test_astr.py (exhaustive single-codepoint sweeps + hypothesis fuzz).
 
-Helpers accept a pd.Series/ndarray/pa.Array of non-null strings and return
+Helpers accept an ndarray/list/pa.Array of non-null strings and return
 pa.Array (string results) or numpy (scalar results), so chains stay in Arrow.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -37,21 +36,20 @@ _LS = pa.large_string()
 
 
 def arr(x) -> pa.Array:
-    """To a utf8 Arrow array.  Python-side inputs (pd.Series / ndarray /
-    list) build large_string (64-bit offsets: Spark Arrow batches are
-    row-capped but payloads can be MBs, so 2 GiB int32 offsets are a real
-    limit when WE size the array).  An input that is ALREADY an Arrow utf8
-    array is returned as-is, whichever offset width it carries — by
-    construction it fit its own offsets, every helper here accepts both
-    flavors, and skipping the cast keeps the Arrow boundary zero-copy."""
+    """To a utf8 Arrow array.  Python-side inputs (ndarray, list, or
+    anything else ``pa.array`` takes, a pandas Series included) build
+    large_string (64-bit offsets: Spark Arrow batches are row-capped but
+    payloads can be MBs, so 2 GiB int32 offsets are a real limit when WE
+    size the array).  An input that is ALREADY an Arrow utf8 array is
+    returned as-is, whichever offset width it carries — by construction it
+    fit its own offsets, every helper here accepts both flavors, and
+    skipping the cast keeps the Arrow boundary zero-copy."""
     if isinstance(x, pa.ChunkedArray):
         x = x.combine_chunks()
     if isinstance(x, pa.Array):
         if pa.types.is_string(x.type) or pa.types.is_large_string(x.type):
             return x
         return x.cast(_LS)
-    if isinstance(x, pd.Series):
-        x = x.to_numpy()
     return pa.array(x, type=_LS)
 
 

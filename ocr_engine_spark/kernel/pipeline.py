@@ -23,7 +23,7 @@ import re
 import unicodedata
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from ocr_engine_spark.config import DEFAULT_CONFIG, EngineConfig
 from ocr_engine_spark.kernel.canonicalize import canonicalize, deskew
@@ -328,7 +328,7 @@ def _deskew_columns(canon):
 _KNOWN_KINDS = ("json", "html", "markdown", "plain")
 
 
-def _route_masks(desk: pd.Series, cfg: EngineConfig, declared=None):
+def _route_masks(desk: pa.Array, cfg: EngineConfig, declared=None):
     """Route every row to its format closed form with ONE pass per gate
     predicate (the four per-format masks each rescanned the whole batch with
     the same contains() calls — up to 4x duplicate C-level regex work on the
@@ -436,7 +436,7 @@ def _group_cumsum(flags: np.ndarray, row: np.ndarray) -> np.ndarray:
     return c - base
 
 
-def _token_min_conf(collapsed: pd.Series, nbad: np.ndarray) -> np.ndarray:
+def _token_min_conf(collapsed: pa.Array, nbad: np.ndarray) -> np.ndarray:
     """Per-line recognition confidence: min over tokens containing a non-texty
     char of their texty fraction; exactly 1.0 for clean lines
     (normalize.recognize_one's E10 min-aggregation).
@@ -920,7 +920,7 @@ def _json_outputs(desk, raw_len: np.ndarray, cfg: EngineConfig,
     return extracted, spans_out, n_spans, strip_ratio, json_wins
 
 
-def extract_frame(pdf: pd.DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> pd.DataFrame:
+def extract_frame(pdf, cfg: EngineConfig = DEFAULT_CONFIG):
     """pandas spelling of ``extract_frame_arrow``: one frame of turns in, one
     frame of extractions out, spans as per-row lists of dicts.  Total on the
     empty batch (F6).  For goldens, tests and tools; the Spark layer calls
@@ -929,9 +929,8 @@ def extract_frame(pdf: pd.DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> pd.D
     Rows whose text is not valid UTF-8 (lone surrogates from PEP 383
     surrogateescape decodes) cannot live in an Arrow utf8 array: they cross
     blanked and are then overwritten with the per-turn oracle on the
-    original text."""
-    import pyarrow as pa
-
+    original text.  The only function of the module that takes or returns
+    pandas objects; the module itself does not import pandas."""
     cols = ["conv_id", "turn_idx", "text"]
     if "payload_kind" in pdf.columns:
         cols.append("payload_kind")
@@ -975,8 +974,6 @@ def extract_frame_arrow(batch, cfg: EngineConfig = DEFAULT_CONFIG):
     spans column is assembled DIRECTLY as an Arrow list<struct> from the flat
     per-span arrays (no per-span Python dicts, no pandas object column), and
     conv_id/turn_idx pass through zero-copy from the input batch."""
-    import pyarrow as pa
-
     n = batch.num_rows
     # the input column IS the kernel's Arrow array: null-fill is the only
     # copy; no Arrow -> Python str -> Arrow round-trip of the corpus
@@ -1019,8 +1016,6 @@ def _extract_frame_impl(a_raw, declared, cfg: EngineConfig):
     aligned, typed Arrow arrays (what ``extract_frame_arrow`` and the SQL
     function ``ocr_extract`` emit), ``spans`` the row-sorted flat span tuple
     ``(rows, start, end, kind, conf, text)``."""
-    import pyarrow as pa
-
     n = len(a_raw)
     raw_len = astr.length(a_raw)
 

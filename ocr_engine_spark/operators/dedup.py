@@ -487,11 +487,12 @@ def duplicate_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     Spark shape for iterative graph algorithms without a graph library —
     shows whether any label changed.
     """
-    edges = (
-        pairs.select(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst"))
-        .union(pairs.select(F.col("doc_id_b").alias("src"),
-                            F.col("doc_id_a").alias("dst")))
-    ).localCheckpoint(eager=True)
+    # both directions from one row: a union of two selects would plan (and
+    # run) the whole pair computation twice
+    edges = pairs.select(F.inline(F.array(
+        F.struct(F.col("doc_id_a").alias("src"), F.col("doc_id_b").alias("dst")),
+        F.struct(F.col("doc_id_b").alias("src"), F.col("doc_id_a").alias("dst")),
+    ))).localCheckpoint(eager=True)
     labels = edges.groupBy("src").agg(
         F.least(F.col("src"), F.min("dst")).alias("cluster_id")
     ).withColumnRenamed("src", "doc_id")

@@ -511,13 +511,18 @@ def q_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``vec_id % BENCH_MOD == BENCH_RESIDUE`` slice; corpus = everything else
     PLUS a halved copy of each benchmark vector at ``vec_id + LEAK_OFFSET``
     (the _with_planted_twins construction), so the ``contaminated`` flag is
-    value-checked on true AND false rows."""
+    value-checked on true AND false rows.  An organic ``vec_id`` at or past
+    ``LEAK_OFFSET`` would share an id with a leak and merge the two in the
+    argmax, so the scan of the organic rows raises on one."""
     emb = _as_double(load(spark, sf_dir, "embeddings"))
     bench = emb.where(F.col("vec_id") % BENCH_MOD == BENCH_RESIDUE)
     leaks = bench.select(
         (F.col("vec_id") + LEAK_OFFSET).alias("vec_id"),
         F.expr("transform(embedding, x -> x * 0.5d)").alias("embedding"),
         "label")
-    corpus = (emb.where(F.col("vec_id") % BENCH_MOD != BENCH_RESIDUE)
-              .unionByName(leaks))
+    organic = emb.where(F.col("vec_id") % BENCH_MOD != BENCH_RESIDUE).where(
+        F.assert_true(F.col("vec_id") < LEAK_OFFSET,
+                      f"organic vec_id >= LEAK_OFFSET ({LEAK_OFFSET})")
+        .isNull())
+    corpus = organic.unionByName(leaks)
     return semantic_decontam(corpus, bench)

@@ -393,36 +393,24 @@ def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def greedy_pack_assignment(n_tokens, budget: int):
-    """The greedy fill itself: documents in the caller's order fill a
-    sequence until the next would overflow ``budget``; oversized documents
-    sit alone.  ``pack_by_group`` runs it once per group.  Returns parallel
-    (seq_ids, offsets) lists."""
-    seqs, offs = [], []
-    seq = fill = 0
-    for n in n_tokens:
-        if fill > 0 and fill + n > budget:
-            seq += 1
-            fill = 0
-        offs.append(fill)
-        seqs.append(seq)
-        fill += n
-    return seqs, offs
-
-
 def pack_by_group(df: DataFrame, group: str, order: str,
                   budget: int) -> DataFrame:
     """Greedy contiguous sequence packing per ``group``: the rows of ``df``
     (which carries ``n_tokens``) in ``order`` fill a sequence until the next
-    would overflow ``budget`` tokens.  Every column passes through, and
-    ``seq_id int`` and ``seq_offset bigint`` are appended.
+    would overflow ``budget`` tokens; an oversized row sits alone.  Every
+    column passes through, and ``seq_id int`` and ``seq_offset bigint`` are
+    appended.
 
     The fill is a SEQUENTIAL scan — not expressible with window functions —
-    so packing is a grouped map (``applyInPandas``): state stays per-group
-    and bounded, and with ``order`` unique per group the result is
-    deterministic under any partitioning.
+    so it runs as a ``mapInArrow`` over the rows hashed by ``group`` and
+    sorted by ``(group, order)`` within each partition.  A partition may
+    hold several groups and a group may span Arrow batches, so the fill
+    state carries across batches and resets at each group change; memory is
+    one Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``), not
+    one group.  With ``order`` unique per group the result is deterministic
+    under any partitioning.
     """
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     # a new list: StructType.add would mutate df's cached schema
@@ -430,15 +418,27 @@ def pack_by_group(df: DataFrame, group: str, order: str,
         StructField("seq_id", IntegerType()),
         StructField("seq_offset", LongType())])
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(batches):
         skip_zip_rereads()
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        seqs, offs = greedy_pack_assignment(pdf["n_tokens"], budget)
-        pdf["seq_id"] = pd.Series(seqs, dtype="int32")
-        pdf["seq_offset"] = pd.Series(offs, dtype="int64")
-        return pdf
+        key, seq, fill = object(), 0, 0
+        for b in batches:
+            seqs, offs = [], []
+            for k, n in zip(b.column(group).to_pylist(),
+                            b.column("n_tokens").to_pylist()):
+                if k != key:
+                    key, seq, fill = k, 0, 0
+                elif fill > 0 and fill + n > budget:
+                    seq, fill = seq + 1, 0
+                seqs.append(seq)
+                offs.append(fill)
+                fill += n
+            yield pa.RecordBatch.from_arrays(
+                [*b.columns, pa.array(seqs, pa.int32()),
+                 pa.array(offs, pa.int64())],
+                names=[*b.schema.names, "seq_id", "seq_offset"])
 
-    return df.groupBy(group).applyInPandas(pack, schema=schema)
+    return (df.repartition(group).sortWithinPartitions(group, order)
+            .mapInArrow(pack, schema))
 
 
 def pack_sequences(docs: DataFrame, budget: int = 512) -> DataFrame:

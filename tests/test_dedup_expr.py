@@ -226,7 +226,8 @@ def test_duplicate_clusters_checkpoints_edges_and_one_round(spark,
                                                             monkeypatch):
     """A clique and a star centred on its minimum converge in the seeded
     round: the components checkpoint the edges and the one merge round that
-    shows no label changed, nothing else."""
+    shows no label changed, nothing else.  The edges read the pairs once:
+    their plan has no Union of two copies of the pair computation."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from ocr_engine_spark.operators.dedup import duplicate_clusters
@@ -235,14 +236,17 @@ def test_duplicate_clusters_checkpoints_edges_and_one_round(spark,
     star = [(10, leaf) for leaf in range(11, 16)]
     pairs = spark.createDataFrame(pd.DataFrame(
         clique + star, columns=["doc_id_a", "doc_id_b"]))
-    calls = []
+    plans = []
     real = DataFrame.localCheckpoint
-    monkeypatch.setattr(DataFrame, "localCheckpoint",
-                        lambda self, *a, **k: calls.append(1)
-                        or real(self, *a, **k))
+    monkeypatch.setattr(
+        DataFrame, "localCheckpoint",
+        lambda self, *a, **k: plans.append(
+            self._jdf.queryExecution().executedPlan().toString())
+        or real(self, *a, **k))
     got = {r["doc_id"]: r["cluster_id"]
            for r in duplicate_clusters(pairs).collect()}
-    assert len(calls) == 2
+    assert len(plans) == 2
+    assert "Generate inline" in plans[0] and "Union" not in plans[0]
     assert got == {**{i: 1 for i in range(1, 5)},
                    **{i: 10 for i in range(10, 16)}}
 

@@ -148,6 +148,25 @@ def test_semantic_decontam_argmax_tiebreak(spark):
     assert row["contaminated"] == 1
 
 
+
+def test_semantic_decontam_rejects_organic_id_past_leak_offset(spark,
+                                                              tmp_path):
+    """An organic vec_id at LEAK_OFFSET + 1 would share its id with the leak
+    planted for benchmark item 1 and merge the two in the argmax: the scan
+    raises instead of returning merged rows."""
+    from ocr_engine_spark.operators.similarity import q_semantic_decontam
+
+    big = LEAK_OFFSET + 1
+    assert big % BENCH_MOD != BENCH_RESIDUE  # an organic row
+    spark.createDataFrame(
+        [(BENCH_RESIDUE, [1.0, 0.0], 0), (1, [0.0, 1.0], 0),
+         (big, [1.0, 1.0], 0)],
+        "vec_id long, embedding array<float>, label int",
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(Exception, match="LEAK_OFFSET"):
+        q_semantic_decontam(spark, str(tmp_path)).collect()
+
+
 # --- property-based: lm_quality vs a pure-Python oracle -------------------------
 
 from hypothesis import HealthCheck, given, settings, strategies as st  # noqa: E402

@@ -4,6 +4,7 @@ extraction -> budget truncation -> assembly -> conversation dedup -> packing
 the-extraction-checkpoint behavior."""
 
 import os
+import re
 
 import pytest
 
@@ -344,3 +345,74 @@ def test_pipeline_action_ledger(spark, corpus, tmp_path, monkeypatch):
     assert [(f.name, f.dataType.simpleString()) for f in schema] == [
         ("conv_id", "string"), ("doc_text", "string"), ("n_tokens", "bigint"),
         ("seq_id", "int"), ("seq_offset", "bigint"), ("shard", "string")]
+
+
+def test_job_closure_modules_do_not_import_pandas():
+    """The modules the jobs' Arrow closures load (the kernel, extraction,
+    the feature pass and the packer) import without pandas, so a fresh
+    Python worker does not pay for it at import."""
+    import subprocess
+    import sys
+
+    code = (
+        "import pkgutil, sys, importlib\n"
+        "import ocr_engine_spark.kernel as k\n"
+        "for m in pkgutil.iter_modules(k.__path__):\n"
+        "    importlib.import_module('ocr_engine_spark.kernel.' + m.name)\n"
+        "import ocr_engine_spark.operators.extract\n"
+        "import ocr_engine_spark.operators.doc_features\n"
+        "import ocr_engine_spark.operators.text_analysis\n"
+        "print('pandas' in sys.modules)\n")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo,
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "False"
+
+
+_PYTHON_NODE = re.compile(
+    r"\b(MapInArrow|MapInPandas|FlatMapGroupsInPandas|FlatMapGroupsInArrow|"
+    r"FlatMapCoGroupsInPandas|ArrowEvalPython|BatchEvalPython|"
+    r"AggregateInPandas|WindowInPandas)\b")
+
+
+def test_every_python_stage_is_an_arrow_map(spark, corpus, tmp_path,
+                                            monkeypatch):
+    """A run shaped like the benchmark's full pipeline (checkpointed
+    extraction, near-dedup, the quality gate) plans each of its Python
+    stages as a MapInArrow: the kernel on the wave write, the feature pass
+    and the LM scorer under the checkpointed drop sets, and the packer on
+    the pack write, which holds no grouped pandas map."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    df, _, _ = corpus
+    plans = {"parquet": [], "localCheckpoint": []}
+    for cls, name, frame in (
+            (DataFrame, "localCheckpoint", lambda self: self),
+            (DataFrameWriter, "parquet", lambda self: self._df)):
+        def planned(self, *a, _real=getattr(cls, name), _name=name,
+                    _frame=frame, **k):
+            plans[_name].append(str(
+                _frame(self)._jdf.queryExecution().executedPlan()))
+            return _real(self, *a, **k)
+        monkeypatch.setattr(cls, name, planned)
+    run_pipeline(spark, df.unionByName(truncated_reruns(df)),
+                 str(tmp_path / "plans"), run_id="t28",
+                 char_budget=100_000, seq_budget=256, shards=4,
+                 checkpoint_extraction=True, n_buckets=4,
+                 near_dedup=True, quality_filter=True, quality_ref_mod=3)
+    monkeypatch.undo()
+    text = "\n".join(plans["parquet"] + plans["localCheckpoint"])
+    assert set(_PYTHON_NODE.findall(text)) == {"MapInArrow"}
+    # one map per stage, told apart by its input columns
+    stages = {re.sub(r"#\d+L?", "", m) for m in
+              re.findall(r"MapInArrow (\S+\([^)]*\))", text)}
+    assert stages == {
+        "fn(conv_id, turn_idx, text, role, tool, ts, p)",
+        "<lambda>(doc_id, text, doc_len, is_ref)",
+        "<lambda>(doc_id, bg)",
+        "pack(conv_id, shard, doc_text, n_tokens)"}
+    pack = plans["parquet"][-1]
+    assert "MapInArrow pack(" in pack
+    assert "FlatMapGroupsInPandas" not in pack

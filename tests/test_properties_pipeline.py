@@ -217,3 +217,44 @@ def test_sequence_packing_matches_python_packer(spark, tmp_path):
     assert by_shard[0] == {(f"c{i:04d}", f"shard_{src[1]}", n, *got[i])
                            for i, t, src in docs
                            for n in [len(t.split(" "))]}
+
+
+def test_arrow_packer_carries_state_across_batches(spark):
+    """Two-row Arrow batches split every group across batches, and with more
+    groups than shuffle partitions several groups share a partition: each row
+    still gets the (seq_id, seq_offset) of the default-batch run and of a
+    reference packer."""
+    from ocr_engine_spark.operators.text_analysis import pack_by_group
+
+    rng = random.Random(5)
+    n_groups = 40
+    assert n_groups > int(spark.conf.get("spark.sql.shuffle.partitions"))
+    rows = [(f"c{i:04d}", f"g{rng.randrange(n_groups):02d}",
+             rng.choice([1, 7, 30, 64, 90])) for i in range(600)]
+    frame = spark.createDataFrame(rows, "conv_id string, shard string, "
+                                        "n_tokens bigint")
+
+    def packed():
+        return {r["conv_id"]: (r["seq_id"], r["seq_offset"])
+                for r in pack_by_group(frame, "shard", "conv_id", 64)
+                .collect()}
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = packed()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        small = packed()
+    finally:
+        spark.conf.set(key, old)
+    assert small == default
+
+    expected = {}
+    for g in {g for _, g, _ in rows}:
+        seq = fill = 0
+        for cid, _, n in sorted(r for r in rows if r[1] == g):
+            if fill > 0 and fill + n > 64:
+                seq, fill = seq + 1, 0
+            expected[cid] = (seq, fill)
+            fill += n
+    assert default == expected
